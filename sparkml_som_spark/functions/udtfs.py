@@ -15,7 +15,7 @@ from pyspark.sql.functions import udtf
 # UDTF boundary serialization — measured REJECTION (opt r16, guide
 # §4.3): ``udtf(..., useArrow=True)`` keeps eval() per-row but moves the
 # boundary to Arrow batches.  Order-alternated A/B at sf0.1 (6 reps,
-# tools/env_ab.py): udtf_ngram_counts pickle min 1.746 s vs Arrow
+# OPTIMIZATION_r16.md §C3): udtf_ngram_counts pickle min 1.746 s vs Arrow
 # 2.227 s (Arrow better 0/6 pairwise), udtf_chunk_documents 0.988 vs
 # 1.178 s (wash).  At one small (int, string) tuple per yield, the
 # per-row Arrow batch assembly costs more than pickle — both UDTFs stay

@@ -352,8 +352,8 @@ def gini_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # only re-runs the final aggregate above the groupBy exchange (the
     # shuffle files are reused across the sample and fill passes), which
     # is cheaper than the checkpoint barrier.  Order-alternated A/B at
-    # sf0.1, 8 reps: legacy min 1.172 s vs ckpt 1.222 s, ckpt better
-    # 2/8 pairwise (tools/env_ab.py).
+    # sf0.1, 8 reps: unpinned min 1.172 s vs ckpt 1.222 s, ckpt better
+    # 2/8 pairwise (OPTIMIZATION_r16.md §C3).
     held: list = []
     ranked = distributed_global_rank(rev, ["x", "o_custkey"], cleanup=held)
     i = F.col("rank") + 1  # 0-based distributed rank -> textbook 1-based i

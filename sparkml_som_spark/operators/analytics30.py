@@ -52,7 +52,7 @@ from sparkml_som_spark.sources import load_table
 # hyper-active key (an 8k-item basket) fans out C(256,2)=32,640 pairs
 # instead of C(8k,2)=32M in a single join task — measured 23.7 s -> 1.2 s
 # at hot=8k with the non-hot pair set bit-identical
-# (tools/pair_fanout_skew_probe.py, SCALE.md).  On the TPC-H inputs the
+# (SCALE.md, "Hot-group pair fan-out").  On the TPC-H inputs the
 # cap can never trigger (orders carry <= 7 items; only 25 p_brand
 # values exist), so the DuckDB oracles stay cap-free and the value-hash
 # gate itself certifies the guard changes nothing here.

@@ -30,8 +30,8 @@ bounded exactly like the production LSH it tunes; its exact-Jaccard
 truth uses the DF-capped inverted index (the same bound
 `dedup_ngram_jaccard` rides), and the liberal r=1 row of the grid is
 the one a production tune would additionally bucket-size-cap — noted
-in the docstring, measured in tools/pair_fanout_skew_probe.py's
-family.
+in the docstring, measured in SCALE.md's "Hot-group pair fan-out"
+section.
 """
 
 from __future__ import annotations
@@ -383,7 +383,7 @@ def lsh_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     identically in both engines, so the comparison is exact.  The
     liberal r=1 grid row buckets on a single min-hash; at production
     scale that config additionally needs a bucket-size cap (the
-    pair_fanout_skew_probe hazard) — the sweep exists precisely to show
+    SCALE.md "Hot-group pair fan-out" hazard) — the sweep exists precisely to show
     r=1 buys little recall over r=2 at tau={tau}.
 
     Scale: min-hashing is one groupBy over the shingle stream; banding

@@ -26,8 +26,6 @@ how a 100 TB feature store lays both out.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -160,38 +158,25 @@ def poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         for p in range(_BOOT_R // 2)
     ]
     hashed = orders.select(F.col("o_totalprice").cast("double").alias("x"), *hcols)
-    if os.environ.get("SPARK_GRAFT_BOOT_INLINE_DRAWS") == "1":
-        # pre-r16 form, kept for the A/B: the draw expression inlines
-        # into every CASE branch of its weight — 32 x 9 = 288 conv()
-        # calls in the projection (plans/r16/poisson_bootstrap_ci_before.txt)
-        wcols = []
-        for r in range(_BOOT_R):
-            p, half = divmod(r, 2)
-            draw = F.conv(
-                F.substring(F.col(f"h{p}"), 1 + 16 * half, 15), 16, 10
-            ).cast("long")
-            wcols.append(_poisson_w(draw).alias(f"w{r}"))
-        proj = hashed.select("x", *wcols)
-    else:
-        # opt r16: materialize the 32 draws in their OWN projection
-        # layer.  Each draw alias is referenced 9 times by its weight's
-        # threshold CASE chain, and CollapseProject keeps non-cheap
-        # multi-referenced aliases un-inlined (the same rule the h{p}
-        # layer already relies on), so the hex->long conv() runs 32
-        # times per row instead of 288 — same integer comparisons,
-        # bit-identical weights.
-        dcols = []
-        for r in range(_BOOT_R):
-            p, half = divmod(r, 2)
-            dcols.append(
-                F.conv(F.substring(F.col(f"h{p}"), 1 + 16 * half, 15), 16, 10)
-                .cast("long")
-                .alias(f"d{r}")
-            )
-        drawn = hashed.select("x", *dcols)
-        proj = drawn.select(
-            "x", *[_poisson_w(F.col(f"d{r}")).alias(f"w{r}") for r in range(_BOOT_R)]
+    # opt r16: materialize the 32 draws in their OWN projection layer.
+    # Each draw alias is referenced 9 times by its weight's threshold
+    # CASE chain, and CollapseProject keeps non-cheap multi-referenced
+    # aliases un-inlined (the same rule the h{p} layer already relies
+    # on), so the hex->long conv() runs 32 times per row instead of 288
+    # (plans/r16/poisson_bootstrap_ci_before.txt) — same integer
+    # comparisons, bit-identical weights.
+    dcols = []
+    for r in range(_BOOT_R):
+        p, half = divmod(r, 2)
+        dcols.append(
+            F.conv(F.substring(F.col(f"h{p}"), 1 + 16 * half, 15), 16, 10)
+            .cast("long")
+            .alias(f"d{r}")
         )
+    drawn = hashed.select("x", *dcols)
+    proj = drawn.select(
+        "x", *[_poisson_w(F.col(f"d{r}")).alias(f"w{r}") for r in range(_BOOT_R)]
+    )
     row = proj.agg(
         F.avg("x").alias("pm"),
         F.count(F.lit(1)).alias("n"),

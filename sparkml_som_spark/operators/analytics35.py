@@ -668,7 +668,8 @@ _SADM_CELL = "CAST(floor(({e} + 0.6) * 8) AS INT)"
 # _SADM_STATE_CAP ids stand in for the cell's full admitted state (the
 # `_PAIR_CAP` discipline, analytics30.py).  Per-cell probe pairs are
 # bounded at batch_cell_rows x CAP regardless of corpus skew; a one-cell
-# corpus no longer cliffs (tools/admission_skew_probe.py, SCALE.md).
+# corpus no longer cliffs (SCALE.md, "Hot-cell probe for the streaming
+# admission guard").
 # Like the reservoir, the capped state is merge-invariant — bottom-k by
 # pure row hash satisfies min-k(A u B) = min-k(min-k(A) u B) — so the
 # incremental Spark maintenance equals the oracle's per-epoch batch
@@ -787,8 +788,8 @@ def stream_dedup_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFram
     bounded at batch_cell_rows x _SADM_STATE_CAP pairs per cell — a
     hot cell can no longer own the batch's work (the r11 probe
     measured a 35x pair / 5.8x wall cliff on a one-cell corpus against
-    UNCAPPED state; with the cap the pair volume is flat —
-    tools/admission_skew_probe.py, SCALE.md).  Probe + reservoir state
+    UNCAPPED state; with the cap the pair volume is flat — SCALE.md,
+    "Hot-cell probe for the streaming admission guard").  Probe + reservoir state
     are CAP x cells and K x cells rows in queryable parquet (never
     unbounded stream state); per-batch cost tracks the batch, not the
     corpus."""
@@ -850,116 +851,98 @@ def stream_dedup_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFram
 
     def admit(batch_df, batch_id):
         sp = batch_df.sparkSession
-        if os.environ.get("SPARK_GRAFT_STREAM_R15_LEGACY") == "1":
-            epochs = [
-                r["epoch"]
-                for r in batch_df.select("epoch").distinct().orderBy("epoch").collect()
-            ]
-            groups = [batch_df.where(F.col("epoch") == e).drop("epoch") for e in epochs]
-        else:
-            # One epoch per micro-batch by construction (one file per epoch,
-            # maxFilesPerTrigger=1, AvailableNow honors the cap) — the
-            # per-batch epoch distinct-collect was a pure orchestration job
-            # (see stream_minhash_dedup_guard) and is dropped.  The
-            # coupling is assertable: SPARK_GRAFT_STREAM_EPOCH_GUARD=1
-            # re-enables the check (one extra job per batch — debug only,
-            # ADVICE r15 #2) so a future source/trigger change cannot
-            # silently merge epochs into one admission group.
-            if os.environ.get("SPARK_GRAFT_STREAM_EPOCH_GUARD") == "1":
-                n_ep = batch_df.select("epoch").distinct().count()
-                if n_ep > 1:
-                    raise AssertionError(
-                        f"batch {batch_id} carries {n_ep} epochs; the "
-                        "one-file-per-epoch + maxFilesPerTrigger=1 "
-                        "contract is broken"
-                    )
-            groups = [batch_df.drop("epoch")]
-        for grp in groups:
-            if os.path.isdir(probe_dir):
-                # probe against the CAPPED per-cell state, never the full
-                # admitted corpus: pairs per cell are bounded at
-                # batch_cell_rows x _SADM_STATE_CAP at any skew
-                state = sp.read.parquet(probe_dir)
-                rejected = (
-                    grp.alias("x")
-                    .join(
-                        state.alias("s"),
-                        (F.col("x.cx") == F.col("s.cx"))
-                        & (F.col("x.cy") == F.col("s.cy")),
-                    )
-                    .where(cosine(F.col("s.v"), F.col("x.v")) >= _SADM_TAU)
-                    .select(F.col("x.vec_id").alias("vec_id"))
-                    .distinct()
+        # One epoch per micro-batch by construction (one file per epoch,
+        # maxFilesPerTrigger=1, AvailableNow honors the cap) — a per-batch
+        # epoch distinct-collect would be a pure orchestration job (see
+        # stream_minhash_dedup_guard).  The coupling is assertable:
+        # SPARK_GRAFT_STREAM_EPOCH_GUARD=1 enables the check (one extra
+        # job per batch — debug only, ADVICE r15 #2) so a future
+        # source/trigger change cannot silently merge epochs into one
+        # admission group.
+        if os.environ.get("SPARK_GRAFT_STREAM_EPOCH_GUARD") == "1":
+            n_ep = batch_df.select("epoch").distinct().count()
+            if n_ep > 1:
+                raise AssertionError(
+                    f"batch {batch_id} carries {n_ep} epochs; the "
+                    "one-file-per-epoch + maxFilesPerTrigger=1 "
+                    "contract is broken"
                 )
-                admitted = grp.join(rejected, "vec_id", "left_anti")
-            else:
-                admitted = grp
-            # r16 measured REJECTIONS (VERDICT r15 ask #2, order-
-            # alternated A/B at sf0.1, 6 reps each): (1) no-checkpoint
-            # full fusion (one job/epoch, union-tagged partitionBy
-            # write, AQE exchange reuse carrying the duplicated
-            # admitted subtree) — pairwise worse 5/6, min 5.21 vs 5.11;
-            # (2) checkpoint kept + the two state writes fused into one
-            # partitionBy("kind") job — pairwise worse 5/6, steady
-            # 6.2-6.5 vs 5.0-5.5 s.  Unlike the guard (whose two
-            # appends are both trivial block scans and DID fuse to a
-            # win), this entry's probe write is a real window-shuffle
-            # job that overlaps the trivial corpus append better as a
-            # concurrent driver thread than serialized behind one
-            # dynamic-partition writer.  The r15 path stays.
-            admitted = admitted.localCheckpoint(eager=True)
-            # probe-state merge: per-cell hash-bottom-CAP of (old capped
-            # state + batch admissions) — merge-invariant, so it equals
-            # the oracle's batch recompute over all prior admissions;
-            # bounded at CAP x cells rows.  The reservoir needs no
-            # per-epoch maintenance of its own: K <= CAP under the SAME
-            # order key means bottom-K(admitted) == bottom-K(probe
-            # state) at any point, so the reservoir is DERIVED from the
-            # probe state after the stream drains (one window instead
-            # of two per epoch; `label` rides along for the output).
-            ppool = admitted.select("vec_id", "label", "v", "cx", "cy")
-            if os.path.isdir(probe_dir):
-                ppool = ppool.unionByName(sp.read.parquet(probe_dir))
-            new_probe = hash_bottom_k(ppool, ("cx", "cy"), _SADM_STATE_CAP)
-            probe_tmp = probe_dir + "_tmp"
+        grp = batch_df.drop("epoch")
+        if os.path.isdir(probe_dir):
+            # probe against the CAPPED per-cell state, never the full
+            # admitted corpus: pairs per cell are bounded at
+            # batch_cell_rows x _SADM_STATE_CAP at any skew
+            state = sp.read.parquet(probe_dir)
+            rejected = (
+                grp.alias("x")
+                .join(
+                    state.alias("s"),
+                    (F.col("x.cx") == F.col("s.cx"))
+                    & (F.col("x.cy") == F.col("s.cy")),
+                )
+                .where(cosine(F.col("s.v"), F.col("x.v")) >= _SADM_TAU)
+                .select(F.col("x.vec_id").alias("vec_id"))
+                .distinct()
+            )
+            admitted = grp.join(rejected, "vec_id", "left_anti")
+        else:
+            admitted = grp
+        # r16 measured REJECTIONS (VERDICT r15 ask #2, order-alternated
+        # A/B at sf0.1, 6 reps each; OPTIMIZATION_r16.md §3): (1) no-
+        # checkpoint full fusion (one job/epoch, union-tagged partitionBy
+        # write, AQE exchange reuse carrying the duplicated admitted
+        # subtree) — pairwise worse 5/6, min 5.21 vs 5.11; (2) checkpoint
+        # kept + the two state writes fused into one partitionBy("kind")
+        # job — pairwise worse 5/6, steady 6.2-6.5 vs 5.0-5.5 s.  Unlike
+        # the guard (whose two appends are both trivial block scans and
+        # DID fuse to a win), this entry's probe write is a real
+        # window-shuffle job that overlaps the trivial corpus append
+        # better as a concurrent driver thread than serialized behind one
+        # dynamic-partition writer.
+        admitted = admitted.localCheckpoint(eager=True)
+        # probe-state merge: per-cell hash-bottom-CAP of (old capped
+        # state + batch admissions) — merge-invariant, so it equals the
+        # oracle's batch recompute over all prior admissions; bounded at
+        # CAP x cells rows.  The reservoir needs no per-epoch maintenance
+        # of its own: K <= CAP under the SAME order key means
+        # bottom-K(admitted) == bottom-K(probe state) at any point, so
+        # the reservoir is DERIVED from the probe state after the stream
+        # drains (one window instead of two per epoch; `label` rides
+        # along for the output).
+        ppool = admitted.select("vec_id", "label", "v", "cx", "cy")
+        if os.path.isdir(probe_dir):
+            ppool = ppool.unionByName(sp.read.parquet(probe_dir))
+        new_probe = hash_bottom_k(ppool, ("cx", "cy"), _SADM_STATE_CAP)
+        probe_tmp = probe_dir + "_tmp"
 
-            def _append_admitted(admitted=admitted):
-                admitted.write.mode("append").parquet(admitted_dir)
+        def _append_admitted():
+            admitted.write.mode("append").parquet(admitted_dir)
 
-            def _write_probe(new_probe=new_probe):
-                # write the merged state to a sibling tmp dir and swap
-                # below: the plan reads the OLD probe_dir while the write
-                # targets a different one, so the eager checkpoint that
-                # existed only to break the read-then-overwrite cycle is
-                # gone — one fewer job + materialization per epoch
-                shutil.rmtree(probe_tmp, ignore_errors=True)
-                new_probe.write.mode("overwrite").parquet(probe_tmp)
+        def _write_probe():
+            # write the merged state to a sibling tmp dir and swap below:
+            # the plan reads the OLD probe_dir while the write targets a
+            # different one, so no eager checkpoint is needed to break a
+            # read-then-overwrite cycle
+            shutil.rmtree(probe_tmp, ignore_errors=True)
+            new_probe.write.mode("overwrite").parquet(probe_tmp)
 
-            if os.environ.get("SPARK_GRAFT_STREAM_R15_LEGACY") == "1":
-                _append_admitted()
-                new_probe = new_probe.localCheckpoint(eager=True)
-                new_probe.write.mode("overwrite").parquet(probe_dir)
-            else:
-                # the corpus append and the probe-state merge are
-                # independent once `admitted` is materialized — run them
-                # as two concurrent driver jobs (guide §2.6)
-                from concurrent.futures import ThreadPoolExecutor
+        # the corpus append and the probe-state merge are independent
+        # once `admitted` is materialized — run them as two concurrent
+        # driver jobs (guide §2.6)
+        from concurrent.futures import ThreadPoolExecutor
 
-                with ThreadPoolExecutor(max_workers=2) as pool:
-                    futs = [
-                        pool.submit(_append_admitted),
-                        pool.submit(_write_probe),
-                    ]
-                    for f in futs:
-                        f.result()
-                # rename the old state aside before promotion (ADVICE
-                # r15 #3: never leave a window with probe_dir absent)
-                probe_old = probe_dir + "_old"
-                shutil.rmtree(probe_old, ignore_errors=True)
-                if os.path.isdir(probe_dir):
-                    os.rename(probe_dir, probe_old)
-                os.rename(probe_tmp, probe_dir)
-                shutil.rmtree(probe_old, ignore_errors=True)
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            futs = [pool.submit(_append_admitted), pool.submit(_write_probe)]
+            for f in futs:
+                f.result()
+        # rename the old state aside before promotion (ADVICE r15 #3:
+        # never leave a window with probe_dir absent)
+        probe_old = probe_dir + "_old"
+        shutil.rmtree(probe_old, ignore_errors=True)
+        if os.path.isdir(probe_dir):
+            os.rename(probe_dir, probe_old)
+        os.rename(probe_tmp, probe_dir)
+        shutil.rmtree(probe_old, ignore_errors=True)
 
     q = stream.writeStream.foreachBatch(admit).trigger(availableNow=True).start()
     try:

@@ -73,8 +73,6 @@ def histogram_equidepth_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the oracle's assignment, followed by a bounded k-row aggregate.
     The tiebreaker (orderkey, linenumber) makes the order total, so
     ranks — and therefore bucket populations — are engine-exact."""
-    import os
-
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_extendedprice", "l_orderkey", "l_linenumber"
     )
@@ -83,10 +81,10 @@ def histogram_equidepth_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = distributed_global_rank(
         li, ["l_extendedprice", "l_orderkey", "l_linenumber"], cleanup=held, total_out=total
     )
-    # N from the rank helper's own partition counts — the old separate
-    # li.count() job re-derived a number the helper had already summed
-    # (opt r16, guide §1.2); legacy path kept for the A/B record
-    n = li.count() if os.environ.get("SPARK_GRAFT_RANK_LEGACY") == "1" else total[0]
+    # N from the rank helper's own partition counts — a separate
+    # li.count() job would re-derive a number the helper already summed
+    # (opt r16, guide §1.2)
+    n = total[0]
     out = (
         ranked.select(
             F.expr(f"(rank * {_EQD_BUCKETS}) DIV {n}").alias("bucket"),

@@ -92,7 +92,12 @@ def distributed_global_rank(
     replaced, no separate materialization job runs: the count pass both
     fills the cache and produces the per-partition counts in one job
     (boundary stability is covered by
-    ``test_distributed_global_rank_matches_window``)."""
+    ``test_distributed_global_rank_matches_window``).
+
+    ``total_out``, when given, receives the exact row count EAGERLY,
+    during this call: the count pass above is a collect, so callers may
+    read ``total_out[0]`` as soon as the function returns (pinned by
+    ``test_rank_total_out_matches_count``)."""
     from pyspark import StorageLevel
 
     spark = df.sparkSession
@@ -548,8 +553,8 @@ def pipeline_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-runs only the sort+window above the fingerprint exchange (the
     # shuffle files are reused across sample and fill), which costs about
     # what the checkpoint barrier does.  Order-alternated A/B at sf0.1,
-    # 8 reps: legacy min 1.597 s vs ckpt 1.606 s, 4/8 pairwise
-    # (tools/env_ab.py).  Left un-pinned: same speed, simpler plan,
+    # 8 reps: unpinned min 1.597 s vs ckpt 1.606 s, 4/8 pairwise
+    # (OPTIMIZATION_r16.md §C3).  Left un-pinned: same speed, simpler plan,
     # no executor-resident blocks.
     held: list = []
     ranked = distributed_global_rank(

@@ -557,25 +557,18 @@ def curriculum_phases(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded per-partition counts (one long per partition — no extra
     corpus pass).  id_checksum pins exact phase membership."""
     from sparkml_som_spark.operators.corpus_ops3 import distributed_global_rank
+    from sparkml_som_spark.operators.registry import materialize_reused
     from sparkml_som_spark.operators.text import quality_scored
-
-    import os
 
     docs = load_table(spark, sf_dir, "documents", spread=True)
     q = quality_scored(docs).select("doc_id", "quality")
     held: list = []
-    legacy = os.environ.get("SPARK_GRAFT_RANK_LEGACY") == "1"
-    if not legacy:
-        # opt r16 (guide §2.4): quality_scored tokenizes every doc, and
-        # this narrow (doc_id, quality) projection used to be re-run
-        # THREE times — the range-partitioner's sample pass, the rank
-        # shuffle's fill pass, and the one-row cnt aggregate below.
-        # Pinning it (one row per doc) makes tokenization a single pass;
-        # N then comes from the rank helper's own partition counts
-        # instead of the third pass.  Same doubles, same floor cut.
-        from sparkml_som_spark.operators.registry import materialize_reused
-
-        q = materialize_reused(q)
+    # opt r16 (guide §2.4): quality_scored tokenizes every doc, and the
+    # rank reads this narrow (doc_id, quality) projection twice — the
+    # range-partitioner's sample pass and the rank shuffle's fill pass.
+    # Pinning it (one row per doc) makes tokenization a single pass; N
+    # comes from the rank helper's own partition counts, not a third.
+    q = materialize_reused(q)
     total: list = []
     ranked = distributed_global_rank(
         q,
@@ -584,14 +577,8 @@ def curriculum_phases(spark: SparkSession, sf_dir: str) -> DataFrame:
         cleanup=held,
         total_out=total,
     )
-    if legacy:
-        cnt = q.agg(F.count(F.lit(1)).alias("cnt"))
-        ranked = ranked.crossJoin(F.broadcast(cnt))
-        n_col = F.col("cnt")
-    else:
-        n_col = F.lit(total[0])
     phase = F.floor(
-        F.col("rank") * _CURRICULUM_PHASES * 1.0 / n_col
+        F.col("rank") * _CURRICULUM_PHASES * 1.0 / F.lit(total[0])
     ).alias("phase")
     out = (
         ranked.groupBy(phase)

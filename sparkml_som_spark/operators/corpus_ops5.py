@@ -148,8 +148,6 @@ def _learn_bpe(spark: SparkSession, sf_dir: str):
         "i -> struct(element_at(s, i) AS l, element_at(s, i + 1) AS r)) "
         "ELSE array() END"
     )
-    import os
-
     # opt r16 (guide §1.2 driver overhead): the merge loop runs 8
     # sequential argmax queries over the CACHED word-type table.  Under
     # AQE each of those tiny aggregates splits into 2-3 query-stage
@@ -160,12 +158,11 @@ def _learn_bpe(spark: SparkSession, sf_dir: str):
     # SAME persisted vocab every round), so the loop runs with AQE off
     # and one job per round; the corpus-sized words0 pass materializes
     # inside round 0's job with the exchange already sized by
-    # spark.sql.shuffle.partitions.  Conf restored in the caller's
-    # finally.  SPARK_GRAFT_BPE_LEGACY=1 restores the AQE-on loop (A/B).
-    legacy = os.environ.get("SPARK_GRAFT_BPE_LEGACY") == "1"
+    # spark.sql.shuffle.partitions.  The conf is restored in this
+    # function's own finally.  The toggle is session-global: the loop
+    # assumes no other query is planned on this session meanwhile.
     aqe_prev = spark.conf.get("spark.sql.adaptive.enabled")
-    if not legacy:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         for k in range(_BPE_MERGES):
             words = words.persist()
@@ -510,52 +507,37 @@ def quality_bigram_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("b"),
     )
-    import os
-
-    if os.environ.get("SPARK_GRAFT_BIGRAM_LEGACY") == "1":
-        vocab = bg.groupBy("b").agg(F.count(F.lit(1)).alias("c"))
-        doc_score = (
-            bg.join(F.broadcast(vocab), "b")
-            .groupBy("doc_id", "source")
-            .agg(
-                (F.sum("c").cast("long") / F.count(F.lit(1)).cast("long")).alias("score")
-            )
+    # opt r16 (guide §2.3/§2.4): both the vocab aggregate and the scoring
+    # join need the char-bigram explode.  Pre-aggregating per-(doc,
+    # bigram) counts and pinning them runs the explode ONCE; vocab and
+    # the per-doc score then derive from the pinned counts.  Exact-integer
+    # identity: SUM(c) over occurrences == SUM(cnt * c) over distinct
+    # pairs, COUNT(*) == SUM(cnt), so the one IEEE division is unchanged.
+    dbc = materialize_reused(
+        bg.groupBy("doc_id", "source", "b").agg(F.count(F.lit(1)).alias("cnt"))
+    )
+    vocab = dbc.groupBy("b").agg(F.sum("cnt").alias("c"))
+    doc_score = (
+        dbc.join(F.broadcast(vocab), "b")
+        .groupBy("doc_id", "source")
+        .agg(
+            (F.sum(F.col("cnt") * F.col("c")).cast("long") / F.sum("cnt").cast("long")).alias("score")
         )
-    else:
-        # opt r16 (guide §2.3/§2.4): the char-bigram explode used to run
-        # twice — once into the vocab aggregate, once into the scoring
-        # join.  Pre-aggregating per-(doc, bigram) counts and pinning
-        # them runs the explode ONCE; vocab and the per-doc score then
-        # derive from the pinned counts.  Exact-integer identity:
-        # SUM(c) over occurrences == SUM(cnt * c) over distinct pairs,
-        # COUNT(*) == SUM(cnt), so the one IEEE division is unchanged.
-        dbc = materialize_reused(
-            bg.groupBy("doc_id", "source", "b").agg(F.count(F.lit(1)).alias("cnt"))
-        )
-        vocab = dbc.groupBy("b").agg(F.sum("cnt").alias("c"))
-        doc_score = (
-            dbc.join(F.broadcast(vocab), "b")
-            .groupBy("doc_id", "source")
-            .agg(
-                (F.sum(F.col("cnt") * F.col("c")).cast("long") / F.sum("cnt").cast("long")).alias("score")
-            )
-        )
+    )
 
     handles: list = []
-    legacy = os.environ.get("SPARK_GRAFT_RANK_LEGACY") == "1"
-    if not legacy:
-        # opt r16 (guide §2.4/§1.2): (1) pin the per-doc scores (one
-        # narrow row per doc) so the range-partitioner's sample pass
-        # re-reads 20k rows instead of re-running the score aggregate,
-        # and (2) take N from the rank helper's own partition counts —
-        # the old `ranked.count()` was a SECOND full mapInPandas pass
-        # whose only output was a number the helper had already summed
-        doc_score = materialize_reused(doc_score)
+    # opt r16 (guide §2.4/§1.2): (1) pin the per-doc scores (one narrow
+    # row per doc) so the range-partitioner's sample pass re-reads 20k
+    # rows instead of re-running the score aggregate, and (2) take N from
+    # the rank helper's own partition counts — a `ranked.count()` would
+    # be a SECOND full mapInPandas pass whose only output is a number
+    # the helper has already summed
+    doc_score = materialize_reused(doc_score)
     total: list = []
     ranked = distributed_global_rank(
         doc_score, ["score", "doc_id"], cleanup=handles, total_out=total
     )
-    n = ranked.count() if legacy else total[0]
+    n = total[0]
     cut = n // 10
     out = (
         ranked.groupBy("source")

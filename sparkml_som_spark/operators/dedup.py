@@ -444,15 +444,9 @@ def substring_match_pairs(
         .select("g")
     )
     fg = grams.join(df_ok, "g")
-    # r15 measured FLAT at sf0.1 (runtime exchange reuse covers the two
-    # self-join sides); VERDICT r15 ask #8 says re-test at ~10x where the
-    # recompute-vs-barrier trade may flip — env-gated so the scale probe
-    # can A/B it without a code fork.  Default off (the measured local
-    # winner).
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_SUBSTR_CKPT") == "1":
-        fg = materialize_reused(fg)
+    # fg is NOT pinned: runtime exchange reuse covers the two self-join
+    # sides, and pinning it measured flat at sf0.1 (OPTIMIZATION_r15.md)
+    # and slower at 10x (SCALE.md, "Substring-kernel checkpoint re-test")
     return (
         fg.select(F.col("doc_id").alias("a_id"), F.col("pos").alias("i"), "g")
         .join(

@@ -673,8 +673,8 @@ def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     the IVF/LSH entries carrying the exact-recall guards.
 
     Scale shape (round 8): the per-query top-k is computed as PARTIAL
-    top-k inside each Arrow batch of the scan (the
-    `tools/pq_scan_probe.py` shape), then merged over batches x k rows
+    top-k inside each Arrow batch of the scan (the shape of SCALE.md's
+    "PQ scan probe"), then merged over batches x k rows
     — there is NO corpus-sized `Window.partitionBy(query_id)` sort:
     the scan emits one small row per (batch, query) and the global
     merge touches only partials, so the plan survives a corpus 100x
@@ -710,7 +710,7 @@ def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def scan(batches):
-        # per-batch partial top-k (the pq_scan_probe shape): each Arrow
+        # per-batch partial top-k (SCALE.md "PQ scan probe"): each Arrow
         # batch scores all rows against all queries, keeps its own k
         # smallest (adc, vec_id) per query, and emits ONE small row per
         # (batch, query) — never a row per (corpus row, query)

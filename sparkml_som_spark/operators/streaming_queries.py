@@ -10,7 +10,7 @@ query result.  Every entry carries a FULL value-hash oracle (the
 each streaming query's oracle is the ANSI-SQL batch twin with
 identical window/dedup semantics, so DuckDB verifies the drained sink
 contents bit-for-bit, per SURVEY.md §5's batch-twin strategy
-(`LOCAL_GATE_r14.json`: `n_rows_only: 0`).
+(`LOCAL_GATE_r16.json`: `n_rows_only: 0`).
 
 At scale the same topology runs unchanged against a Kafka/file
 firehose: the watermark bounds window/dedup state, AvailableNow becomes
@@ -931,175 +931,115 @@ def stream_minhash_dedup_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def guard(batch_df, batch_id):
         sp = batch_df.sparkSession
-        fused = (
-            os.environ.get("SPARK_GRAFT_STREAM_R15_LEGACY") != "1"
-            and os.environ.get("SPARK_GRAFT_STREAM_R16_PREV") != "1"
-        )
-        if os.environ.get("SPARK_GRAFT_STREAM_R15_LEGACY") == "1":
-            epochs = [r["epoch"] for r in batch_df.select("epoch").distinct().orderBy("epoch").collect()]
-            groups = [
-                batch_df.where(F.col("epoch") == e).select("doc_id", "source", "text")
-                for e in epochs
-            ]
-        else:
-            # Each micro-batch is exactly ONE epoch: the source dir is built
-            # above with one file per epoch and maxFilesPerTrigger=1, which
-            # Trigger.AvailableNow honors (4 files -> 4 single-file batches
-            # in pinned-mtime order).  The per-batch epoch distinct-collect
-            # was therefore a pure orchestration job — the r15 drain
-            # decomposition measured it at ~+0.25 s over a no-op drain —
-            # and is dropped; the whole batch is one epoch group.  The
-            # coupling is assertable: SPARK_GRAFT_STREAM_EPOCH_GUARD=1
-            # re-enables the check (one extra job per batch — debug
-            # only, ADVICE r15 #2) so a future source/trigger change
-            # cannot silently merge epochs into one admission group.
-            if os.environ.get("SPARK_GRAFT_STREAM_EPOCH_GUARD") == "1":
-                n_ep = batch_df.select("epoch").distinct().count()
-                if n_ep > 1:
-                    raise AssertionError(
-                        f"batch {batch_id} carries {n_ep} epochs; the "
-                        "one-file-per-epoch + maxFilesPerTrigger=1 "
-                        "contract is broken"
-                    )
-            groups = [batch_df.select("doc_id", "source", "text")]
-        for grp in groups:
-            # band the batch ONCE; the same rows serve the probe join
-            # and (filtered to admissions) the index append — the
-            # admitted corpus is never re-shingled.
-            #
-            # r16 fused path: NO checkpoint at all — the whole epoch is
-            # ONE job (see the fused write below), and within that one
-            # plan bb's aggregate exchange and rejected's distinct
-            # exchange are each reused at runtime by AQE (the r15
-            # measured rule: identical exchanges ARE runtime-reused),
-            # so the only duplicated work is a re-scan of the one-file
-            # batch above those exchanges.
-            #
-            # r15 path (SPARK_GRAFT_STREAM_R16_PREV=1): LAZY checkpoint —
-            # banding materializes inside the admitted-checkpoint job.
-            # Checkpoint, NOT plain persist: the r15 appends write to
-            # directories this batch's plan READS (admitted_dir /
-            # band_dir), so lineage must be truncated before the first
-            # append — a cache-evicted persist would recompute through a
-            # scan that now includes the batch's own appended files.
-            bb = minhash_band_buckets(grp).localCheckpoint(eager=False)
-            rejected = None
-            if os.path.isdir(band_dir):
-                # explicit selects: the fused path's state files carry
-                # the union schema (null band/sig on admitted rows and
-                # vice versa), the r15/legacy paths the narrow one —
-                # narrowing here serves both and keeps the union aligned
-                adm = sp.read.parquet(admitted_dir).select("doc_id", "source", "text")
-                idx = sp.read.parquet(band_dir).select("doc_id", "band", "sig")
-                cand = (
-                    bb.alias("x")
-                    .join(
-                        idx.alias("y"),
-                        (F.col("x.band") == F.col("y.band"))
-                        & (F.col("x.sig") == F.col("y.sig")),
-                    )
-                    .select(
-                        F.col("y.doc_id").alias("a_id"),
-                        F.col("x.doc_id").alias("b_id"),
-                    )
-                    .distinct()
+        # Each micro-batch is exactly ONE epoch: the source dir is built
+        # above with one file per epoch and maxFilesPerTrigger=1, which
+        # Trigger.AvailableNow honors (4 files -> 4 single-file batches
+        # in pinned-mtime order).  A per-batch epoch distinct-collect
+        # would be a pure orchestration job — the r15 drain decomposition
+        # measured it at ~+0.25 s over a no-op drain — so the whole batch
+        # is one epoch group.  The coupling is assertable:
+        # SPARK_GRAFT_STREAM_EPOCH_GUARD=1 enables the check (one extra
+        # job per batch — debug only, ADVICE r15 #2) so a future
+        # source/trigger change cannot silently merge epochs into one
+        # admission group.
+        if os.environ.get("SPARK_GRAFT_STREAM_EPOCH_GUARD") == "1":
+            n_ep = batch_df.select("epoch").distinct().count()
+            if n_ep > 1:
+                raise AssertionError(
+                    f"batch {batch_id} carries {n_ep} epochs; the "
+                    "one-file-per-epoch + maxFilesPerTrigger=1 "
+                    "contract is broken"
                 )
-                # shingle ONLY docs that appear in a candidate pair
-                ids = (
-                    cand.select(F.col("a_id").alias("doc_id"))
-                    .unionByName(cand.select(F.col("b_id").alias("doc_id")))
-                    .distinct()
+        grp = batch_df.select("doc_id", "source", "text")
+        # band the batch ONCE; the same rows serve the probe join and
+        # (filtered to admissions) the index append — the admitted corpus
+        # is never re-shingled.  LAZY local checkpoint: banding
+        # materializes inside the first job that reads bb (the admitted
+        # checkpoint below in probe epochs, the fused write in epoch 0)
+        # and the later job reads the pinned blocks.  Within each job,
+        # bb's aggregate exchange and rejected's distinct exchange are
+        # reused at runtime by AQE (the r15 measured rule: identical
+        # exchanges ARE runtime-reused).
+        bb = minhash_band_buckets(grp).localCheckpoint(eager=False)
+        rejected = None
+        if os.path.isdir(band_dir):
+            # explicit selects: the state files carry the union schema
+            # (null band/sig on admitted rows and vice versa); narrowing
+            # here keeps the union below aligned
+            adm = sp.read.parquet(admitted_dir).select("doc_id", "source", "text")
+            idx = sp.read.parquet(band_dir).select("doc_id", "band", "sig")
+            cand = (
+                bb.alias("x")
+                .join(
+                    idx.alias("y"),
+                    (F.col("x.band") == F.col("y.band"))
+                    & (F.col("x.sig") == F.col("y.sig")),
                 )
-                pool = grp.unionByName(adm).join(ids, "doc_id", "semi")
-                hits = exact_jaccard_verify(pool, cand)
-                rejected = hits.select(F.col("b_id").alias("doc_id")).distinct()
-            admitted = (
-                grp.join(rejected, "doc_id", "left_anti") if rejected is not None else grp
+                .select(
+                    F.col("y.doc_id").alias("a_id"),
+                    F.col("x.doc_id").alias("b_id"),
+                )
+                .distinct()
             )
-            # r16 (VERDICT r15 ask #2): fuse the TWO state appends into
-            # ONE job — a union of the admitted rows and their band
-            # rows, tagged with a `kind` column, written
-            # partitionBy("kind") to a FRESH tmp dir and promoted into
-            # the two live state dirs by driver-side renames (~ms, no
-            # job).  The admitted eager checkpoint STAYS: a no-
-            # checkpoint full fusion (everything in one job, leaning on
-            # AQE runtime exchange reuse for the duplicated admitted
-            # subtree) was MEASURED SLOWER — guard min 13.8 s vs 10.5 s
-            # for the r15 path over 6 order-alternated reps at sf0.1 —
-            # so only the write side is fused (3 -> 2 jobs/epoch).
-            # A crash between the renames can strand a partially-
-            # promoted epoch — acceptable because every oracle/bench
-            # run starts from a clean scratch dir (the ADVICE r15 #3
-            # trade, documented).
-            admitted = admitted.localCheckpoint(eager=True)
-            if fused:
-                out = admitted.select(
-                    "doc_id",
-                    "source",
-                    "text",
-                    F.lit(None).cast("int").alias("band"),
-                    F.lit(None).cast("bigint").alias("sig"),
-                    F.lit("adm").alias("kind"),
-                ).unionByName(
-                    bb.join(admitted.select("doc_id"), "doc_id", "semi").select(
-                        "doc_id",
-                        F.lit(None).cast("string").alias("source"),
-                        F.lit(None).cast("string").alias("text"),
-                        "band",
-                        "sig",
-                        F.lit("band").alias("kind"),
+            # shingle ONLY docs that appear in a candidate pair
+            ids = (
+                cand.select(F.col("a_id").alias("doc_id"))
+                .unionByName(cand.select(F.col("b_id").alias("doc_id")))
+                .distinct()
+            )
+            pool = grp.unionByName(adm).join(ids, "doc_id", "semi")
+            hits = exact_jaccard_verify(pool, cand)
+            rejected = hits.select(F.col("b_id").alias("doc_id")).distinct()
+        admitted = (
+            grp.join(rejected, "doc_id", "left_anti") if rejected is not None else grp
+        )
+        # r16 (VERDICT r15 ask #2): the TWO state appends are ONE job — a
+        # union of the admitted rows and their band rows, tagged with a
+        # `kind` column, written partitionBy("kind") to a FRESH tmp dir
+        # and promoted into the two live state dirs by driver-side
+        # renames (~ms, no job).  The admitted eager checkpoint STAYS: a
+        # no-checkpoint full fusion (everything in one job, leaning on
+        # AQE runtime exchange reuse for the duplicated admitted subtree)
+        # was MEASURED SLOWER — guard min 13.8 s vs 10.5 s with the
+        # checkpoint kept, 6 order-alternated reps at sf0.1
+        # (OPTIMIZATION_r16.md §3) — so only the write side is fused
+        # (3 -> 2 jobs/epoch).  A crash between
+        # the renames can strand a partially-promoted epoch — acceptable
+        # because every oracle/bench run starts from a clean scratch dir
+        # (the ADVICE r15 #3 trade, documented).
+        admitted = admitted.localCheckpoint(eager=True)
+        out = admitted.select(
+            "doc_id",
+            "source",
+            "text",
+            F.lit(None).cast("int").alias("band"),
+            F.lit(None).cast("bigint").alias("sig"),
+            F.lit("adm").alias("kind"),
+        ).unionByName(
+            bb.join(admitted.select("doc_id"), "doc_id", "semi").select(
+                "doc_id",
+                F.lit(None).cast("string").alias("source"),
+                F.lit(None).cast("string").alias("text"),
+                "band",
+                "sig",
+                F.lit("band").alias("kind"),
+            )
+        )
+        tmp = os.path.join(_SCRATCH, key, "guard_fused_tmp")
+        shutil.rmtree(tmp, ignore_errors=True)
+        out.write.mode("overwrite").partitionBy("kind").parquet(tmp)
+        for kind, dst in (("adm", admitted_dir), ("band", band_dir)):
+            kdir = os.path.join(tmp, f"kind={kind}")
+            if not os.path.isdir(kdir):
+                continue  # empty partition: nothing admitted
+            os.makedirs(dst, exist_ok=True)
+            for i, fname in enumerate(sorted(os.listdir(kdir))):
+                if fname.endswith(".parquet"):
+                    os.rename(
+                        os.path.join(kdir, fname),
+                        os.path.join(dst, f"b{batch_id}_{i}.parquet"),
                     )
-                )
-                tmp = os.path.join(_SCRATCH, key, "guard_fused_tmp")
-                shutil.rmtree(tmp, ignore_errors=True)
-                out.write.mode("overwrite").partitionBy("kind").parquet(tmp)
-                for kind, dst in (("adm", admitted_dir), ("band", band_dir)):
-                    kdir = os.path.join(tmp, f"kind={kind}")
-                    if not os.path.isdir(kdir):
-                        continue  # empty partition: nothing admitted
-                    os.makedirs(dst, exist_ok=True)
-                    for i, fname in enumerate(sorted(os.listdir(kdir))):
-                        if fname.endswith(".parquet"):
-                            os.rename(
-                                os.path.join(kdir, fname),
-                                os.path.join(dst, f"b{batch_id}_{i}.parquet"),
-                            )
-                shutil.rmtree(tmp, ignore_errors=True)
-                continue
-            # r15 path below.  (For it the eager checkpoint above is
-            # MANDATORY, not just a compute-dedup: its writes append to
-            # admitted_dir, which admitted's own plan reads — lineage
-            # must be truncated before the first append.)
-
-            def _append_admitted(admitted=admitted):
-                admitted.write.mode("append").parquet(admitted_dir)
-
-            def _append_band(admitted=admitted, bb=bb):
-                bb.join(admitted.select("doc_id"), "doc_id", "semi").write.mode(
-                    "append"
-                ).parquet(band_dir)
-
-            if os.environ.get("SPARK_GRAFT_STREAM_R15_LEGACY") == "1":
-                _append_admitted()
-                _append_band()
-            else:
-                # Both state appends read only materialized blocks (the
-                # admitted checkpoint; bb's lazy checkpoint, forced by the
-                # eager job above in probe epochs and by whichever append
-                # touches it first in epoch 0), so they are independent
-                # jobs — submit them from two driver threads (guide §2.6)
-                # so the second append's scheduling does not wait for the
-                # first's tail.  Job descriptions are thread-local, so the
-                # batch stays correctly labelled.
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(max_workers=2) as pool:
-                    futs = [
-                        pool.submit(_append_admitted),
-                        pool.submit(_append_band),
-                    ]
-                    for f in futs:
-                        f.result()
+        shutil.rmtree(tmp, ignore_errors=True)
 
     q = stream.writeStream.foreachBatch(guard).trigger(availableNow=True).start()
     try:

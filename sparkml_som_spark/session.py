@@ -55,40 +55,7 @@ def get_spark(
             "spark.sql.files.maxPartitionBytes",
             os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", str(128 * 1024 * 1024)),
         )
-        # shuffle/spill/broadcast codec (guide §2.3): parameterized for the
-        # r15 A/B (tools/codec_ab.py) and for production tuning; the local
-        # default stays Spark's lz4 — at bench SF the measured shuffle
-        # volumes are single-digit MB/entry, so zstd's ratio cannot repay
-        # its CPU (numbers in OPTIMIZATION_r15.md §3)
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"),
-        )
-        # AQE runtime SMJ->SHJ rewrite threshold (guide §3.1): 0 = off
-        # (Spark default).  Parameterized so tools/shj_ab.py and a real
-        # cluster can set it; any nonzero value is partition-size-gated by
-        # AQE itself, so it stays scale-adaptive rather than local[32]-tuned
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_LOCALMAP_THRESHOLD", "0"),
-        )
-        # sort-merge vs shuffled-hash preference (guide §3.1): measured in
-        # r15 (tools/shj_ab.py) and deliberately left at Spark's default.
-        # A first fixed-order ABAB read "-4.7% aggregate" for
-        # preferSortMergeJoin=false over 18 join-heavy entries — but a
-        # plan-identity sweep showed only FOUR of 303 registry entries
-        # actually change plan under the flag (the other "wins" were a
-        # monotone in-session warming trend favoring the later-run
-        # variant), and the order-alternating re-measure on those four
-        # read: dedup_span_coverage +5% WORSE under SHJ (pairwise worse
-        # in 6/6 reps), mixture_resample_apply / semdedup_grid_cosine /
-        # stream_som_inference flat.  At these join sizes the dropped
-        # sorts do not pay for the hash-table builds.  Parameterized for
-        # cluster-side tuning where the trade can reverse.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "true"),
-        )
+        # codec, SMJ preference, SHJ threshold: Spark defaults (OPTIMIZATION_r15.md §3/§3a)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
@@ -99,8 +66,9 @@ def get_spark(
             ),
         )
     )
-    # opt-in event log (tools/codec_ab.py): task-level shuffle byte metrics
-    # are only readable from the event log with the UI disabled
+    # opt-in event log (perfbench/, tools/parse_eventlog.py): task-level
+    # shuffle byte metrics are only readable from the event log with the
+    # UI disabled
     _elog = os.environ.get("SPARK_GRAFT_EVENTLOG_DIR")
     if _elog:
         os.makedirs(_elog, exist_ok=True)  # Spark requires the dir to exist

@@ -12,8 +12,6 @@ keeps state stores from growing with 100 TB of history.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -194,8 +192,7 @@ def interval_join_stream_bucketed(
     join key in one state-store partition and scans them per matching
     input row, so a user owning ~90% of both sides makes per-key work
     QUADRATIC in that user's in-watermark rows.  The round-8 probe
-    (tools/stream_join_skew_probe.py, SCALE.md "stream-stream join
-    skew") measured the cliff at 12x on 60k hot rows/side — and this
+    (SCALE.md, "Skew probe: stream-stream join state") measured the cliff at 12x on 60k hot rows/side — and this
     exact fold flat at 10x hot volume.  At 100 TB firehose scale with
     power-law users, this form IS the runnable topology.
 
@@ -230,24 +227,6 @@ def interval_join_stream_bucketed(
         "click_id",
         (F.unix_timestamp("c_ts") - F.unix_timestamp("s_ts")).alias("secs_after"),
     ]
-    if os.environ.get("SPARK_GRAFT_STREAM_R15_LEGACY") == "1":
-        # r1-r14 shape: union of two symmetric-hash joins (probe bucket
-        # b, then b+1) — each join buffers BOTH streams in its own state
-        # stores, so clicks are buffered twice and every micro-batch
-        # pays two joins' worth of state-store opens/commits
-        j_same = s.join(
-            c,
-            (F.col("c_user") == F.col("user_id"))
-            & (F.col("c_bucket") == F.col("s_bucket"))
-            & cond_time,
-        ).select(*cols)
-        j_next = s.join(
-            c,
-            (F.col("c_user") == F.col("user_id"))
-            & (F.col("c_bucket") == F.col("s_bucket") + 1)
-            & cond_time,
-        ).select(*cols)
-        return j_same.unionByName(j_next)
     # ONE symmetric-hash join over an exploded probe-bucket column: a
     # signup in bucket b probes {b, b+1} as two state rows of the SAME
     # join instead of two separate joins.  Set-equivalent (c_bucket
@@ -256,7 +235,7 @@ def interval_join_stream_bucketed(
     # per-(user, bucket) state scan bound that is the entry's point is
     # unchanged, clicks are buffered ONCE instead of twice, and each
     # micro-batch pays one join's state-store machinery instead of two
-    # (r15: guard 5.6 s entry, measured in tools/stream_ab.py).
+    # (r15: 4.23 -> 2.24 s, OPTIMIZATION_r15.md §2).
     sx = s.withColumn(
         "probe_bucket",
         F.explode(F.array(F.col("s_bucket"), F.col("s_bucket") + F.lit(1))),

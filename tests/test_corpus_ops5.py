@@ -5,6 +5,8 @@ streaming guard's admission bookkeeping."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -181,6 +183,15 @@ def test_stream_guard_admissions_monotone(spark, registry):
     assert rows[0]["n_rejected"] == 0
     for r in rows:
         assert r["n_admitted"] + r["n_rejected"] == r["n_docs"]
+
+
+def test_epoch_guard_passes_on_shipped_source(spark, registry):
+    os.environ["SPARK_GRAFT_STREAM_EPOCH_GUARD"] = "1"
+    try:
+        rows = registry["stream_minhash_dedup_guard"].fn(spark, SF).collect()
+        assert len(rows) == 4  # guard ran, no AssertionError, 4 epochs
+    finally:
+        os.environ.pop("SPARK_GRAFT_STREAM_EPOCH_GUARD", None)
 
 
 def test_bpe_apply_consistent_with_merges(spark, registry):

@@ -2,6 +2,9 @@
 tools/check_oracle.py at sf0.01; these tests assert structural
 invariants + spot values so pytest stays quick."""
 
+import os
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -313,13 +316,57 @@ def test_every_registry_entry_is_documented(registry):
     """COVERAGE.md is the judge-facing map from SURVEY §2 components to
     registry entries; an entry registered without a COVERAGE row is
     invisible coverage and a doc-drift bug.  Keep the map total."""
-    import os
-
-    import re
-
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     cov = open(os.path.join(repo, "COVERAGE.md")).read()
     # word-boundary match, not substring: `source_python_datasource`
     # must not be satisfied by `source_python_datasource_writer`'s row
     missing = [n for n in registry if not re.search(rf"\b{re.escape(n)}\b", cov)]
     assert not missing, f"registry entries absent from COVERAGE.md: {missing}"
+
+
+def _rows(spark, registry, name):
+    return sorted(repr(tuple(r)) for r in registry[name].fn(spark, SF).collect())
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "tfidf_top_terms",  # dual-keyed aggregate reuse site (relational3)
+        "dsir_importance_weights",  # broadcast + aggregate dual consumer
+        "dedup_incremental_components",  # iterative loop w/ truncation sites
+    ],
+)
+def test_ckpt_mode_result_invariant(spark, registry, name):
+    os.environ.pop("SPARK_GRAFT_CKPT_MODE", None)
+    base = _rows(spark, registry, name)
+    try:
+        for mode in ("persist", "reliable"):
+            os.environ["SPARK_GRAFT_CKPT_MODE"] = mode
+            assert _rows(spark, registry, name) == base, mode
+    finally:
+        os.environ.pop("SPARK_GRAFT_CKPT_MODE", None)
+
+
+def test_engine_env_knobs_allowlist():
+    """The engine reads exactly these SPARK_GRAFT_* variables.  A new
+    name here means a new hidden code path: ship one behaviour and
+    record any A/B in the docs instead of behind an env flag."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = os.path.join(repo, "sparkml_som_spark")
+    names = set()
+    for root, _dirs, files in os.walk(pkg):
+        for f in files:
+            if f.endswith(".py"):
+                src = open(os.path.join(root, f)).read()
+                names |= set(re.findall(r"SPARK_GRAFT_([A-Z0-9_]+)", src))
+    assert names == {
+        "CPUS",
+        "SHUFFLE",
+        "MAX_PARTITION_BYTES",
+        "DRIVER_MEM",
+        "WAREHOUSE",
+        "EVENTLOG_DIR",
+        "CKPT_MODE",
+        "CKPT_DIR",
+        "STREAM_EPOCH_GUARD",
+    }

@@ -1,8 +1,7 @@
 """Compute the driver-gate rotation plan for the next round.
 
 The driver's correctness gate samples the FIRST 50 registry entries
-(`_PRIORITY` in operators/registry.py).  Rotation rule (see the comment
-block above `_PRIORITY`): a slot may rotate out after being hash-green
+(`_PRIORITY` in operators/registry.py).  Rotation rule: a slot may rotate out after being hash-green
 BOTH of the last two driver rounds; incoming entries are drawn from the
 never-driver-sampled backlog, must be oracle-verified first
 (tools/check_oracle.py), and entries whose query/oracle changed in the
