@@ -55,10 +55,10 @@ def main() -> None:
         _warm_udf()(F.col("id").cast("double"))
     ).count()
 
-    # ... and the RDD-serialization/codegen path the SOM fit exercises
-    # (takeSample, mapPartitions block collect, pandas_udf transform):
-    # a 2x2 fit on 256 rows outside the timed region keeps first-query
-    # JIT out of the flagship's measurement
+    # ... and the paths the SOM fit exercises (sizing aggregate, toArrow
+    # collect, pandas_udf transform): a 2x2 fit on 256 rows outside the
+    # timed region keeps first-query JIT out of the flagship's
+    # measurement
     from sparkml_som_spark.som import SOM as _SOM
 
     _wdf = spark.range(256).selectExpr(
@@ -144,9 +144,10 @@ def main() -> None:
     # the price of numbers a round-over-round diff can trust.
     #
     # Round-8 refinement (the r7 "Python-worker regression" diagnosis,
-    # PERF_DIAG_r08.md): a query's first run AFTER ~65+ other registry
-    # queries deterministically re-pays a ~1-2 s JVM re-warm (measured:
-    # 0.85 s steady -> 2.3 s de-warmed for source_python_datasource;
+    # `git show 8747789:PERF_DIAG_r08.md`): a query's first run AFTER
+    # ~65+ other registry queries deterministically re-pays a ~1-2 s
+    # JVM re-warm (measured: 0.85 s steady -> 2.3 s de-warmed for
+    # source_python_datasource;
     # reproducible, survives forced GC and a 1 GiB code cache, gone on
     # the immediately-following run — JIT re-profiling of the Python-
     # runner/Arrow paths, not noise, not query code).  Suite-separated
@@ -284,8 +285,8 @@ def main() -> None:
         "udf_sec": min(canary_pre["udf_sec"], canary_post["udf_sec"]),
     }
     # VERDICT r14 ask #3: per-LEG canary attribution.  The r14 finding
-    # (PERF_DIAG_r14.md §3b): on this host the jvm-codegen and
-    # pandas_udf canary legs move INDEPENDENTLY — a session's max-of-
+    # (`git show 8747789:PERF_DIAG_r14.md` §3b): on this host the
+    # jvm-codegen and pandas_udf canary legs move INDEPENDENTLY — a session's max-of-
     # legs ratio can read >=1.3x while the leg that dominates a given
     # query's profile sits at 1.0x.  Tag every bench entry with its
     # dominant leg so mood attribution uses the MATCHING leg per query:
@@ -395,7 +396,7 @@ def main() -> None:
         "value_common_vs_r01": value_common,
         # fixed synthetic workloads timed before/after the suite: the
         # session's host-speed reference for attributing per-query
-        # drift (see PERF_DIAG_r10.md)
+        # drift (see `git show 8747789:PERF_DIAG_r10.md`)
         "host_canary": {
             "pre": canary_pre,
             "post": canary_post,

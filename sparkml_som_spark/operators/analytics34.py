@@ -111,15 +111,18 @@ def som_grouped_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sparkml_som_spark.som import SOM
 
     # opt r16: NO spread for the CV/grid fits.  The 32-way round-robin
-    # of a ~2000-row table multiplied every python-RDD job inside the
-    # fit (seeded takeSample, block collect) by 32 tasks while the
-    # per-iteration math runs on the driver's local fast path anyway —
-    # measured 3.4 s -> 1.7 s per fold fit at sf0.1.  The fitted model
-    # changes with the layout (the documented takeSample contract), but
-    # this entry's declared output pins layout-robust counts and
-    # structural booleans only.  At production scale a multi-file
-    # layout arrives pre-spread and the distributed path parallelizes
-    # by itself.
+    # of a ~2000-row table multiplied every job inside the fit by 32
+    # tasks while the per-iteration math runs on the driver's local
+    # fast path anyway — measured 3.4 s -> 1.7 s per fold fit at sf0.1,
+    # when those jobs were python-RDD ones (seeded takeSample, block
+    # collect); the local path now runs a sizing aggregate and one
+    # toArrow collect instead.  The fitted model changes with the
+    # layout (the seeded init draw replays takeSample over the
+    # partitions), but this entry's declared output pins layout-robust
+    # counts and structural booleans only
+    # (tests/test_analytics34.py::test_som_cv_grid_outputs_layout_robust).
+    # At production scale a multi-file layout arrives pre-spread and
+    # the distributed path parallelizes by itself.
     emb = load_table(spark, sf_dir, "embeddings")
     fold = (
         F.conv(F.substring(F.md5(F.col("label").cast("string")), 1, 15), 16, 10)
@@ -172,15 +175,18 @@ def som_grouped_cv_scores(spark: SparkSession, sf_dir: str) -> list[tuple]:
     from sparkml_som_spark.som import SOM
 
     # opt r16: NO spread for the CV/grid fits.  The 32-way round-robin
-    # of a ~2000-row table multiplied every python-RDD job inside the
-    # fit (seeded takeSample, block collect) by 32 tasks while the
-    # per-iteration math runs on the driver's local fast path anyway —
-    # measured 3.4 s -> 1.7 s per fold fit at sf0.1.  The fitted model
-    # changes with the layout (the documented takeSample contract), but
-    # this entry's declared output pins layout-robust counts and
-    # structural booleans only.  At production scale a multi-file
-    # layout arrives pre-spread and the distributed path parallelizes
-    # by itself.
+    # of a ~2000-row table multiplied every job inside the fit by 32
+    # tasks while the per-iteration math runs on the driver's local
+    # fast path anyway — measured 3.4 s -> 1.7 s per fold fit at sf0.1,
+    # when those jobs were python-RDD ones (seeded takeSample, block
+    # collect); the local path now runs a sizing aggregate and one
+    # toArrow collect instead.  The fitted model changes with the
+    # layout (the seeded init draw replays takeSample over the
+    # partitions), but this entry's declared output pins layout-robust
+    # counts and structural booleans only
+    # (tests/test_analytics34.py::test_som_cv_grid_outputs_layout_robust).
+    # At production scale a multi-file layout arrives pre-spread and
+    # the distributed path parallelizes by itself.
     emb = load_table(spark, sf_dir, "embeddings")
     fold = (
         F.conv(F.substring(F.md5(F.col("label").cast("string")), 1, 15), 16, 10)

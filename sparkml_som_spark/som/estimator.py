@@ -3,11 +3,14 @@
 Re-expresses the reference training loop (`SOM.scala:79-267`) in
 Spark-first terms:
 
-- The features column is decoded from Arrow ONCE into per-partition
-  NumPy blocks, persisted MEMORY_AND_DISK; each training iteration is
-  pure GEMM over those cached blocks (replacing the per-row
+- The features column is decoded ONCE and each training iteration is
+  pure GEMM over the decoded blocks (replacing the per-row
   `findClosest` at `SOM.scala:306-326` with one batched
-  `|x|^2+|c|^2-2xC^T` argmin per block),
+  `|x|^2+|c|^2-2xC^T` argmin per block).  A dense projection small
+  enough for the driver crosses to it in one Arrow pass (`toArrow`)
+  and trains there, its init rows drawn locally; the distributed and
+  sparse paths decode through RDD `mapPartitions` blocks persisted
+  MEMORY_AND_DISK and draw the init with RDD `takeSample`,
 - partial aggregation runs per partition (the reference's
   mapPartitions combiner, `SOM.scala:192-209`) and combines via
   ``treeAggregate`` (depth 2) — the bounded-key `reduceByKey` analog
@@ -28,10 +31,14 @@ height*width*d*8 bytes (a 20x20 map on 1024-d embeddings is ~3 MB).
 from __future__ import annotations
 
 import os
+import random
+import sys
+import time
 
 import numpy as np
 import pandas as pd
-from pyspark import keyword_only
+import pyarrow.compute as pc
+from pyspark import RDD, keyword_only
 from pyspark.ml import Estimator, Model
 from pyspark.ml.functions import vector_to_array
 from pyspark.ml.util import (
@@ -43,6 +50,7 @@ from pyspark.ml.util import (
     MLWritable,
     MLWriter,
 )
+from pyspark.rddsampler import RDDSampler
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -74,6 +82,55 @@ def _features_as_array(df: DataFrame, col: str) -> DataFrame:
 def _batch_matrix(series: pd.Series) -> np.ndarray:
     """pandas Series of array<double> -> (n, d) float64 C-contiguous."""
     return np.asarray(np.stack(series.to_numpy()), dtype=np.float64)
+
+
+def _collect_dense(feats: DataFrame) -> tuple[np.ndarray, list[tuple[int, int, int]]]:
+    """The dense projection in ONE Arrow pass: the (n, d) float64 matrix
+    in the order `feats.rdd` iterates (partition, then row), and the
+    (partition id, start, end) row range of every non-empty partition.
+    Null elements become NaN, as `np.asarray` made them; ragged rows
+    raise ValueError, as `np.asarray` did."""
+    tbl = feats.select(F.spark_partition_id().alias("pid"), "__features").toArrow()
+    pid = tbl.column("pid").to_numpy()
+    if np.any(np.diff(pid) < 0):
+        raise RuntimeError("toArrow returned partitions out of order")
+    col = tbl.column("__features")
+    lengths = pc.list_value_length(col).to_numpy()
+    dim = int(lengths[0]) if lengths.size else 0
+    if np.any(lengths != dim):
+        raise ValueError(
+            f"feature rows differ in length ({int(lengths.min())} to {int(lengths.max())})"
+        )
+    x = pc.list_flatten(col).to_numpy(zero_copy_only=False).reshape(len(pid), dim)
+    starts = np.flatnonzero(np.diff(pid, prepend=-1))
+    ends = np.append(starts[1:], len(pid))
+    ranges = [(int(pid[a]), int(a), int(b)) for a, b in zip(starts, ends)]
+    return x, ranges
+
+
+def _take_sample_rows(
+    ranges: list[tuple[int, int, int]], n_rows: int, num: int, seed: int
+) -> np.ndarray:
+    """Row indices that `RDD.takeSample(True, num, seed)` returns over
+    partitions holding the given row ranges, drawn on the driver with
+    PySpark's own algorithm: the same sample fraction, the same
+    per-partition `RDDSampler` streams (seeded by ``seed ^ partition``),
+    the same reseed loop and final shuffle."""
+    rand = random.Random(seed)
+    fraction = RDD._computeFractionForSampleSize(num, n_rows, True)
+
+    def draw(s: int) -> list[int]:
+        sampler = RDDSampler(True, fraction, s)
+        rows: list[int] = []
+        for split, lo, hi in ranges:
+            rows.extend(sampler.func(split, iter(range(lo, hi))))
+        return rows
+
+    samples = draw(seed)
+    while len(samples) < num:
+        samples = draw(rand.randint(0, sys.maxsize))
+    rand.shuffle(samples)
+    return np.asarray(samples[:num], dtype=np.int64)
 
 
 def _sparse_rows_df(df: DataFrame, col: str) -> DataFrame:
@@ -282,7 +339,8 @@ class SOM(Estimator, SOMParams, DefaultParamsWritable, DefaultParamsReadable):
         model) depends on the input's partition layout as well as the
         seed — identical seed + identical partitioning => identical
         model; repartitioning changes the draw. Pin `setInitialModel`
-        for layout-independent reproducibility."""
+        for layout-independent reproducibility.  The dense local fit
+        draws the same rows on the driver (`_take_sample_rows`)."""
         n_cells = self.getHeight() * self.getWidth()
         seed = self.getOrDefault(self.seed)
         if sparse_dim is not None:
@@ -298,6 +356,7 @@ class SOM(Estimator, SOMParams, DefaultParamsWritable, DefaultParamsReadable):
         return np.asarray(sample, dtype=np.float64)
 
     def _fit(self, dataset: DataFrame) -> "SOMModel":
+        t0 = time.perf_counter()
         self._validate()
         spark = dataset.sparkSession
         sc = spark.sparkContext
@@ -329,16 +388,18 @@ class SOM(Estimator, SOMParams, DefaultParamsWritable, DefaultParamsReadable):
         # Persist the narrow feature projection unconditionally (the
         # reference's "iff caller didn't" guard, SOM.scala:82,88-90,
         # checked the input dataset — but fit makes several passes over
-        # the *projection* (count, seeded takeSample, block build), and
-        # each pass re-decodes rows unless feats itself is cached).
+        # the *projection* (sizing aggregate, then the Arrow collect, or
+        # the seeded takeSample and block build), and each pass re-decodes
+        # rows unless feats itself is cached; the cache also pins the
+        # partition layout the seeded draw depends on).
         feats.persist(StorageLevel.MEMORY_AND_DISK)
 
-        # Decode each partition to ONE NumPy block (dense ndarray or CSR
-        # tuple): per-iteration work is then pure GEMM / bincount over
-        # those cached blocks with no Arrow/pickle decode in the loop
-        # (the "treeAggregate on NumPy blocks" variant from SURVEY.md §3
-        # — DataFrame mapInPandas paid ~2x per-iteration overhead
-        # re-decoding the same rows).
+        # Sparse and distributed paths decode each partition to ONE NumPy
+        # block (dense ndarray or CSR tuple): per-iteration work is then
+        # pure GEMM / bincount over those cached blocks with no
+        # Arrow/pickle decode in the loop (the "treeAggregate on NumPy
+        # blocks" variant from SURVEY.md §3 — DataFrame mapInPandas paid
+        # ~2x per-iteration overhead re-decoding the same rows).
         if use_sparse:
             def _to_block(rows, _d=sparse_dim):
                 yield from _to_sparse_block(rows, _d)
@@ -348,34 +409,9 @@ class SOM(Estimator, SOMParams, DefaultParamsWritable, DefaultParamsReadable):
                 if buf:
                     yield np.asarray(buf, dtype=np.float64)
 
-        n_rows = feats.count()
-
-        if self._initial_model is not None:
-            codebook = self._initial_model.prototypes.astype(np.float64).copy()
-            first = feats.first()
-            if first is not None:
-                first_dim = sparse_dim if use_sparse else len(first[0])
-                if first_dim != codebook.shape[1]:
-                    raise ValueError(
-                        f"initial model dimension {codebook.shape[1]} does not match "
-                        f"data dimension {first_dim}"
-                    )
-        else:
-            codebook = self._init_codebook(feats, sparse_dim if use_sparse else None)
-        dim = codebook.shape[1]
-
-        grid_d = K.grid_distances(h, w, self.getTopology())
-        history: list[float] = []
-        it = 0
-        converged = False
-        # Small codebooks ride the task closure (cheaper than creating and
-        # destroying a broadcast every iteration); big ones broadcast once
-        # per iteration so executors fetch them a single time.
-        use_broadcast = codebook.nbytes >= 1 << 20
-
         # Small-data fast path: when the full training matrix fits easily
-        # on the driver, collect the decoded blocks ONCE and run every
-        # iteration as pure local NumPy — the math is the identical
+        # on the driver, it crosses to the driver ONCE and every
+        # iteration runs as pure local NumPy — the math is the identical
         # kernel call; what disappears is max_iter job launches, each a
         # fixed scheduling cost that dominates sub-second aggregations.
         # Above the threshold the distributed aggregate/treeAggregate
@@ -383,21 +419,54 @@ class SOM(Estimator, SOMParams, DefaultParamsWritable, DefaultParamsReadable):
         # driver traffic stays one (n_cells, dim) array either way).
         local_blocks: list | None = None
         blocks = None
-        est_bytes = (
-            int(n_rows * sparse_density * dim * 12) if use_sparse else n_rows * dim * 8
-        )
-        if est_bytes <= self._LOCAL_FIT_BYTES:
-            collected = feats.rdd.mapPartitions(_to_block).collect()
-            if collected:
-                # dense blocks vstack to ONE matrix (single GEMM per
-                # iteration); sparse blocks stay a list — concatenation
-                # buys nothing for the bincount kernels
-                if use_sparse:
-                    local_blocks = collected
+        codebook = None
+        if self._initial_model is not None:
+            codebook = self._initial_model.prototypes.astype(np.float64).copy()
+        try:
+            # One JVM aggregate sizes a dense input: the row count and the
+            # row width, so the path choice and the warm-start check need
+            # no Python-worker job.
+            if use_sparse:
+                n_rows = feats.count()
+                data_dim = sparse_dim
+            else:
+                n_rows, data_dim = feats.agg(
+                    F.count(F.lit(1)), F.coalesce(F.max(F.size("__features")), F.lit(0))
+                ).first()
+            if codebook is not None and n_rows and data_dim != codebook.shape[1]:
+                raise ValueError(
+                    f"initial model dimension {codebook.shape[1]} does not match "
+                    f"data dimension {data_dim}"
+                )
+            if codebook is None and n_rows == 0:
+                raise ValueError("cannot fit SOM on an empty dataset (no non-null feature rows)")
+            est_bytes = (
+                int(n_rows * sparse_density * data_dim * 12)
+                if use_sparse
+                else n_rows * data_dim * 8
+            )
+            local = 0 < n_rows and est_bytes <= self._LOCAL_FIT_BYTES
+            if local and not use_sparse:
+                # dense: one Arrow pass to ONE matrix (single GEMM per
+                # iteration), init rows drawn from it on the driver
+                x, ranges = _collect_dense(feats)
+                local_blocks = [x]
+            t_ingest = time.perf_counter()
+            if codebook is None:
+                if local_blocks is not None:
+                    seed = self.getOrDefault(self.seed)
+                    codebook = x[_take_sample_rows(ranges, n_rows, n_cells, seed)]
                 else:
-                    local_blocks = [
-                        collected[0] if len(collected) == 1 else np.vstack(collected)
-                    ]
+                    codebook = self._init_codebook(feats, sparse_dim if use_sparse else None)
+            t_init = time.perf_counter()
+        except BaseException:
+            feats.unpersist()
+            raise
+        dim = codebook.shape[1]
+        if local and use_sparse:
+            # sparse blocks stay a list — concatenation buys nothing for
+            # the bincount kernels
+            local_blocks = feats.rdd.mapPartitions(_to_block).collect() or None
         if local_blocks is None:
             # Right-size parallelism to the data: each training job pays a
             # fixed per-task scheduling cost, so datasets spread over many
@@ -409,6 +478,16 @@ class SOM(Estimator, SOMParams, DefaultParamsWritable, DefaultParamsReadable):
             if target < n_parts:
                 blocks = blocks.coalesce(target)
             blocks = blocks.persist(StorageLevel.MEMORY_AND_DISK)
+        t_blocks = time.perf_counter()
+
+        grid_d = K.grid_distances(h, w, self.getTopology())
+        history: list[float] = []
+        it = 0
+        converged = False
+        # Small codebooks ride the task closure (cheaper than creating and
+        # destroying a broadcast every iteration); big ones broadcast once
+        # per iteration so executors fetch them a single time.
+        use_broadcast = codebook.nbytes >= 1 << 20
 
         n_samples_trained = -1
         while it < max_iter and not converged:
@@ -466,6 +545,7 @@ class SOM(Estimator, SOMParams, DefaultParamsWritable, DefaultParamsReadable):
             # distributed aggregation consumed this iteration
             n_samples_trained = int(counts.sum())
             it += 1
+        t_iters = time.perf_counter()
 
         model = SOMModel(prototypes=codebook)
         model._resetUid(self.uid)
@@ -490,10 +570,18 @@ class SOM(Estimator, SOMParams, DefaultParamsWritable, DefaultParamsReadable):
             training_cost=history[-1] if history else float("nan"),
             objective_history=history,
             n_samples=n_samples_trained,
+            # wall seconds per fit phase; a sparse or distributed fit's
+            # block build after the init counts as ingest
+            timings={
+                "ingest_s": (t_ingest - t0) + (t_blocks - t_init),
+                "init_s": t_init - t_ingest,
+                "iterations_s": t_iters - t_blocks,
+            },
         )
         if blocks is not None:
             blocks.unpersist()
         feats.unpersist()
+        model.summary.timings["summary_s"] = time.perf_counter() - t_iters
         return model
 
 

@@ -27,6 +27,10 @@ class SOMTrainingSummary:
     # per-cell BMU counts) — a data-derived conservation anchor for
     # oracle checks; -1 when no iteration ran (maxIter=0)
     n_samples: int = -1
+    # wall seconds of each fit phase: ingest_s (projection, sizing and
+    # decode), init_s (codebook draw), iterations_s, summary_s (model,
+    # lazy predictions, cache release)
+    timings: dict[str, float] = field(default_factory=dict)
 
     @property
     def iterations(self) -> int:

@@ -141,3 +141,32 @@ def test_sample_dedup_stratified_cell_cap_and_survivor_only(spark, sf_dir):
         for r in rows
     }
     assert sum(r["n_sampled"] for r in out) <= _DSAMP_K * len(cells)
+
+
+@pytest.mark.parametrize("entry", ["som_grouped_cv", "som_grid_search"])
+def test_som_cv_grid_outputs_layout_robust(spark, sf_dir, entry):
+    """The CV and grid entries fit unspread input, so the fitted models
+    follow the scan's partition layout (the seeded takeSample contract);
+    their declared outputs must not.  Run each entry under two split
+    sizes of the embeddings scan and compare the collected outputs."""
+    from pyspark.sql import functions as F
+
+    from sparkml_som_spark.operators.registry import load_all
+    from sparkml_som_spark.sources import load_table
+
+    fn = load_all()[entry].fn
+    key = "spark.sql.files.maxPartitionBytes"
+    before = spark.conf.get(key)
+    outs, layouts = [], []
+    try:
+        for size in ("128m", "32k"):
+            spark.conf.set(key, size)
+            emb = load_table(spark, sf_dir, "embeddings")
+            pids = emb.select(F.spark_partition_id().alias("p")).distinct().collect()
+            layouts.append((emb.rdd.getNumPartitions(), sorted(r["p"] for r in pids)))
+            outs.append(sorted(fn(spark, sf_dir).collect()))
+    finally:
+        spark.conf.set(key, before)
+    assert spark.conf.get(key) == before
+    assert layouts[0] != layouts[1], layouts
+    assert outs[0] == outs[1]

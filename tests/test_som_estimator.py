@@ -280,3 +280,132 @@ def test_hexagonal_model_save_load(spark, small_df, tmp_path):
     a = [r["prediction"] for r in model.transform(small_df).collect()]
     b = [r["prediction"] for r in loaded.transform(small_df).collect()]
     assert a == b
+
+
+@pytest.fixture(scope="module")
+def draw_layouts(spark):
+    """Input layouts for the local-draw pins: cached 1/4/7 partitions,
+    an uncached round-robin repartition, and a two-key hash layout that
+    leaves partitions empty."""
+    rng = np.random.default_rng(17)
+    base = spark.createDataFrame(
+        [(row.tolist(),) for row in rng.random((300, 3))], "features array<double>"
+    )
+    out = {f"cached{n}": base.repartition(n).cache() for n in (1, 4, 7)}
+    out["uncached4"] = base.repartition(4)
+    out["empty_part"] = base.repartition(6, F.col("features")[0] > 0.5)
+    yield out
+    for df in out.values():
+        df.unpersist()
+
+
+@pytest.mark.parametrize("seed", [0, 42, -5])
+def test_local_draw_pins_pyspark_take_sample(spark, draw_layouts, seed):
+    """The dense local fit draws its init rows on the driver by
+    replaying `RDD.takeSample(True, n_cells, seed)` with two private
+    PySpark helpers (`RDD._computeFractionForSampleSize`,
+    `rddsampler.RDDSampler`).  Pin that replay to the real thing: the
+    local codebook equals `_init_codebook` bit for bit on every layout,
+    and a local fit equals the same fit warm-started from that
+    codebook."""
+    from sparkml_som_spark.som.estimator import (
+        _collect_dense,
+        _features_as_array,
+        _take_sample_rows,
+    )
+
+    kwargs = dict(height=3, width=4, maxIter=4, seed=seed)
+    for name, df in draw_layouts.items():
+        feats = _features_as_array(df, "features").persist()
+        try:
+            x, ranges = _collect_dense(feats)
+            if name == "empty_part":
+                assert len(ranges) < feats.rdd.getNumPartitions()
+            # ranges tile [0, n) in partition order
+            assert [r[0] for r in ranges] == sorted({r[0] for r in ranges})
+            assert ranges[0][1] == 0 and ranges[-1][2] == len(x) == 300
+            assert all(a[2] == b[1] for a, b in zip(ranges, ranges[1:]))
+            som = SOM(**kwargs)
+            want = som._init_codebook(feats)
+            got = x[_take_sample_rows(ranges, len(x), 12, seed)]
+            assert got.tobytes() == want.tobytes(), name
+        finally:
+            feats.unpersist()
+        fitted = SOM(**kwargs).fit(df)
+        warm = SOM(**kwargs).setInitialModel(SOMModel(prototypes=want)).fit(df)
+        assert fitted.prototypes.tobytes() == warm.prototypes.tobytes(), name
+        assert fitted.summary.objective_history == warm.summary.objective_history, name
+
+
+def test_empty_and_all_null_inputs_raise(spark):
+    empty = spark.createDataFrame([], "features array<double>")
+    nulls = spark.createDataFrame([(None,), (None,)], "features array<double>")
+    for df in (empty, nulls):
+        with pytest.raises(ValueError, match="cannot fit SOM on an empty dataset"):
+            SOM(height=2, width=2, maxIter=2, seed=1).fit(df)
+
+
+def test_ragged_rows_raise(spark):
+    df = spark.createDataFrame(
+        [([0.1, 0.2],), ([0.3],), ([0.5, 0.6],)], "features array<double>"
+    )
+    with pytest.raises(ValueError):
+        SOM(height=2, width=2, maxIter=2, seed=1).fit(df)
+
+
+def test_null_elements_decode_to_nan(spark):
+    """A null inside a feature array decodes to NaN on the Arrow ingest,
+    as `np.asarray` decodes it on the RDD path."""
+    from sparkml_som_spark.som.estimator import _collect_dense, _features_as_array
+
+    df = spark.createDataFrame(
+        [([0.1, None],), ([0.3, 0.4],), ([0.5, 0.6],)], "features array<double>"
+    ).coalesce(1)
+    feats = _features_as_array(df, "features")
+    x, _ = _collect_dense(feats)
+    rdd_x = np.asarray([r[0] for r in feats.collect()], dtype=np.float64)
+    assert np.isnan(x[0, 1]) and np.array_equal(x, rdd_x, equal_nan=True)
+    # the local fit and the RDD-block distributed fit agree on such data
+    local = SOM(height=1, width=2, maxIter=2, seed=3).fit(df)
+
+    class DistributedSOM(SOM):
+        _LOCAL_FIT_BYTES = 0
+
+    dist = DistributedSOM(height=1, width=2, maxIter=2, seed=3).fit(df)
+    assert np.array_equal(local.prototypes, dist.prototypes, equal_nan=True)
+
+
+def test_fit_phase_timings_cover_fit_wall(spark):
+    """`summary.timings` splits the fit into ingest / init / iterations /
+    summary; the phases never exceed the fit's wall time and account
+    for at least 80% of it."""
+    import time
+
+    rng = np.random.default_rng(0)
+    df = spark.createDataFrame(
+        [(row.tolist(),) for row in rng.random((10_000, 3))], "features array<double>"
+    ).repartition(4).cache()
+    df.count()
+    try:
+        t0 = time.perf_counter()
+        model = SOM(height=10, width=10, maxIter=100, seed=0).fit(df)
+        wall = time.perf_counter() - t0
+    finally:
+        df.unpersist()
+    timings = model.summary.timings
+    assert set(timings) == {"ingest_s", "init_s", "iterations_s", "summary_s"}
+    assert all(v >= 0 for v in timings.values())
+    total = sum(timings.values())
+    assert 0.8 * wall <= total <= wall
+
+
+def test_warm_start_on_empty_input_keeps_initial_model(spark, small_df):
+    """With an initial model there is nothing to draw, so an empty input
+    is no error: one iteration over zero rows leaves the codebook as it
+    was and records zero cost."""
+    m0 = SOM(height=2, width=2, maxIter=1, seed=4).fit(small_df)
+    empty = spark.createDataFrame([], "features array<double>")
+    m1 = SOM(height=2, width=2, maxIter=3, seed=4).setInitialModel(m0).fit(empty)
+    assert m1.prototypes.tobytes() == m0.prototypes.tobytes()
+    assert m1.summary.objective_history == [0.0]
+    assert m1.summary.n_samples == 0

@@ -192,3 +192,32 @@ def test_toroidal_fit_end_to_end(spark_not_needed=None):
     W_rect = K.neighborhood(K.grid_distances(3, 4, "rectangular"), 1.0, "rectangular")
     assert (W_tor != W_rect).any()
     assert (W_tor.sum(axis=1) >= W_rect.sum(axis=1)).all()
+
+
+@pytest.mark.parametrize("d", [3, 128])
+@pytest.mark.parametrize(
+    "n",
+    [0, 1, K._BMU_CHUNK_ROWS - 1, K._BMU_CHUNK_ROWS, K._BMU_CHUNK_ROWS + 1, 10_000],
+)
+def test_find_bmu_chunked_bit_equal_to_full_matrix(n, d):
+    """The row-chunked epilogue of `find_bmu` returns exactly what the
+    full (n, k) `squared_distances` matrix + argmin returns, on both
+    sides of every chunk boundary — with tied cells (a duplicated
+    prototype: the first index must win) and rows sitting on a
+    prototype (the clamp at 0)."""
+    rng = np.random.default_rng(n * 131 + d)
+    cb = rng.random((20, d))
+    cb[7] = cb[3]
+    x = rng.random((n, d))
+    x[: min(n, 5)] = cb[3]
+    cn2 = np.einsum("ij,ij->i", cb, cb)
+    full = K.squared_distances(x, cb, cn2)
+    want_idx = full.argmin(axis=1)
+    want_d2 = full[np.arange(n), want_idx]
+    for norms in (cn2, None):
+        idx, d2 = K.find_bmu(x, cb, norms)
+        assert idx.dtype == np.int64 and d2.dtype == np.float64
+        assert idx.shape == d2.shape == (n,)
+        assert np.array_equal(idx, want_idx)
+        assert d2.tobytes() == want_d2.tobytes()
+    assert 7 not in set(idx[: min(n, 5)].tolist())
