@@ -83,7 +83,6 @@ def dedup_canonical_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup service composes its stages (VERDICT r8 ask #7).
     """
     from sparkml_som_spark.operators.dedup import jaccard_sym_edges
-    from sparkml_som_spark.operators.registry import materialize_distributed
 
     docs = load_table(spark, sf_dir, "documents", spread=True)
     sym = jaccard_sym_edges(spark, sf_dir)
@@ -101,10 +100,7 @@ def dedup_canonical_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_members"),
         (F.count(F.lit(1)) - 1).alias("n_dropped"),
     )
-    # per-CLUSTER output: grows with the corpus (near-dup cluster count
-    # is corpus-derived, not grid/top-k bounded), so pin it on the
-    # executors — nothing here needs the rows on the driver
-    return materialize_distributed(out)
+    return out
 
 
 # --------------------------------------------------------------------------

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sparkml_som_spark.operators.analytics9 import _CMS_DEPTH, _CMS_WIDTH
-from sparkml_som_spark.operators.registry import register
+from sparkml_som_spark.operators.registry import drain_stream, register, session_conf
 from sparkml_som_spark.operators.sources_queries import _scratch
 from sparkml_som_spark.sources import load_table
 
@@ -187,16 +187,9 @@ def stream_countmin_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffle-partition count, same rationale as _run_to_memory — at
     # registry volumes per-task overhead dominates 32-way shuffles, and
     # AQE cannot coalesce inside a streaming plan
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    with session_conf(spark, "spark.sql.shuffle.partitions", "4"):
         q = stream.writeStream.foreachBatch(merge).trigger(availableNow=True).start()
-        try:
-            q.awaitTermination(300)
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        drain_stream(q, "stream_countmin_merge")
 
     cells = spark.read.parquet(cells_dir)
     tc = (

@@ -29,7 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sparkml_som_spark.operators.registry import register
+from sparkml_som_spark.operators.registry import drain_stream, register
 from sparkml_som_spark.operators.sources_queries import _scratch
 from sparkml_som_spark.sources import load_table
 
@@ -166,10 +166,7 @@ def source_python_stream_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    try:
-        q.awaitTermination(300)
-    finally:
-        q.stop()
+    drain_stream(q, "source_python_stream_writer")
 
     files: list[str] = []
     for mpath in sorted(glob.glob(os.path.join(sink, "_MANIFEST-*.json"))):

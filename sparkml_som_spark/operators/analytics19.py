@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from sparkml_som_spark.operators.registry import register
+from sparkml_som_spark.operators.registry import register, session_conf
 from sparkml_som_spark.sources import load_table
 
 _PARAM_MIN_SIZE = 30
@@ -81,9 +81,7 @@ def sql_script_price_band_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     produces (the oracle IS that form); the variable is a scalar bound
     on the driver, so no correlated re-execution happens per row.
     """
-    prev = spark.conf.get("spark.sql.scripting.enabled", "false")
-    spark.conf.set("spark.sql.scripting.enabled", "true")
-    try:
+    with session_conf(spark, "spark.sql.scripting.enabled", "true"):
         orders = load_table(spark, sf_dir, "orders")
         orders.createOrReplaceTempView("sgs_script_orders")
         return spark.sql(
@@ -101,8 +99,6 @@ def sql_script_price_band_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             END
             """
         )
-    finally:
-        spark.conf.set("spark.sql.scripting.enabled", prev)
 
 
 @register(

@@ -354,8 +354,7 @@ def gini_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is cheaper than the checkpoint barrier.  Order-alternated A/B at
     # sf0.1, 8 reps: unpinned min 1.172 s vs ckpt 1.222 s, ckpt better
     # 2/8 pairwise (OPTIMIZATION_r16.md §C3).
-    held: list = []
-    ranked = distributed_global_rank(rev, ["x", "o_custkey"], cleanup=held)
+    ranked = distributed_global_rank(rev, ["x", "o_custkey"])
     i = F.col("rank") + 1  # 0-based distributed rank -> textbook 1-based i
     out = ranked.agg(
         F.count(F.lit(1)).alias("n_customers"),
@@ -368,4 +367,4 @@ def gini_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from sparkml_som_spark.operators.registry import materialize_small
 
-    return materialize_small(out, cleanup=tuple(held))
+    return materialize_small(out)

@@ -42,7 +42,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from sparkml_som_spark.operators.registry import register
+from sparkml_som_spark.operators.registry import drain_stream, register, session_conf
 from sparkml_som_spark.operators.sources_queries import _scratch
 from sparkml_som_spark.sources import load_table
 
@@ -125,16 +125,9 @@ def stream_quantile_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(cells_dir, ignore_errors=True)
         os.replace(tmp, cells_dir)
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    with session_conf(spark, "spark.sql.shuffle.partitions", "4"):
         q = stream.writeStream.foreachBatch(merge).trigger(availableNow=True).start()
-        try:
-            q.awaitTermination(300)
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        drain_stream(q, "stream_quantile_merge")
 
     merged = spark.read.parquet(cells_dir)
     w_cum = Window.partitionBy("event_type").orderBy("bin")
@@ -521,7 +514,7 @@ def lsh_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.coalesce(F.col("_t"), F.lit(0))).cast("long").alias("tp"),
         )
     )
-    out = stats.select(
+    return stats.select(
         F.col("b").alias("bands"),
         F.col("r").alias("rows_per_band"),
         "n_candidates",
@@ -533,9 +526,6 @@ def lsh_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             1.0 - F.pow(1.0 - F.pow(F.lit(_LSH_TAU), F.col("r")), F.col("b")), 4
         ).alias("theory_recall_at_tau"),
     ).orderBy(F.desc("bands"))
-    from sparkml_som_spark.operators.registry import materialize_distributed
-
-    return materialize_distributed(out, cleanup=(sh, truth))
 
 
 lsh_tuning_curve.__doc__ = lsh_tuning_curve.__doc__.format(

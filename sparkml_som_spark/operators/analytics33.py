@@ -168,7 +168,7 @@ def seed_expansion_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .where(F.col("r") > 0)
         )
-    out = (
+    return (
         ranks.join(F.broadcast(seeds.select(F.col("node").alias("v"))), "v", "left_anti")
         .orderBy(F.desc("r"), F.asc("v"))
         .limit(_PPR_TOPK)
@@ -178,9 +178,6 @@ def seed_expansion_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("r") / F.lit(float(_PPR_SCALE))).alias("rank"),
         )
     )
-    from sparkml_som_spark.operators.registry import materialize_distributed
-
-    return materialize_distributed(out, cleanup=(seeds,))
 
 
 # ---------------------------------------------------------------------------

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from sparkml_som_spark.operators.registry import materialize_reused, register
+from sparkml_som_spark.operators.registry import materialize_reused, query_scope, register
 from sparkml_som_spark.sources import load_table
 
 # ---------------------------------------------------------------------------
@@ -152,14 +152,11 @@ def som_grouped_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
             qe_valid = math.isfinite(qe) and qe > 0
         return (f, n_groups, n_val, n_train, qe_valid)
 
-    try:
-        # materialize the tagged split once so the concurrent folds
-        # read the cached blocks instead of racing three parquet scans
-        tagged.count()
-        with ThreadPoolExecutor(max_workers=_CV_FOLDS) as pool:
-            rows = list(pool.map(run_fold, range(_CV_FOLDS)))
-    finally:
-        tagged.unpersist()
+    # materialize the tagged split once so the concurrent folds read the
+    # cached blocks instead of racing three parquet scans
+    tagged.count()
+    with ThreadPoolExecutor(max_workers=_CV_FOLDS) as pool:
+        rows = list(pool.map(run_fold, range(_CV_FOLDS)))
     return spark.createDataFrame(
         rows,
         "fold long, n_val_groups long, n_val long, n_train long, qe_valid boolean",
@@ -193,7 +190,7 @@ def som_grouped_cv_scores(spark: SparkSession, sf_dir: str) -> list[tuple]:
         .cast("long")
         % _CV_FOLDS
     )
-    tagged = emb.withColumn("fold", fold).persist()
+    tagged = emb.withColumn("fold", fold)
 
     def run_fold(f: int):
         train = tagged.where(F.col("fold") != f)
@@ -208,15 +205,14 @@ def som_grouped_cv_scores(spark: SparkSession, sf_dir: str) -> list[tuple]:
             model.compute_cost(val) if n_val else float("nan"),
         )
 
-    try:
-        tagged.count()
-        from concurrent.futures import ThreadPoolExecutor
+    from concurrent.futures import ThreadPoolExecutor
 
+    # not a registry entry: its own scope releases `tagged` on return
+    with query_scope(spark):
+        tagged = tagged.persist()
+        tagged.count()
         with ThreadPoolExecutor(max_workers=_CV_FOLDS) as pool:
-            out = list(pool.map(run_fold, range(_CV_FOLDS)))
-    finally:
-        tagged.unpersist()
-    return out
+            return list(pool.map(run_fold, range(_CV_FOLDS)))
 
 
 # ---------------------------------------------------------------------------

@@ -52,7 +52,7 @@ from pyspark.sql import functions as F
 from sparkml_som_spark.functions import cosine, hash_bottom_k, norm2, word_tokens
 from sparkml_som_spark.operators.analytics28 import _BM25_QUERY
 from sparkml_som_spark.operators.analytics29 import _RRF_ORACLE, _RRF_QVEC, _RRF_TOPK
-from sparkml_som_spark.operators.registry import register
+from sparkml_som_spark.operators.registry import broadcast, drain_stream, register
 from sparkml_som_spark.sources import load_table
 
 # ---------------------------------------------------------------------------
@@ -489,7 +489,7 @@ def semdedup_som_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sparkml_som_spark.som import kernel as K
 
     model, emb = fit_default_som(spark, sf_dir)
-    bc = spark.sparkContext.broadcast(model.prototypes)
+    bc = broadcast(spark, model.prototypes)
 
     def _top2(arrs):
         import numpy as np
@@ -638,9 +638,6 @@ def semdedup_som_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_kept_viol = _cell_pairs_over_tau(
         multi.join(cell_dropped, "vec_id", "left_anti"), _SOMDD_TAU
     ).count()
-    assigned.unpersist()
-    pairs.unpersist()
-    cell_dropped.unpersist()
     return spark.createDataFrame(
         [
             (
@@ -945,18 +942,7 @@ def stream_dedup_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFram
         shutil.rmtree(probe_old, ignore_errors=True)
 
     q = stream.writeStream.foreachBatch(admit).trigger(availableNow=True).start()
-    try:
-        finished = q.awaitTermination(300)
-    finally:
-        q.stop()
-    if not finished:
-        # a timed-out stream has processed only SOME epochs; reading the
-        # partial state would return silently-wrong counts that surface
-        # as an unexplainable oracle mismatch — fail loudly instead
-        raise TimeoutError(
-            "stream_dedup_stratified_sample: availableNow stream did not "
-            "drain within 300s; partial state discarded"
-        )
+    drain_stream(q, "stream_dedup_stratified_sample")
 
     adm = spark.read.parquet(admitted_dir)
     # materialize the reservoir from the final probe state: per-cell

@@ -527,7 +527,7 @@ def pmi_term_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .where(F.length("term") >= _PMI_MIN_LEN)
         .distinct()
-        .persist()  # reused 3x (ndocs, df, pair join); released below
+        .persist()  # reused 3x (ndocs, df, pair join)
     )
     # ndocs is a bounded scalar (one number) — taking it as an action
     # instead of a one-row broadcast keeps the reused band/toks subtrees
@@ -579,9 +579,7 @@ def pmi_term_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("pmi_ratio"), "t1", "t2")
         .limit(_PMI_TOP)
     )
-    # top-N result is provably bounded; collecting it releases the
-    # persisted token table without leaking cache past the query
-    return materialize_small(out, cleanup=(toks,))
+    return materialize_small(out)
 
 
 # --------------------------------------------------------------------------

@@ -76,10 +76,9 @@ def histogram_equidepth_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_extendedprice", "l_orderkey", "l_linenumber"
     )
-    held: list = []
     total: list = []
     ranked = distributed_global_rank(
-        li, ["l_extendedprice", "l_orderkey", "l_linenumber"], cleanup=held, total_out=total
+        li, ["l_extendedprice", "l_orderkey", "l_linenumber"], total_out=total
     )
     # N from the rank helper's own partition counts — a separate
     # li.count() job would re-derive a number the helper already summed
@@ -99,7 +98,7 @@ def histogram_equidepth_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from sparkml_som_spark.operators.registry import materialize_small
 
-    return materialize_small(out, cleanup=tuple(held))
+    return materialize_small(out)
 
 
 # --------------------------------------------------------------------------

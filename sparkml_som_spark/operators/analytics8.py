@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from sparkml_som_spark.operators.registry import register
+from sparkml_som_spark.operators.registry import broadcast, register
 from sparkml_som_spark.sources import load_table
 
 
@@ -62,7 +62,7 @@ def distributed_prefix_max(
     for pid in sorted(pmax):
         prefix[pid] = acc
         acc = max(acc, pmax[pid])
-    bc = spark.sparkContext.broadcast(prefix)
+    bc = broadcast(spark, prefix)
     out_schema = T.StructType(
         df.schema.fields + [T.StructField("prev_max", T.DoubleType())]
     )

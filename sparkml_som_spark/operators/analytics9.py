@@ -155,7 +155,7 @@ def triangle_count_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from sparkml_som_spark.operators.registry import materialize_small
 
-    return materialize_small(out, cleanup=(e, oriented))
+    return materialize_small(out)
 
 
 # --------------------------------------------------------------------------

@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sparkml_som_spark.functions import word_tokens
-from sparkml_som_spark.operators.registry import materialize_small, register
+from sparkml_som_spark.operators.registry import broadcast, materialize_small, register
 from sparkml_som_spark.sources import load_table
 
 _SCRATCH = os.path.join(
@@ -60,7 +60,6 @@ def distributed_global_rank(
     sort_cols: list,
     n_parts: int = 8,
     *,
-    cleanup: list,
     total_out: list | None = None,
 ) -> DataFrame:
     """Append a 0-based global `rank` column under the given total order
@@ -106,13 +105,6 @@ def distributed_global_rank(
         .sortWithinPartitions(*sort_cols)
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    # hand the cache handle back so the caller can release it via
-    # materialize_small(..., cleanup=...) once its bounded result is
-    # collected — otherwise the pinned blocks outlive the query.
-    # `cleanup` is REQUIRED (keyword-only, no default): every caller
-    # must take the handle, so a forgotten release is visible at the
-    # call site instead of silently leaking executor memory.
-    cleanup.append(parted)
 
     counts = {
         r["pid"]: r["n"]
@@ -131,7 +123,7 @@ def distributed_global_rank(
         # re-scan of an expensive upstream) just to count rows they
         # ranked a moment ago (opt r16, guide §1.2/§2.4)
         total_out.append(acc)
-    bc = spark.sparkContext.broadcast(offsets)
+    bc = broadcast(spark, offsets)
     from pyspark.sql import types as T
 
     out_schema = T.StructType(df.schema.fields + [T.StructField("rank", T.LongType())])
@@ -235,9 +227,8 @@ def shard_assignment_balanced(spark: SparkSession, sf_dir: str) -> DataFrame:
     `ROW_NUMBER() OVER (ORDER BY ...)` with no PARTITION BY would push
     the whole corpus through one task."""
     docs = load_table(spark, sf_dir, "documents", spread=True).select("doc_id", "n_chars")
-    held: list = []
     ranked = distributed_global_rank(
-        docs, [F.col("n_chars").desc(), F.col("doc_id").asc()], n_parts=8, cleanup=held
+        docs, [F.col("n_chars").desc(), F.col("doc_id").asc()], n_parts=8
     )
     assigned = ranked.withColumn("shard", (F.col("rank") % _N_SHARDS).cast("int"))
     out = assigned.groupBy("shard").agg(
@@ -246,7 +237,7 @@ def shard_assignment_balanced(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("n_chars").alias("min_chars"),
         F.max("n_chars").alias("max_chars"),
     )
-    return materialize_small(out, cleanup=tuple(held))
+    return materialize_small(out)
 
 
 @register(
@@ -556,9 +547,8 @@ def pipeline_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 8 reps: unpinned min 1.597 s vs ckpt 1.606 s, 4/8 pairwise
     # (OPTIMIZATION_r16.md §C3).  Left un-pinned: same speed, simpler plan,
     # no executor-resident blocks.
-    held: list = []
     ranked = distributed_global_rank(
-        deduped, [F.col("n_chars").desc(), F.col("doc_id").asc()], n_parts=8, cleanup=held
+        deduped, [F.col("n_chars").desc(), F.col("doc_id").asc()], n_parts=8
     )
     out = (
         ranked.withColumn("shard", (F.col("rank") % _MANIFEST_SHARDS).cast("int"))
@@ -570,7 +560,7 @@ def pipeline_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("doc_id").alias("id_checksum"),
         )
     )
-    return materialize_small(out, cleanup=tuple(held))
+    return materialize_small(out)
 
 
 def _funnel_stages(ev: DataFrame):

@@ -562,7 +562,6 @@ def curriculum_phases(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents", spread=True)
     q = quality_scored(docs).select("doc_id", "quality")
-    held: list = []
     # opt r16 (guide §2.4): quality_scored tokenizes every doc, and the
     # rank reads this narrow (doc_id, quality) projection twice — the
     # range-partitioner's sample pass and the rank shuffle's fill pass.
@@ -574,7 +573,6 @@ def curriculum_phases(spark: SparkSession, sf_dir: str) -> DataFrame:
         q,
         [F.col("quality").desc(), F.col("doc_id").asc()],
         n_parts=8,
-        cleanup=held,
         total_out=total,
     )
     phase = F.floor(
@@ -591,7 +589,7 @@ def curriculum_phases(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from sparkml_som_spark.operators.registry import materialize_small
 
-    return materialize_small(out, cleanup=tuple(held))
+    return materialize_small(out)
 
 
 @register(

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from sparkml_som_spark.functions import word_tokens
 from sparkml_som_spark.operators.dedup import _SSD_CTE_PREFIX, _SSD_L, substring_match_pairs
-from sparkml_som_spark.operators.registry import materialize_reused, register
+from sparkml_som_spark.operators.registry import materialize_reused, register, session_conf
 from sparkml_som_spark.sources import load_table
 
 # --------------------------------------------------------------------------
@@ -111,11 +111,10 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics exactly, so the DuckDB oracle replays the FULL 8-merge
     trajectory (including how merge k reshapes the pair counts of
     merge k+1) under the value hash.  The per-iteration argmax is a
-    one-row collect; the word table is persisted per iteration and
-    released at the end.""".format(n=_BPE_MERGES, p=_BPE_PASSES)
-    merges, _words, held = _learn_bpe(spark, sf_dir)
-    for h in held:
-        h.unpersist()
+    one-row collect; the word table is persisted per iteration.""".format(
+        n=_BPE_MERGES, p=_BPE_PASSES
+    )
+    merges, _words = _learn_bpe(spark, sf_dir)
     return spark.createDataFrame(
         merges, "merge_rank int, left_sym string, right_sym string, pair_count long"
     )
@@ -123,8 +122,7 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _learn_bpe(spark: SparkSession, sf_dir: str):
     """The shared BPE merge loop: returns (merges, final words DF with
-    the post-merge `spaced` segmentation, persist handles for the
-    caller to release)."""
+    the post-merge `spaced` segmentation)."""
     docs = load_table(spark, sf_dir, "documents", spread=True)
     words = (
         docs.select(F.explode(word_tokens(F.col("text"))).alias("word"))
@@ -140,7 +138,6 @@ def _learn_bpe(spark: SparkSession, sf_dir: str):
             ),
         )
     )
-    held: list = []
     merges: list = []
     pair_struct = (
         "CASE WHEN size(s) >= 2 THEN "
@@ -158,15 +155,10 @@ def _learn_bpe(spark: SparkSession, sf_dir: str):
     # SAME persisted vocab every round), so the loop runs with AQE off
     # and one job per round; the corpus-sized words0 pass materializes
     # inside round 0's job with the exchange already sized by
-    # spark.sql.shuffle.partitions.  The conf is restored in this
-    # function's own finally.  The toggle is session-global: the loop
-    # assumes no other query is planned on this session meanwhile.
-    aqe_prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    # spark.sql.shuffle.partitions.
+    with session_conf(spark, "spark.sql.adaptive.enabled", "false"):
         for k in range(_BPE_MERGES):
             words = words.persist()
-            held.append(words)
             top = (
                 words.select("freq", F.split(F.trim(F.col("spaced")), " ").alias("s"))
                 .select("freq", F.explode(F.expr(pair_struct)).alias("p"))
@@ -183,9 +175,7 @@ def _learn_bpe(spark: SparkSession, sf_dir: str):
             for _ in range(_BPE_PASSES):
                 col = F.replace(col, F.lit(pat), F.lit(rep))
             words = words.withColumn("spaced", col)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
-    return merges, words, held
+    return merges, words
 
 
 _BPE_APPLY_SELECT = f"""
@@ -225,7 +215,7 @@ def bpe_apply_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     any corpus size — and never re-runs merges per occurrence.  The
     oracle replays training AND application end-to-end, so the entry
     pins the full train->apply pipeline, not just the merge table."""
-    _merges, words, held = _learn_bpe(spark, sf_dir)
+    _merges, words = _learn_bpe(spark, sf_dir)
     tok = words.select(
         "word",
         F.size(F.split(F.trim(F.col("spaced")), " ")).cast("long").alias("n_tok"),
@@ -248,7 +238,7 @@ def bpe_apply_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from sparkml_som_spark.operators.registry import materialize_small
 
-    return materialize_small(out, cleanup=tuple(held))
+    return materialize_small(out)
 
 
 # --------------------------------------------------------------------------
@@ -525,7 +515,6 @@ def quality_bigram_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    handles: list = []
     # opt r16 (guide §2.4/§1.2): (1) pin the per-doc scores (one narrow
     # row per doc) so the range-partitioner's sample pass re-reads 20k
     # rows instead of re-running the score aggregate, and (2) take N from
@@ -535,7 +524,7 @@ def quality_bigram_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_score = materialize_reused(doc_score)
     total: list = []
     ranked = distributed_global_rank(
-        doc_score, ["score", "doc_id"], cleanup=handles, total_out=total
+        doc_score, ["score", "doc_id"], total_out=total
     )
     n = total[0]
     cut = n // 10
@@ -551,7 +540,7 @@ def quality_bigram_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("source")
     )
-    return materialize_small(out, cleanup=tuple(handles))
+    return materialize_small(out)
 
 
 # --------------------------------------------------------------------------

@@ -116,9 +116,8 @@ def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         good.withColumn("rn", F.row_number().over(w)).where(F.col("rn") == 1).drop("rn")
     )
 
-    handles: list = []
     pairs = shingle_pairs_with_jaccard(
-        exact.select("doc_id", "text"), n=3, max_df=_NGRAM_MAX_DF, cleanup=handles
+        exact.select("doc_id", "text"), n=3, max_df=_NGRAM_MAX_DF
     )
     neardup = (
         pairs.where(F.col("jaccard_raw") >= 0.8)
@@ -131,5 +130,5 @@ def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_tokens").alias("total_tokens"),
         F.round(F.avg("quality"), 4).alias("avg_quality"),
     )
-    # bounded output (one row per source); releases the shingle index
-    return materialize_small(summary, cleanup=tuple(handles))
+    # bounded output (one row per source)
+    return materialize_small(summary)

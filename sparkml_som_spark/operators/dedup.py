@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sparkml_som_spark.functions import word_grams_positional, word_shingles, word_tokens
-from sparkml_som_spark.operators.registry import materialize_reused, register
+from sparkml_som_spark.operators.registry import broadcast, materialize_reused, register
 from sparkml_som_spark.sources import load_table
 
 
@@ -47,7 +47,6 @@ def shingle_pairs_with_jaccard(
     docs: DataFrame,
     n: int = 3,
     max_df: int | None = None,
-    cleanup: list | None = None,
 ) -> DataFrame:
     """Candidate pairs via an inverted shingle index + exact Jaccard.
 
@@ -70,19 +69,14 @@ def shingle_pairs_with_jaccard(
     missed, and near-dups at high thresholds always share rare
     shingles.
 
-    ``cleanup``: pass a list to persist the multiply-consumed
-    intermediates (the exploded shingles and the grouped index each
-    feed 2+ downstream plans); persisted handles are appended for the
-    caller to release after materializing (`materialize_distributed`).
+    The exploded shingles and the grouped index each feed 2+
+    downstream plans, so both are persisted.
     """
     from pyspark import StorageLevel
 
     sh = docs.select(
         "doc_id", F.explode(word_shingles(word_tokens(F.col("text")), n)).alias("s")
-    )
-    if cleanup is not None:
-        sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
-        cleanup.append(sh)
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     if max_df is None:
         # uncapped: the candidate join doubles as the common counter
@@ -98,10 +92,11 @@ def shingle_pairs_with_jaccard(
         # bounds the per-group fan-out at df^2/2, so the explode is
         # task-local and bounded); hot groups contribute no pairs but
         # their doc lists re-add the hot overlap for candidate pairs.
-        grouped = sh.groupBy("s").agg(F.collect_list("doc_id").alias("ds"))
-        if cleanup is not None:
-            grouped = grouped.persist(StorageLevel.MEMORY_AND_DISK)
-            cleanup.append(grouped)
+        grouped = (
+            sh.groupBy("s")
+            .agg(F.collect_list("doc_id").alias("ds"))
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
         sub = (
             grouped.where(F.size("ds") <= max_df)
             .select(F.explode("ds").alias("a_id"), "ds")
@@ -193,18 +188,11 @@ _NGRAM_ORACLE = """
     desc="near-dup pairs: word-3-gram Jaccard >= 0.8, DF-capped inverted index",
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sparkml_som_spark.operators.registry import materialize_distributed
-
     docs = load_table(spark, sf_dir, "documents", spread=True)
-    handles: list = []
-    pairs = shingle_pairs_with_jaccard(docs, n=3, max_df=_NGRAM_MAX_DF, cleanup=handles)
-    out = (
-        pairs.where(F.col("jaccard_raw") >= 0.8)
-        .select("a_id", "b_id", F.round("jaccard_raw", 4).alias("jaccard"))
+    pairs = shingle_pairs_with_jaccard(docs, n=3, max_df=_NGRAM_MAX_DF)
+    return pairs.where(F.col("jaccard_raw") >= 0.8).select(
+        "a_id", "b_id", F.round("jaccard_raw", 4).alias("jaccard")
     )
-    # pin the (small) pair set on executors, then drop the persisted
-    # shingle index — without this the index cache leaks for the session
-    return materialize_distributed(out, cleanup=tuple(handles))
 
 
 def minhash_band_buckets(docs: DataFrame) -> DataFrame:
@@ -813,7 +801,7 @@ def _cosine_pairs_broadcast_gemm(emb: DataFrame, threshold: float) -> DataFrame:
     ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
     M = np.stack([np.asarray(r["v"], dtype=np.float64) for r in rows])
     M_unit = M / np.linalg.norm(M, axis=1, keepdims=True)
-    bc = spark.sparkContext.broadcast((ids, M_unit))
+    bc = broadcast(spark, (ids, M_unit))
 
     out_schema = "a_id long, b_id long, cos_raw double"
 
@@ -833,15 +821,8 @@ def _cosine_pairs_broadcast_gemm(emb: DataFrame, threshold: float) -> DataFrame:
                     {"a_id": bids[bi], "b_id": all_ids[ci], "cos_raw": sims[bi, ci]}
                 )
 
-    from sparkml_som_spark.operators.registry import materialize_distributed
-
-    # materialize the pair set on the executors so the corpus broadcast
-    # can be destroyed instead of living for the rest of the session
-    return materialize_distributed(
-        emb.mapInPandas(gemm_pairs, schema=out_schema).select(
-            "a_id", "b_id", F.round("cos_raw", 4).alias("cos_sim")
-        ),
-        cleanup=(bc,),
+    return emb.mapInPandas(gemm_pairs, schema=out_schema).select(
+        "a_id", "b_id", F.round("cos_raw", 4).alias("cos_sim")
     )
 
 
@@ -858,7 +839,7 @@ def _cosine_pairs_lsh(emb: DataFrame, dim: int, threshold: float) -> DataFrame:
     from sparkml_som_spark.functions import cosine
     from sparkml_som_spark.operators.similarity import hyperplane_buckets
 
-    buckets, _bc_planes = hyperplane_buckets(
+    buckets = hyperplane_buckets(
         emb, dim, n_bits=32, n_bands=8, band_bits=4, seed=11
     )
     b = buckets.select("vec_id", "band", "bucket")
@@ -1036,10 +1017,7 @@ def jaccard_sym_edges(
     path = _scratch(sf_dir, f"jaccard{str(thr).replace('.', '')}_sym_edges_v2")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         docs = load_table(spark, sf_dir, "documents", spread=True)
-        handles: list = []
-        pairs = shingle_pairs_with_jaccard(
-            docs, n=3, max_df=_NGRAM_MAX_DF, cleanup=handles
-        )
+        pairs = shingle_pairs_with_jaccard(docs, n=3, max_df=_NGRAM_MAX_DF)
         edges = pairs.where(F.col("jaccard_raw") >= thr).select(
             "a_id", "b_id", F.col("jaccard_raw").alias("jaccard")
         )
@@ -1051,8 +1029,6 @@ def jaccard_sym_edges(
             )
         )
         sym.write.mode("overwrite").parquet(path)
-        for h in handles:
-            h.unpersist()
     out = spark.read.parquet(path)
     return out if with_jaccard else out.select("src", "dst")
 
@@ -1101,20 +1077,14 @@ def dedup_incremental_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     asg_path = _scratch(sf_dir, "cc_assign_existing")
     if not os.path.exists(os.path.join(asg_path, "_SUCCESS")):
-        handles: list = []
         pairs = shingle_pairs_with_jaccard(
-            docs.where(F.col("doc_id") < _INCR_SPLIT),
-            n=3,
-            max_df=_NGRAM_MAX_DF,
-            cleanup=handles,
+            docs.where(F.col("doc_id") < _INCR_SPLIT), n=3, max_df=_NGRAM_MAX_DF
         )
         edges = pairs.where(F.col("jaccard_raw") >= 0.8).select("a_id", "b_id")
         sym_exist = edges.select(
             F.col("a_id").alias("src"), F.col("b_id").alias("dst")
         ).union(edges.select(F.col("b_id").alias("src"), F.col("a_id").alias("dst")))
         min_label_components(sym_exist).write.mode("overwrite").parquet(asg_path)
-        for h in handles:
-            h.unpersist()
     assign = spark.read.parquet(asg_path)  # (node, label)
     delta_edges = delta_verified_pairs(spark, sf_dir, docs).select("a_id", "b_id")
     star = assign.where(F.col("node") != F.col("label")).select(

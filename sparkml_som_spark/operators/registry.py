@@ -5,11 +5,23 @@ builder ``fn(spark, sf_dir) -> DataFrame`` plus (when SQL-expressible)
 the equivalent ANSI SQL for the DuckDB oracle. Column names/aliases must
 match exactly between the two — the driver's compare hashes values
 after sorting columns by name.
+
+Resource lifetime: ``@register`` runs every entry inside one
+`query_scope`.  An entry returns a lazy plan that its caller collects
+afterwards, so what the entry persisted, cached, checkpointed or
+broadcast (through `broadcast`) stays held until the next registry
+entry is called in the same process, which releases it first.  An
+entry's result is therefore valid until the next registry entry is
+called, and entries on one SparkContext run one at a time.  Until then
+the entry's Dataset caches also serve any matching query the caller
+runs on the session, as every Spark cache does.
 """
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,46 +41,25 @@ REGISTRY: dict[str, QuerySpec] = {}
 _MATERIALIZE_SMALL_CAP = 100_000
 
 
-def materialize_small(
-    df: DataFrame, cleanup: tuple = (), max_rows: int = _MATERIALIZE_SMALL_CAP
-) -> DataFrame:
-    """Collect a SMALL result, release held resources (persisted
-    DataFrames / broadcasts), and return an equivalent fresh DataFrame.
+def materialize_small(df: DataFrame, max_rows: int = _MATERIALIZE_SMALL_CAP) -> DataFrame:
+    """Collect a SMALL result and return an equivalent fresh DataFrame
+    that no longer reads the entry's persisted intermediates.
 
-    Queries that persist an intermediate for multi-action summaries
-    would otherwise leak cache for the rest of the session (the caller
-    collects after we return, so there is no later unpersist point).
     Only use when the result is PROVABLY bounded (grid cells, top-k) —
-    it pins the result on the driver; for per-doc / per-pair results use
-    `materialize_distributed`.
-
-    Boundedness is ENFORCED, not assumed: the collect goes through
-    ``limit(max_rows + 1)`` so an accidentally-unbounded caller fails
-    fast with a clear error after shipping at most max_rows + 1 rows to
-    the driver — it cannot OOM the driver first.  (When the result fits
-    the cap, ``limit`` returns the complete set, so the returned
-    DataFrame is value-identical to ``df``.)"""
-    spark = df.sparkSession
+    it pins the result on the driver.  Boundedness is ENFORCED, not
+    assumed: the collect goes through ``limit(max_rows + 1)`` so an
+    accidentally-unbounded caller fails fast with a clear error after
+    shipping at most max_rows + 1 rows to the driver — it cannot OOM
+    the driver first.  (When the result fits the cap, ``limit`` returns
+    the complete set, so the returned DataFrame is value-identical to
+    ``df``.)"""
     rows = df.limit(max_rows + 1).collect()
     if len(rows) > max_rows:
-        _release(cleanup)
         raise ValueError(
             f"materialize_small: result exceeds the {max_rows}-row bound; "
-            "use materialize_distributed for unbounded outputs"
+            "return the plan itself for unbounded outputs"
         )
-    _release(cleanup)
-    return spark.createDataFrame(rows, df.schema)
-
-
-def materialize_distributed(df: DataFrame, cleanup: tuple = ()) -> DataFrame:
-    """Pin a result on the EXECUTORS (eager localCheckpoint) so held
-    caches / broadcasts can be released, without collecting unbounded
-    rows to the driver.  The checkpointed blocks are bounded by the
-    result size and spread across the cluster — the scale-safe twin of
-    `materialize_small` for per-doc / per-pair outputs."""
-    out = df.localCheckpoint(eager=True)
-    _release(cleanup)
-    return out
+    return df.sparkSession.createDataFrame(rows, df.schema)
 
 
 def materialize_reused(
@@ -123,20 +114,158 @@ def materialize_reused(
     return df.localCheckpoint(eager=eager)
 
 
-def _release(cleanup: tuple) -> None:
-    for h in cleanup:
-        # Broadcast has both destroy and unpersist — destroy is the full
-        # release; DataFrames only have unpersist
-        if hasattr(h, "destroy"):
-            h.destroy()
-        elif hasattr(h, "unpersist"):
-            h.unpersist()
+# --- resource scope ------------------------------------------------------
+# The one scope that is running or was last left holding resources:
+# `running` while an entry runs (a nested entry joins it), and the
+# holdings (RDD ids, Dataset cache entries, broadcasts) of the scope
+# that ran last, released when the next scope starts.
+_SCOPE: dict = {"running": False, "spark": None, "rdds": set(), "caches": [], "broadcasts": []}
+
+
+def _alive(spark: SparkSession | None) -> bool:
+    from pyspark import SparkContext
+
+    sc = spark.sparkContext if spark is not None else None
+    return sc is not None and sc._jsc is not None and SparkContext._active_spark_context is sc
+
+
+def _persistent_rdd_ids(spark: SparkSession) -> set[int]:
+    # one py4j round trip: iterating the Java key set from Python costs
+    # one per element and measured ~50 ms for three ids
+    ids = spark.sparkContext._jsc.sc().getPersistentRDDs().keys().mkString(",")
+    return {int(i) for i in ids.split(",") if i}
+
+
+def _dataset_caches(spark: SparkSession) -> dict:
+    """identity -> CachedData for the session's Dataset caches.  A
+    persisted Dataset only creates (and registers) its RDD on its first
+    execution, which for an entry's result is the caller's collect; and
+    unpersisting that RDD alone would leave the cache entry in place,
+    so a later persist of the same plan would never cache again.  The
+    scope therefore releases Dataset caches through the CacheManager,
+    which keeps them in a private field."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    field = cm.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    entries = field.get(cm)
+    ident = spark._jvm.System.identityHashCode
+    return {ident(cd): cd for cd in (entries.apply(i) for i in range(entries.size()))}
+
+
+def _release_held() -> None:
+    spark, caches, rdds, bcs = (_SCOPE[k] for k in ("spark", "caches", "rdds", "broadcasts"))
+    _SCOPE.update(spark=None, caches=[], rdds=set(), broadcasts=[])
+    if not _alive(spark):
+        return  # the context that owned them has stopped; so have they
+    if caches:
+        live = _dataset_caches(spark)
+        cm = spark._jsparkSession.sharedState().cacheManager()
+        for key in caches:
+            if key in live:  # not already uncached by the entry itself
+                cm.uncacheQuery(spark._jsparkSession, live[key].plan(), False, False)
+    persistent = spark.sparkContext._jsc.getPersistentRDDs()
+    for rdd_id in rdds:
+        rdd = persistent.get(rdd_id)
+        if rdd is not None:
+            rdd.unpersist(False)
+    for bc in bcs:
+        bc.destroy()
+
+
+@contextmanager
+def _scoped(spark: SparkSession, release_at_exit: bool):
+    if _SCOPE["running"]:  # an entry called from a running entry joins its scope
+        yield
+        return
+    _release_held()
+    rdds0, caches0 = _persistent_rdd_ids(spark), set(_dataset_caches(spark))
+    _SCOPE.update(running=True, spark=spark)
+    raised = True
+    try:
+        yield
+        raised = False
+    finally:
+        _SCOPE["running"] = False
+        if _alive(spark):
+            _SCOPE["rdds"] = _persistent_rdd_ids(spark) - rdds0
+            _SCOPE["caches"] = [k for k in _dataset_caches(spark) if k not in caches0]
+        if raised or release_at_exit:
+            _release_held()
+
+
+def query_scope(target):
+    """The resource scope of a registry entry.
+
+    It holds every RDD the entry persists, caches or checkpoints (the
+    diff of the context's persistent RDDs and of the session's Dataset
+    caches over the entry's run) and every broadcast it creates through
+    `broadcast`.  ``query_scope(fn)`` wraps an entry builder
+    ``fn(spark, ...)`` (``@register`` does this for every entry): its
+    holdings stay alive for the lazy plan it returns and are released
+    when the next scope starts, or at once if ``fn`` raises.  ``with
+    query_scope(spark):`` runs a block as one scope and releases its
+    holdings at exit.  A scope started while another runs joins it."""
+    if isinstance(target, SparkSession):
+        return _scoped(target, release_at_exit=True)
+
+    @functools.wraps(target)
+    def scoped_entry(spark, *args, **kwargs):
+        with _scoped(spark, release_at_exit=False):
+            return target(spark, *args, **kwargs)
+
+    return scoped_entry
+
+
+def broadcast(spark: SparkSession, value):
+    """``sparkContext.broadcast(value)``, destroyed when the running
+    scope releases its holdings (untracked when no scope runs)."""
+    bc = spark.sparkContext.broadcast(value)
+    if _SCOPE["running"]:
+        _SCOPE["broadcasts"].append(bc)
+    return bc
+
+
+@contextmanager
+def session_conf(spark: SparkSession, key: str, value: str):
+    """Set one session conf key for the block, then restore it: the
+    previous explicit value is set back, and a key that had no explicit
+    value is unset, so its default applies again.  The runtime conf is
+    session-global, so a query compiled on the same session from
+    another thread inside the block would see the override: callers
+    assume one thread per session (the registry's one-entry-at-a-time
+    contract)."""
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+
+
+def drain_stream(query, entry: str, timeout_s: int = 300) -> None:
+    """Wait for an ``availableNow`` stream to finish, always stop it,
+    and raise ``TimeoutError`` naming ``entry`` when it did not drain in
+    ``timeout_s``: a timed-out stream has processed only SOME epochs,
+    and reading its partial state would return silently-wrong results."""
+    try:
+        finished = query.awaitTermination(timeout_s)
+    finally:
+        query.stop()
+    if not finished:
+        raise TimeoutError(
+            f"{entry}: availableNow stream did not drain within {timeout_s}s; "
+            "partial state discarded"
+        )
 
 
 def register(name: str, sql: str | None = None, desc: str = ""):
     def deco(fn):
-        REGISTRY[name] = QuerySpec(name=name, fn=fn, sql=sql, desc=desc)
-        return fn
+        entry = query_scope(fn)
+        REGISTRY[name] = QuerySpec(name=name, fn=entry, sql=sql, desc=desc)
+        return entry
 
     return deco
 

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from sparkml_som_spark.functions import cosine
-from sparkml_som_spark.operators.registry import register
+from sparkml_som_spark.operators.registry import broadcast, register
 from sparkml_som_spark.sources import load_table
 
 N_QUERIES = 5
@@ -33,16 +33,15 @@ def hyperplane_buckets(
     """Random-hyperplane cosine sketches, exploded into (band, bucket)
     rows for LSH candidate generation.
 
-    Returns ``(buckets, bc_planes)`` where buckets has columns
-    (vec_id, v, band, bucket) and ``bc_planes`` is the broadcast of the
-    (dim, n_bits) plane matrix — tiny, independent of corpus size — the
-    caller destroys when done.  Signatures come from ONE GEMM per Arrow
+    Returns buckets with columns (vec_id, v, band, bucket); the
+    (dim, n_bits) plane matrix is broadcast (tiny, independent of
+    corpus size).  Signatures come from ONE GEMM per Arrow
     batch; the only per-row JVM work is bit slicing.  Shared by the ANN
     query and the embedding near-dup failover path.
     """
     spark = emb.sparkSession
     planes = np.random.default_rng(seed).standard_normal((dim, n_bits))
-    bc_planes = spark.sparkContext.broadcast(planes)
+    bc_planes = broadcast(spark, planes)
     weights = (1 << np.arange(n_bits)).astype(np.int64)
 
     @pandas_udf("long")
@@ -54,7 +53,7 @@ def hyperplane_buckets(
 
     signed = emb.withColumn("sig", sig_udf("v"))
     band_mask = (1 << band_bits) - 1
-    buckets = signed.select(
+    return signed.select(
         "vec_id",
         "v",
         F.explode(
@@ -71,7 +70,6 @@ def hyperplane_buckets(
             )
         ).alias("bk"),
     ).select("vec_id", "v", "bk.band", "bk.bucket")
-    return buckets, bc_planes
 
 
 def topk_per_query(scored: DataFrame, k: int, n_salt: int = 32) -> DataFrame:
@@ -287,7 +285,7 @@ def ann_lsh_hyperplane(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
     dim = len(emb.select("v").first()["v"])
-    buckets, bc_planes = hyperplane_buckets(emb, dim, n_bits=32, n_bands=8, band_bits=4, seed=7)
+    buckets = hyperplane_buckets(emb, dim, n_bits=32, n_bands=8, band_bits=4, seed=7)
 
     qb = (
         buckets.where(F.col("vec_id") < N_QUERIES)
@@ -305,7 +303,7 @@ def ann_lsh_hyperplane(spark: SparkSession, sf_dir: str) -> DataFrame:
     lsh_topk = topk_per_query(scored, TOP_K).select("query_id", "neighbor_id")
     from sparkml_som_spark.operators.registry import materialize_small
 
-    return materialize_small(_recall_guard(emb, lsh_topk), cleanup=(bc_planes,))
+    return materialize_small(_recall_guard(emb, lsh_topk))
 
 
 @register(
@@ -523,22 +521,12 @@ def pq_train_lloyd(
     return cbs
 
 
-def pq_encode(
-    emb: DataFrame, cbs: "np.ndarray", cleanup: list | None = None
-) -> DataFrame:
+def pq_encode(emb: DataFrame, cbs: "np.ndarray") -> DataFrame:
     """Distributed PQ encoding: (vec_id, v) -> (vec_id, v, codes
     array<int>, recon_se double).  One vectorized pass per Arrow batch
     (m small GEMM-shaped argmins), broadcast codebook — the corpus is
-    read once and never shuffled.
-
-    ``cleanup``: pass a list to receive the codebook broadcast handle
-    for release once the encoded result is materialized (the
-    `distributed_global_rank` pattern — without it every call leaks
-    one broadcast for the session)."""
-    spark = emb.sparkSession
-    bc = spark.sparkContext.broadcast(cbs)
-    if cleanup is not None:
-        cleanup.append(bc)
+    read once and never shuffled."""
+    bc = broadcast(emb.sparkSession, cbs)
     m, _k, sub = cbs.shape
 
     @pandas_udf("codes array<int>, recon_se double")
@@ -596,16 +584,13 @@ def embedding_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     `ann_pq_adc`."""
     emb = load_table(spark, sf_dir, "embeddings", spread=True)
     cbs = pq_codebooks(spark, sf_dir)
-    held: list = []
-    enc = pq_encode(emb_v(emb), cbs, cleanup=held)
+    enc = pq_encode(emb_v(emb), cbs)
     oob = F.exists("codes", lambda c: (c < 0) | (c >= _PQ_K))
     row = enc.agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.count_if(oob).alias("n_oob"),
         F.avg("recon_se").alias("mse"),
     ).collect()[0]
-    for h in held:
-        h.destroy()
     tv = variance_trace(emb)
     # a zero-variance (all-identical) corpus makes qe == trace == 0:
     # degenerate but correct — the strict inequality only applies when
@@ -681,8 +666,7 @@ def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     this size with the same per-task memory."""
     emb = emb_v(load_table(spark, sf_dir, "embeddings", spread=True))
     cbs = pq_codebooks(spark, sf_dir)
-    held: list = []
-    enc = pq_encode(emb, cbs, cleanup=held)
+    enc = pq_encode(emb, cbs)
     m, k, sub = cbs.shape
 
     q_rows = (
@@ -697,11 +681,11 @@ def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         axis=1,
     )  # (nq, m, k)
-    bc_lut = spark.sparkContext.broadcast(luts)
-    bc_cb = spark.sparkContext.broadcast(cbs)
-    bc_q = spark.sparkContext.broadcast(Q)
+    bc_lut = broadcast(spark, luts)
+    bc_cb = broadcast(spark, cbs)
+    bc_q = broadcast(spark, Q)
     qids = np.asarray([int(r["vec_id"]) for r in q_rows], dtype=np.int64)
-    bc_qids = spark.sparkContext.broadcast(qids)
+    bc_qids = broadcast(spark, qids)
 
     part_schema = (
         "qpos int, n_mis long, "
@@ -784,7 +768,7 @@ def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from sparkml_som_spark.operators.registry import materialize_small
 
-    return materialize_small(out, cleanup=(bc_lut, bc_cb, bc_q, bc_qids, *held))
+    return materialize_small(out)
 
 
 @register(
@@ -849,9 +833,8 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     cbs = pq_train_lloyd(X - cb[cells_X], m=_PQ_M, k=_PQ_K, iters=10, seed=5)
     m, k, sub = cbs.shape
 
-    spark_ctx = spark.sparkContext
-    bc_cent = spark_ctx.broadcast(cb)
-    bc_cbs = spark_ctx.broadcast(cbs)
+    bc_cent = broadcast(spark, cb)
+    bc_cbs = broadcast(spark, cbs)
 
     @pandas_udf("array<int>")
     def enc_residual(vs: pd.Series, cells: pd.Series) -> pd.Series:
@@ -886,10 +869,10 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         axis=2,
     )  # (cells, nq, m, k)
-    bc_lut = spark_ctx.broadcast(luts)
-    bc_q = spark_ctx.broadcast(Q)
-    bc_qids = spark_ctx.broadcast(qids)
-    bc_mask = spark_ctx.broadcast(probe_mask)
+    bc_lut = broadcast(spark, luts)
+    bc_q = broadcast(spark, Q)
+    bc_qids = broadcast(spark, qids)
+    bc_mask = broadcast(spark, probe_mask)
 
     part_schema = (
         "qpos int, n_mis long, "
@@ -974,6 +957,4 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from sparkml_som_spark.operators.registry import materialize_small
 
-    return materialize_small(
-        out, cleanup=(bc_cent, bc_cbs, bc_lut, bc_q, bc_qids, bc_mask)
-    )
+    return materialize_small(out)

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sparkml_som_spark.operators.registry import register
+from sparkml_som_spark.operators.registry import broadcast, query_scope, register
 from sparkml_som_spark.sources import load_table
 
 
@@ -41,35 +41,37 @@ def som_cell_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests assert cell-by-cell; the registered `som_cluster_summary`
     entry rolls the same computation into engine invariants so the
     driver can value-hash it against a DuckDB oracle."""
-    model, emb = fit_default_som(spark, sf_dir)
-    # two aggregations + a join read the transform output — persist so the
-    # pandas_udf BMU kernel runs once, not once per action
-    preds = model.transform(emb).persist()
-    label_counts = (
-        preds.groupBy("prediction", "label")
-        .agg(F.count("*").alias("n"))
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("prediction").orderBy(F.desc("n"), F.asc("label"))
-    dominant = (
-        label_counts.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") == 1)
-        .select("prediction", F.col("label").alias("dominant_label"))
-    )
-    occupancy = preds.groupBy("prediction").agg(F.count("*").alias("n_rows"))
     from sparkml_som_spark.operators.registry import materialize_small
 
-    result = (
-        occupancy.join(dominant, "prediction")
-        .select(
-            F.col("prediction").alias("cell"),
-            "n_rows",
-            "dominant_label",
+    # not a registry entry: its own scope releases `preds` on return
+    with query_scope(spark):
+        model, emb = fit_default_som(spark, sf_dir)
+        # two aggregations + a join read the transform output — persist so the
+        # pandas_udf BMU kernel runs once, not once per action
+        preds = model.transform(emb).persist()
+        label_counts = (
+            preds.groupBy("prediction", "label")
+            .agg(F.count("*").alias("n"))
         )
-        .orderBy("cell")
-    )
-    return materialize_small(result, cleanup=(preds,))
+        from pyspark.sql import Window
+
+        w = Window.partitionBy("prediction").orderBy(F.desc("n"), F.asc("label"))
+        dominant = (
+            label_counts.withColumn("rk", F.row_number().over(w))
+            .where(F.col("rk") == 1)
+            .select("prediction", F.col("label").alias("dominant_label"))
+        )
+        occupancy = preds.groupBy("prediction").agg(F.count("*").alias("n_rows"))
+        result = (
+            occupancy.join(dominant, "prediction")
+            .select(
+                F.col("prediction").alias("cell"),
+                "n_rows",
+                "dominant_label",
+            )
+            .orderBy("cell")
+        )
+        return materialize_small(result)
 
 
 @register(
@@ -120,7 +122,7 @@ def som_cluster_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from sparkml_som_spark.operators.registry import materialize_small
 
-    return materialize_small(out, cleanup=(preds,))
+    return materialize_small(out)
 
 
 def som_cell_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -129,23 +131,25 @@ def som_cell_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
     kernel pass yields prediction + distance).  Tests assert this
     cell-by-cell; the registered entry rolls it into invariants the
     driver can value-hash."""
+    from sparkml_som_spark.operators.registry import materialize_small
+
     model, emb = fit_default_som(spark, sf_dir)
     model.setDistanceCol("d2")
     try:
-        preds = model.transform(emb).select("prediction", "d2").persist()
-        from sparkml_som_spark.operators.registry import materialize_small
-
-        result = (
-            preds.groupBy("prediction")
-            .agg(
-                F.count("*").alias("n_rows"),
-                F.round(F.avg("d2"), 4).alias("avg_d2"),
-                F.round(F.max("d2"), 4).alias("max_d2"),
+        # not a registry entry: its own scope releases `preds` on return
+        with query_scope(spark):
+            preds = model.transform(emb).select("prediction", "d2").persist()
+            result = (
+                preds.groupBy("prediction")
+                .agg(
+                    F.count("*").alias("n_rows"),
+                    F.round(F.avg("d2"), 4).alias("avg_d2"),
+                    F.round(F.max("d2"), 4).alias("max_d2"),
+                )
+                .select(F.col("prediction").alias("cell"), "n_rows", "avg_d2", "max_d2")
+                .orderBy("cell")
             )
-            .select(F.col("prediction").alias("cell"), "n_rows", "avg_d2", "max_d2")
-            .orderBy("cell")
-        )
-        return materialize_small(result, cleanup=(preds,))
+            return materialize_small(result)
     finally:
         model.setDistanceCol("")  # the cached model is shared across queries
 
@@ -172,7 +176,6 @@ def som_quantization_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     either path breaks the hash.  Per-cell view: `som_cell_quantization`."""
     model, emb = fit_default_som(spark, sf_dir)
     model.setDistanceCol("d2")
-    preds = None
     try:
         preds = model.transform(emb).select("prediction", "d2").persist()
         per_cell = preds.groupBy("prediction").agg(
@@ -191,10 +194,6 @@ def som_quantization_error(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("sum_d2").alias("total_d2"),
         ).collect()[0]
     finally:
-        # unpersist on ALL exits — a failed collect must not leave the
-        # transform output pinned for the rest of the session
-        if preds is not None:
-            preds.unpersist()
         model.setDistanceCol("")  # the cached model is shared across queries
     cost = model.compute_cost(emb)
     agree = abs(row["total_d2"] - cost) <= 1e-6 * max(abs(cost), 1.0)
@@ -405,7 +404,7 @@ def som_topographic_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     cb = model.prototypes
     h, w = model.getHeight(), model.getWidth()
     grid = K.grid_distances(h, w, model.getTopology())
-    bc = spark.sparkContext.broadcast(cb)
+    bc = broadcast(spark, cb)
 
     # annotation-free: module-level `from __future__ import annotations`
     # stringifies hints and the function-local `pd` import breaks their
@@ -482,7 +481,7 @@ def som_grid_scoreboard(spark: SparkSession, sf_dir: str):
     # (tests/test_analytics34.py::test_som_cv_grid_outputs_layout_robust).
     # At production scale a multi-file layout arrives pre-spread and
     # the distributed path parallelizes by itself.
-    emb = load_table(spark, sf_dir, "embeddings").persist()
+    emb = load_table(spark, sf_dir, "embeddings")
 
     def fit_candidate(hw):
         h, w = hw
@@ -496,16 +495,16 @@ def som_grid_scoreboard(spark: SparkSession, sf_dir: str):
         )
 
     grid = [(2, 2), (3, 3), (4, 4)]
-    try:
-        # candidates are independent seeded fits — run them as
-        # concurrent jobs on the shared scheduler (the local-mode
-        # expression of a cluster's parallel model-selection sweep),
-        # reading one cached copy of the training table
+    # candidates are independent seeded fits — run them as concurrent
+    # jobs on the shared scheduler (the local-mode expression of a
+    # cluster's parallel model-selection sweep), reading one cached copy
+    # of the training table; not a registry entry, so its own scope
+    # releases that copy on return
+    with query_scope(spark):
+        emb = emb.persist()
         emb.count()
         with ThreadPoolExecutor(max_workers=len(grid)) as pool:
             rows = list(pool.map(fit_candidate, grid))
-    finally:
-        emb.unpersist()
     # tiebreak toward the simpler model: the unique winner is the
     # smallest-cell-count row among the min-QE ties
     winner = min(rows, key=lambda r: (r[3], r[2]))
@@ -607,7 +606,6 @@ def som_outlier_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     is <= 5%, and the audited total is DuckDB's COUNT(*)."""
     model, emb = fit_default_som(spark, sf_dir)
     model.setDistanceCol("d2")
-    preds = None
     try:
         preds = model.transform(emb).select("prediction", "d2").persist()
         thr = preds.groupBy("prediction").agg(
@@ -640,8 +638,6 @@ def som_outlier_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ).collect()[0]
     finally:
-        if preds is not None:
-            preds.unpersist()
         model.setDistanceCol("")  # the cached model is shared across queries
     return spark.createDataFrame(
         [tuple(row)],

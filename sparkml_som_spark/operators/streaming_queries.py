@@ -23,7 +23,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from sparkml_som_spark.operators.registry import register
+from sparkml_som_spark.operators.registry import drain_stream, register, session_conf
 from sparkml_som_spark.sources import load_table
 from sparkml_som_spark.streaming.stateful import stateful_user_profile
 from sparkml_som_spark.streaming.windows import (
@@ -70,9 +70,7 @@ def _run_to_memory(spark: SparkSession, out: DataFrame, table: str, mode: str) -
     rows with a quarter of the commits.  On a real firehose the right
     number is sized to state volume, not to this constant; it is fixed
     into the checkpoint at first start either way."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with session_conf(spark, "spark.sql.shuffle.partitions", "8"):
         q = (
             out.writeStream.format("memory")
             .queryName(table)
@@ -80,12 +78,7 @@ def _run_to_memory(spark: SparkSession, out: DataFrame, table: str, mode: str) -
             .trigger(availableNow=True)
             .start()
         )
-        try:
-            q.awaitTermination(300)
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        drain_stream(q, table)
     return spark.table(table)
 
 
@@ -519,8 +512,7 @@ def stream_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
-    q.stop()
+    drain_stream(q, "stream_foreachbatch_sink", timeout_s=120)
     back = spark.read.option("basePath", sink_dir).parquet(sink_dir)
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
@@ -588,10 +580,7 @@ def stream_incremental_dedup_index(spark: SparkSession, sf_dir: str) -> DataFram
         .trigger(availableNow=True)
         .start()
     )
-    try:
-        q.awaitTermination(300)
-    finally:
-        q.stop()
+    drain_stream(q, "stream_incremental_dedup_index")
     return (
         spark.read.parquet(index_dir)
         .groupBy("source")
@@ -685,10 +674,7 @@ def stream_decayed_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    try:
-        q.awaitTermination(300)
-    finally:
-        q.stop()
+    drain_stream(q, "stream_decayed_counters")
     rows = [
         (et, as_of, total, decayed)
         for et, (as_of, decayed, total) in sorted(state.items())
@@ -1042,10 +1028,7 @@ def stream_minhash_dedup_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(tmp, ignore_errors=True)
 
     q = stream.writeStream.foreachBatch(guard).trigger(availableNow=True).start()
-    try:
-        q.awaitTermination(300)
-    finally:
-        q.stop()
+    drain_stream(q, "stream_minhash_dedup_guard")
 
     adm = spark.read.parquet(admitted_dir).withColumn(
         "epoch", (F.col("doc_id") % 4).cast("int")

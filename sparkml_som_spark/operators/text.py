@@ -219,15 +219,10 @@ def text_langid_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("dcnt").alias("score"))
     )
     w = Window.partitionBy("doc_id").orderBy(F.desc("score"), F.asc("lang"))
-    from sparkml_som_spark.operators.registry import materialize_distributed
-
-    # per-doc result: executor-side checkpoint (NOT a driver collect)
-    # releases the doc_grams cache without pinning unbounded rows
-    return materialize_distributed(
+    return (
         scores.withColumn("rk", F.row_number().over(w))
         .where(F.col("rk") == 1)
-        .select("doc_id", F.col("lang").alias("predicted_lang"), "score"),
-        cleanup=(doc_grams,),
+        .select("doc_id", F.col("lang").alias("predicted_lang"), "score")
     )
 
 

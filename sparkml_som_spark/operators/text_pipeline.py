@@ -54,24 +54,24 @@ def text_som_topic_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     if sf_dir not in _PIPELINE_CACHE:
         _PIPELINE_CACHE[sf_dir] = build_text_som_pipeline().fit(docs)
     model = _PIPELINE_CACHE[sf_dir]
-    # persist: the full Tokenizer->TF->IDF->SOM transform chain would
-    # otherwise re-run for each of the aggregations below
-    out = model.transform(docs).select("doc_id", "source", "topic_cell").persist()
-    from pyspark.sql import Window
+    from sparkml_som_spark.operators.registry import materialize_small, query_scope
 
-    counts = out.groupBy("topic_cell", "source").agg(F.count("*").alias("n"))
-    w = Window.partitionBy("topic_cell").orderBy(F.desc("n"), F.asc("source"))
-    dominant = (
-        counts.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") == 1)
-        .select("topic_cell", F.col("source").alias("dominant_source"))
-    )
-    occupancy = out.groupBy("topic_cell").agg(F.count("*").alias("n_docs"))
-    from sparkml_som_spark.operators.registry import materialize_small
+    # not a registry entry: its own scope releases `out` on return
+    with query_scope(spark):
+        # persist: the full Tokenizer->TF->IDF->SOM transform chain would
+        # otherwise re-run for each of the aggregations below
+        out = model.transform(docs).select("doc_id", "source", "topic_cell").persist()
+        from pyspark.sql import Window
 
-    return materialize_small(
-        occupancy.join(dominant, "topic_cell").orderBy("topic_cell"), cleanup=(out,)
-    )
+        counts = out.groupBy("topic_cell", "source").agg(F.count("*").alias("n"))
+        w = Window.partitionBy("topic_cell").orderBy(F.desc("n"), F.asc("source"))
+        dominant = (
+            counts.withColumn("rk", F.row_number().over(w))
+            .where(F.col("rk") == 1)
+            .select("topic_cell", F.col("source").alias("dominant_source"))
+        )
+        occupancy = out.groupBy("topic_cell").agg(F.count("*").alias("n_docs"))
+        return materialize_small(occupancy.join(dominant, "topic_cell").orderBy("topic_cell"))
 
 
 @register(
@@ -132,4 +132,4 @@ def text_som_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from sparkml_som_spark.operators.registry import materialize_small
 
-    return materialize_small(verdict, cleanup=(out,))
+    return materialize_small(verdict)

@@ -27,3 +27,43 @@ def tables(spark, sf_dir):
     from sparkml_som_spark.sources import load_tables
 
     return load_tables(spark, sf_dir)
+
+
+# Session conf keys a registry entry must leave as it found them, both
+# the effective and the explicit value.  Not watched:
+# spark.sql.legacy.parquet.nanosAsLong — load_table sets it on every
+# `events` read, and restoring it would break an `events` DataFrame
+# loaded earlier and read later, such as the session `tables` fixture.
+WATCHED_CONF = (
+    "spark.sql.adaptive.enabled",
+    "spark.sql.shuffle.partitions",
+    "spark.sql.scripting.enabled",
+)
+
+
+def _session_state(spark):
+    ids = spark.sparkContext._jsc.sc().getPersistentRDDs().keys().mkString(",")
+    rdds = {int(i) for i in ids.split(",") if i}
+    return rdds, [(k, spark.conf.get(k), spark.conf.get(k, None)) for k in WATCHED_CONF]
+
+
+@pytest.fixture
+def assert_session_unchanged(spark):
+    """``check(name)`` after an entry's result is collected: crosses the
+    registry's scope boundary (which releases the entry's holdings) and
+    asserts the persistent RDDs and the watched conf keys are as they
+    were when the test started."""
+    from sparkml_som_spark.operators.registry import query_scope
+
+    def boundary():
+        with query_scope(spark):
+            pass
+
+    boundary()  # release what an earlier test's last entry still holds
+    before = _session_state(spark)
+
+    def check(name):
+        boundary()
+        assert _session_state(spark) == before, name
+
+    return check

@@ -22,16 +22,15 @@ def test_cross_source_overlap_consistent_with_pairs(spark, registry):
     """Sum of matrix cells == number of near-dup pairs; every cell is
     canonically ordered (source_a <= source_b) with a valid Jaccard."""
     from sparkml_som_spark.operators.dedup import _NGRAM_MAX_DF, shingle_pairs_with_jaccard
+    from sparkml_som_spark.operators.registry import query_scope
 
     docs = load_table(spark, SF, "documents")
-    held: list = []
-    n_pairs = (
-        shingle_pairs_with_jaccard(docs, n=3, max_df=_NGRAM_MAX_DF, cleanup=held)
-        .where(F.col("jaccard_raw") >= 0.8)
-        .count()
-    )
-    for h in held:
-        h.unpersist()
+    with query_scope(spark):
+        n_pairs = (
+            shingle_pairs_with_jaccard(docs, n=3, max_df=_NGRAM_MAX_DF)
+            .where(F.col("jaccard_raw") >= 0.8)
+            .count()
+        )
     cells = registry["cross_source_overlap"].fn(spark, SF).collect()
     assert sum(c["n_pairs"] for c in cells) == n_pairs
     for c in cells:

@@ -151,7 +151,7 @@ def test_som_cv_grid_outputs_layout_robust(spark, sf_dir, entry):
     sizes of the embeddings scan and compare the collected outputs."""
     from pyspark.sql import functions as F
 
-    from sparkml_som_spark.operators.registry import load_all
+    from sparkml_som_spark.operators.registry import load_all, query_scope
     from sparkml_som_spark.sources import load_table
 
     fn = load_all()[entry].fn
@@ -161,10 +161,14 @@ def test_som_cv_grid_outputs_layout_robust(spark, sf_dir, entry):
     try:
         for size in ("128m", "32k"):
             spark.conf.set(key, size)
-            emb = load_table(spark, sf_dir, "embeddings")
-            pids = emb.select(F.spark_partition_id().alias("p")).distinct().collect()
-            layouts.append((emb.rdd.getNumPartitions(), sorted(r["p"] for r in pids)))
-            outs.append(sorted(fn(spark, sf_dir).collect()))
+            # one scope per layout: an entry's Dataset caches (the grid
+            # caches the embeddings scan) would otherwise still serve this
+            # scan of the next layout until the next entry starts
+            with query_scope(spark):
+                emb = load_table(spark, sf_dir, "embeddings")
+                pids = emb.select(F.spark_partition_id().alias("p")).distinct().collect()
+                layouts.append((emb.rdd.getNumPartitions(), sorted(r["p"] for r in pids)))
+                outs.append(sorted(fn(spark, sf_dir).collect()))
     finally:
         spark.conf.set(key, before)
     assert spark.conf.get(key) == before

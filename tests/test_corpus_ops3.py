@@ -75,19 +75,18 @@ def test_distributed_global_rank_matches_window(spark, lengths, n_parts):
     from pyspark.sql import Window
 
     from sparkml_som_spark.operators.corpus_ops3 import distributed_global_rank
+    from sparkml_som_spark.operators.registry import query_scope
 
     df = spark.createDataFrame(
         [(i, v) for i, v in enumerate(lengths)], "id long, v long"
     )
-    held: list = []
-    got = {
-        r["id"]: r["rank"]
-        for r in distributed_global_rank(
-            df, [F.col("v").desc(), F.col("id").asc()], n_parts=n_parts, cleanup=held
-        ).collect()
-    }
-    for h in held:  # 10 hypothesis examples x persist would leak cache
-        h.unpersist()
+    with query_scope(spark):  # 10 hypothesis examples x persist would leak cache
+        got = {
+            r["id"]: r["rank"]
+            for r in distributed_global_rank(
+                df, [F.col("v").desc(), F.col("id").asc()], n_parts=n_parts
+            ).collect()
+        }
     w = Window.orderBy(F.col("v").desc(), F.col("id").asc())
     want = {
         r["id"]: r["rank"] - 1
@@ -105,33 +104,37 @@ def test_distributed_global_rank_single_range_shuffle(spark):
     actually sees.  An unpinned plan would re-plan the range exchange
     per action and could draw different sampled bounds."""
     from sparkml_som_spark.operators.corpus_ops3 import distributed_global_rank
+    from sparkml_som_spark.operators.registry import query_scope
 
     df = spark.createDataFrame([(i, i % 7) for i in range(100)], "id long, v long")
-    held = []
-    out = distributed_global_rank(
-        df, [F.col("v").asc(), F.col("id").asc()], n_parts=4, cleanup=held
-    )
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "InMemoryTableScan" in plan, plan
-    # the count pass resolves to the same cached relation
-    cnt_plan = held[0]._jdf.queryExecution().executedPlan().toString()
-    assert "InMemoryTableScan" in cnt_plan, cnt_plan
-    for h in held:
-        h.unpersist()
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(rdds().keySet())
+    with query_scope(spark):
+        out = distributed_global_rank(
+            df, [F.col("v").asc(), F.col("id").asc()], n_parts=4
+        )
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryTableScan" in plan, plan
+        # the count pass filled exactly one cached relation, and the
+        # assign pass reads that same relation instead of a second one
+        pinned = set(rdds().keySet()) - before
+        assert len(pinned) == 1, pinned
+        out.collect()
+        assert set(rdds().keySet()) - before == pinned
+    assert set(rdds().keySet()) == before
 
 
 def test_rank_total_out_matches_count(spark, tables):
     from pyspark.sql import functions as F
 
     from sparkml_som_spark.operators.corpus_ops3 import distributed_global_rank
+    from sparkml_som_spark.operators.registry import query_scope
 
     df = tables["documents"].select("doc_id", "n_chars")
-    held: list = []
     total: list = []
-    ranked = distributed_global_rank(
-        df, [F.col("n_chars").desc(), F.col("doc_id").asc()], cleanup=held, total_out=total
-    )
-    n = ranked.count()
-    for h in held:
-        h.unpersist()
+    with query_scope(spark):
+        ranked = distributed_global_rank(
+            df, [F.col("n_chars").desc(), F.col("doc_id").asc()], total_out=total
+        )
+        n = ranked.count()
     assert total == [n]

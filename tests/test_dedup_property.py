@@ -6,6 +6,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from sparkml_som_spark.operators.dedup import shingle_pairs_with_jaccard
+from sparkml_som_spark.operators.registry import query_scope
 
 WORDS = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta"]
 
@@ -36,10 +37,11 @@ def corpus(draw):
 )
 def test_shingle_jaccard_matches_bruteforce(spark, docs):
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    got = {
-        (r["a_id"], r["b_id"]): r["jaccard_raw"]
-        for r in shingle_pairs_with_jaccard(df, n=3).collect()
-    }
+    with query_scope(spark):
+        got = {
+            (r["a_id"], r["b_id"]): r["jaccard_raw"]
+            for r in shingle_pairs_with_jaccard(df, n=3).collect()
+        }
 
     shingles = {i: _py_shingles(t) for i, t in docs}
     want = {}
@@ -72,14 +74,15 @@ def test_embedding_cosine_path_parity(spark):
         rows.append((40 + i, noisy.tolist()))
     emb = spark.createDataFrame(rows, "vec_id long, v array<double>")
 
-    exact = {
-        (r["a_id"], r["b_id"], r["cos_sim"])
-        for r in embedding_cosine_pairs(emb, max_local_bytes=1 << 30).collect()
-    }
-    lsh = {
-        (r["a_id"], r["b_id"], r["cos_sim"])
-        for r in embedding_cosine_pairs(emb, max_local_bytes=0).collect()
-    }
+    with query_scope(spark):
+        exact = {
+            (r["a_id"], r["b_id"], r["cos_sim"])
+            for r in embedding_cosine_pairs(emb, max_local_bytes=1 << 30).collect()
+        }
+        lsh = {
+            (r["a_id"], r["b_id"], r["cos_sim"])
+            for r in embedding_cosine_pairs(emb, max_local_bytes=0).collect()
+        }
     assert len(exact) >= 8
     assert lsh == exact
 
@@ -96,7 +99,8 @@ def test_embedding_cosine_gate_skips_collect(spark, monkeypatch):
     emb = spark.createDataFrame(
         [(i, [float(i), 1.0, 0.0]) for i in range(10)], "vec_id long, v array<double>"
     )
-    D.embedding_cosine_pairs(emb, max_local_bytes=0).collect()
+    with query_scope(spark):
+        D.embedding_cosine_pairs(emb, max_local_bytes=0).collect()
 
 
 def test_ngram_df_cap_hot_shingle(spark):
@@ -116,14 +120,15 @@ def test_ngram_df_cap_hot_shingle(spark):
     ]
     df = spark.createDataFrame(docs, "doc_id long, text string")
 
-    uncapped = {
-        (r["a_id"], r["b_id"]): r["jaccard_raw"]
-        for r in shingle_pairs_with_jaccard(df, n=3).collect()
-    }
-    capped = {
-        (r["a_id"], r["b_id"]): r["jaccard_raw"]
-        for r in shingle_pairs_with_jaccard(df, n=3, max_df=5).collect()
-    }
+    with query_scope(spark):
+        uncapped = {
+            (r["a_id"], r["b_id"]): r["jaccard_raw"]
+            for r in shingle_pairs_with_jaccard(df, n=3).collect()
+        }
+        capped = {
+            (r["a_id"], r["b_id"]): r["jaccard_raw"]
+            for r in shingle_pairs_with_jaccard(df, n=3, max_df=5).collect()
+        }
 
     # hot-only pairs disappear; pairs sharing any sub-cap shingle remain
     assert (0, 1) in capped
@@ -136,10 +141,11 @@ def test_ngram_df_cap_hot_shingle(spark):
     for pair in set(uncapped) - set(capped):
         assert uncapped[pair] <= 1 / 7 + 1e-9
     # and the cap above max DF changes nothing
-    cap_high = {
-        (r["a_id"], r["b_id"]): r["jaccard_raw"]
-        for r in shingle_pairs_with_jaccard(df, n=3, max_df=64).collect()
-    }
+    with query_scope(spark):
+        cap_high = {
+            (r["a_id"], r["b_id"]): r["jaccard_raw"]
+            for r in shingle_pairs_with_jaccard(df, n=3, max_df=64).collect()
+        }
     assert cap_high == uncapped
 
 
@@ -194,11 +200,13 @@ def test_incremental_components_equals_full_recompute(spark, sf_dir):
     from sparkml_som_spark.operators.registry import load_all
 
     reg = load_all()
-    full = reg["dedup_connected_components"].fn(spark, sf_dir)
-    incr = reg["dedup_incremental_components"].fn(spark, sf_dir)
-    assert full.count() > 0
-    assert incr.exceptAll(full).count() == 0
-    assert full.exceptAll(incr).count() == 0
+    # one scope for both entries: `full` is read after `incr` starts
+    with query_scope(spark):
+        full = reg["dedup_connected_components"].fn(spark, sf_dir)
+        incr = reg["dedup_incremental_components"].fn(spark, sf_dir)
+        assert full.count() > 0
+        assert incr.exceptAll(full).count() == 0
+        assert full.exceptAll(incr).count() == 0
 
 
 def test_incremental_minhash_equals_full_restricted(spark):

@@ -18,16 +18,19 @@ def registry():
     return load_all()
 
 
-def test_all_queries_run_and_have_stable_schema(spark, registry):
+def test_all_queries_run_and_have_stable_schema(spark, registry, assert_session_unchanged):
     """Every registered query must execute and produce a deterministic,
-    non-degenerate schema at the smallest scale factor."""
+    non-degenerate schema at the smallest scale factor, and leave the
+    session as it found it once the next entry starts: no persisted
+    RDD left behind, no watched conf key changed."""
     slow = {"som_cluster_summary", "som_count_invariant", "ann_ivf_som", "dedup_simhash"}
     for name, spec in registry.items():
         if name in slow:
-            continue  # covered by dedicated tests below
+            continue  # covered by dedicated tests
         df = spec.fn(spark, SF)
         assert len(df.columns) > 0, name
         assert df.count() >= 0, name
+        assert_session_unchanged(name)
 
 
 def test_q1_aggregate_values(spark, registry):
@@ -90,26 +93,28 @@ def test_ann_bruteforce_topk_shape(spark, registry):
         assert all(r["neighbor_id"] != q for r in rs)
 
 
-def test_ann_ivf_recall_guard(spark, registry):
+def test_ann_ivf_recall_guard(spark, registry, assert_session_unchanged):
     """ann_ivf_som now RETURNS its recall guard (same contract as
     ann_lsh_hyperplane): k results per query, all inside the exact
     brute-force top-2k."""
     from sparkml_som_spark.operators.similarity import N_QUERIES, TOP_K
 
     rows = registry["ann_ivf_som"].fn(spark, SF).collect()
+    assert_session_unchanged("ann_ivf_som")
     assert len(rows) == N_QUERIES
     for r in rows:
         assert r["k_returned"] == TOP_K
         assert r["n_outside_bf_top2k"] == 0
 
 
-def test_simhash_detects_near_dups(spark, registry):
+def test_simhash_detects_near_dups(spark, registry, assert_session_unchanged):
     ngram_pairs = {
         (r["a_id"], r["b_id"]) for r in registry["dedup_ngram_jaccard"].fn(spark, SF).collect()
     }
     simhash_pairs = {
         (r["a_id"], r["b_id"]) for r in registry["dedup_simhash"].fn(spark, SF).collect()
     }
+    assert_session_unchanged("dedup_simhash")
     # simhash (hamming<=3) should overlap heavily with high-jaccard pairs
     if ngram_pairs:
         overlap = len(ngram_pairs & simhash_pairs) / len(ngram_pairs)

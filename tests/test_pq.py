@@ -8,7 +8,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from sparkml_som_spark.operators.registry import load_all
+from sparkml_som_spark.operators.registry import load_all, query_scope
 from sparkml_som_spark.sources import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -35,8 +35,8 @@ def test_pq_encode_codes_and_recon(spark):
 
     emb = S.emb_v(load_table(spark, SF, "embeddings"))
     cbs = S.pq_codebooks(spark, SF)
-    enc = S.pq_encode(emb, cbs)
-    rows = enc.select("vec_id", "codes", "recon_se").collect()
+    with query_scope(spark):
+        rows = S.pq_encode(emb, cbs).select("vec_id", "codes", "recon_se").collect()
     assert len(rows) == emb.count()
     for r in rows:
         assert len(r["codes"]) == S._PQ_M

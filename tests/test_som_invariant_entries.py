@@ -25,16 +25,23 @@ def n_emb(spark):
     return load_table(spark, SF, "embeddings").count()
 
 
-def test_som_cluster_summary_verdict(spark, registry, n_emb):
+def test_som_cluster_summary_verdict(spark, registry, n_emb, assert_session_unchanged):
     emb = load_table(spark, SF, "embeddings")
     want_checksum = emb.agg(F.sum("vec_id")).first()[0]
     row = registry["som_cluster_summary"].fn(spark, SF).collect()
+    assert_session_unchanged("som_cluster_summary")
     assert len(row) == 1
     r = row[0]
     assert r["n_rows"] == n_emb
     assert r["sum_vec_id"] == want_checksum
     assert r["n_outside_grid"] == 0
     assert r["n_cells_missing_dominant"] == 0
+
+
+def test_som_count_invariant_entry(spark, registry, n_emb, assert_session_unchanged):
+    rows = registry["som_count_invariant"].fn(spark, SF).collect()
+    assert_session_unchanged("som_count_invariant")
+    assert [r["n_rows"] for r in rows] == [n_emb]
 
 
 def test_som_cell_summary_view(spark, n_emb):
