@@ -52,7 +52,7 @@ from pyspark.sql import functions as F
 from sparkml_som_spark.functions import cosine, hash_bottom_k, norm2, word_tokens
 from sparkml_som_spark.operators.analytics28 import _BM25_QUERY
 from sparkml_som_spark.operators.analytics29 import _RRF_ORACLE, _RRF_QVEC, _RRF_TOPK
-from sparkml_som_spark.operators.registry import broadcast, drain_stream, register
+from sparkml_som_spark.operators.registry import drain_stream, register
 from sparkml_som_spark.sources import load_table
 
 # ---------------------------------------------------------------------------
@@ -483,28 +483,12 @@ def semdedup_som_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample, so soundness (n_unsound == 0) holds by construction at
     every scale, and the SQL oracle mirrors the identical sample.
     The seeded session-cached SOM makes every leg deterministic."""
-    import pandas as pd
-
-    from sparkml_som_spark.operators.som_queries import fit_default_som
-    from sparkml_som_spark.som import kernel as K
+    from sparkml_som_spark.operators.som_queries import fit_default_som, som_top2
 
     model, emb = fit_default_som(spark, sf_dir)
-    bc = broadcast(spark, model.prototypes)
-
-    def _top2(arrs):
-        import numpy as np
-
-        x = np.stack([np.asarray(v, dtype=np.float64) for v in arrs])
-        b1, b2 = K.find_bmu_top2(x, bc.value)
-        return pd.DataFrame({"bmu1": b1.astype("int32"), "bmu2": b2.astype("int32")})
-
-    top2_udf = F.pandas_udf(_top2, "bmu1 int, bmu2 int")
+    vec = F.col("embedding").cast("array<double>")
     assigned = (
-        emb.select(
-            "vec_id",
-            F.col("embedding").cast("array<double>").alias("v"),
-            top2_udf(F.col("embedding").cast("array<double>")).alias("t"),
-        )
+        emb.select("vec_id", vec.alias("v"), som_top2(spark, model, vec).alias("t"))
         .select("vec_id", "v", F.col("t.bmu1").alias("c1"), F.col("t.bmu2").alias("c2"))
         .persist()
     )

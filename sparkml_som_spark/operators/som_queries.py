@@ -34,6 +34,29 @@ def fit_default_som(spark: SparkSession, sf_dir: str):
     return _MODEL_CACHE[sf_dir], emb
 
 
+def som_top2(spark: SparkSession, model, features):
+    """(bmu1, bmu2) struct column: each row's first- and second-best
+    matching cell under `model`, from one pandas_udf over the codebook
+    broadcast through the registry (released at the entry boundary)."""
+    import pandas as pd
+
+    from sparkml_som_spark.som import kernel as K
+
+    bc = broadcast(spark, model.prototypes)
+
+    # annotation-free: module-level `from __future__ import annotations`
+    # stringifies hints and the function-local `pd` import breaks their
+    # resolution — pass returnType only
+    def _top2(arrs):
+        import numpy as np
+
+        x = np.stack([np.asarray(v, dtype=np.float64) for v in arrs])
+        b1, b2 = K.find_bmu_top2(x, bc.value)
+        return pd.DataFrame({"bmu1": b1.astype("int32"), "bmu2": b2.astype("int32")})
+
+    return F.pandas_udf(_top2, "bmu1 int, bmu2 int")(features)
+
+
 def som_cell_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-cell SOM summary (row count + dominant label) — the
     reference's entire pipeline (fit -> transform -> summarize) as one
@@ -162,18 +185,20 @@ def som_cell_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
            TRUE                     AS cost_paths_agree
     FROM embeddings
     """,
-    desc="quantization error via distanceCol, pinned by cross-path invariants (transform d2 totals == computeCost) under full oracle",
+    desc="quantization error via distanceCol, pinned by row-preservation, null-row and per-cell vs global d2 sum invariants under full oracle",
 )
 def som_quantization_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quantization error under the FULL value hash.  The per-cell
     numbers are not SQL-derivable, but three conservation laws are:
-    (1) the distanceCol pass preserves every row (count == table
-    count); (2) per-cell aggregates are internally consistent
-    (0 <= avg_d2 <= max_d2 everywhere); (3) the transform's summed d2
-    equals `model.compute_cost` — two INDEPENDENT kernel invocations
-    (transform path vs cost path, ref `SOMModel.scala:92-97`) must
-    agree to 1e-6 relative, so a clamping or batch-handling bug in
-    either path breaks the hash.  Per-cell view: `som_cell_quantization`."""
+    (1) the distanceCol pass preserves every row, null-feature rows
+    included (count == table count); (2) per-cell aggregates are
+    internally consistent (0 <= avg_d2 <= max_d2 everywhere); (3) the
+    per-cell d2 sums add up to `model.compute_cost`, the global sum of
+    the same per-row d2 (one scoring UDF serves both, as the reference's
+    `findClosest` does, `SOMModel.scala:79-97`; a null row adds nothing
+    to either) — agreement to 1e-6 relative, so a grouping bug that
+    drops or double-counts rows breaks the hash.  Per-cell view:
+    `som_cell_quantization`."""
     model, emb = fit_default_som(spark, sf_dir)
     model.setDistanceCol("d2")
     try:
@@ -396,39 +421,22 @@ def som_topographic_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     per Arrow batch from the broadcast codebook; adjacency is decided
     JVM-side against the broadcast (cell, cell) neighbor pair set, and
     one global aggregate returns a single row."""
-    import pandas as pd
+    import numpy as np
 
     from sparkml_som_spark.som import kernel as K
 
     model, emb = fit_default_som(spark, sf_dir)
-    cb = model.prototypes
     h, w = model.getHeight(), model.getWidth()
     grid = K.grid_distances(h, w, model.getTopology())
-    bc = broadcast(spark, cb)
-
-    # annotation-free: module-level `from __future__ import annotations`
-    # stringifies hints and the function-local `pd` import breaks their
-    # resolution (see memory: pandas_udf pitfalls) — pass returnType only
-    def _top2(arrs):
-        import numpy as np
-
-        x = np.stack([np.asarray(v, dtype=np.float64) for v in arrs])
-        b1, b2 = K.find_bmu_top2(x, bc.value)
-        return pd.DataFrame({"bmu1": b1.astype("int32"), "bmu2": b2.astype("int32")})
-
-    top2_udf = F.pandas_udf(_top2, "bmu1 int, bmu2 int")
-
-    import numpy as np
-
     adj_pairs = [
         (int(a), int(b)) for a in range(h * w) for b in np.flatnonzero(grid[a] == 1)
     ]
     adj = spark.createDataFrame(adj_pairs, "bmu1 int, bmu2 int").withColumn(
         "is_adj", F.lit(1)
     )
-    top2 = emb.select(top2_udf(F.col("embedding").cast("array<double>")).alias("t")).select(
-        "t.bmu1", "t.bmu2"
-    )
+    top2 = emb.select(
+        som_top2(spark, model, F.col("embedding").cast("array<double>")).alias("t")
+    ).select("t.bmu1", "t.bmu2")
     joined = top2.join(F.broadcast(adj), ["bmu1", "bmu2"], "left")
     te = F.avg(F.when(F.col("is_adj").isNull(), 1.0).otherwise(0.0))
     return joined.agg(
@@ -678,8 +686,8 @@ def som_per_label_models(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cluster parallelizes ACROSS models instead of within one.  The
     group fit reuses the exact distributed-kernel module
     (`som/kernel.py`: grid_distances / temperature / neighborhood /
-    find_bmu / smooth_update), so the local and distributed training
-    paths cannot drift apart.
+    partial_aggregate / smooth_update), so the local and distributed
+    training paths cannot drift apart.
 
     Determinism: rows are sorted by vec_id inside each group before
     the seeded with-replacement init (group arrival order is
@@ -709,11 +717,7 @@ def som_per_label_models(spark: SparkSession, sf_dir: str) -> DataFrame:
         grid_d = K.grid_distances(h, w, "rectangular")
         for it in range(iters):
             temp = K.temperature(it, iters, 3.0, 0.5, "exponential")
-            bmu, _d2 = K.find_bmu(X, cb)
-            sums = np.zeros_like(cb)
-            counts = np.zeros(h * w, dtype=np.int64)
-            np.add.at(sums, bmu, X)
-            np.add.at(counts, bmu, 1)
+            sums, counts, _cost = K.partial_aggregate(X, cb, h * w)
             cb = K.smooth_update(cb, sums, counts, K.neighborhood(grid_d, temp, "gaussian"))
         _bmu, d2 = K.find_bmu(X, cb)
         qe = float(d2.mean())

@@ -10,17 +10,24 @@ Spark-first terms:
   enough for the driver crosses to it in one Arrow pass (`toArrow`)
   and trains there, its init rows drawn locally; the distributed and
   sparse paths decode through RDD `mapPartitions` blocks persisted
-  MEMORY_AND_DISK and draw the init with RDD `takeSample`,
-- partial aggregation runs per partition (the reference's
-  mapPartitions combiner, `SOM.scala:192-209`) and combines via
-  ``treeAggregate`` (depth 2) — the bounded-key `reduceByKey` analog
-  (`SOM.scala:209-212`) with O(sqrt(P)) driver fan-in,
+  MEMORY_AND_DISK and draw the init with RDD `takeSample`.  Sparse
+  vectors become CSR blocks through one builder (`_csr_block`),
+- one fold step (`_fold_step`) adds a block's (sums, counts, cost) to
+  the iteration's accumulator: the local path reduces it over the
+  driver's blocks, the distributed path hands it to ``aggregate`` (or
+  ``treeAggregate``, depth 2, past 256 partitions) — the reference's
+  mapPartitions combiner and bounded-key `reduceByKey`
+  (`SOM.scala:192-212`),
 - the codebook is an explicit per-iteration broadcast
   (`SOM.scala:182`), destroyed afterwards,
 - cost comes out of the same reduce rather than an accumulator
   (accumulators can double-count on task retries; a reduce cannot),
-- inference (`transform`) stays fully in the DataFrame API via an
-  Arrow-vectorized pandas_udf, so it composes with any downstream plan.
+- scoring has one path, as the reference's single `findClosest` serves
+  both `transform` and `computeCost` (`SOMModel.scala:79-97`): one
+  Arrow-vectorized pandas_udf (`SOMModel._bmu`) yields each row's
+  (prediction, distance), `transform` appends its fields and
+  `compute_cost` sums its distance, so inference stays in the
+  DataFrame API and composes with any downstream plan.
 
 Scale notes (100 TB north star): per-iteration driver traffic is one
 (n_cells, dim) float64 array per tree-combine leg — independent of data
@@ -34,6 +41,8 @@ import os
 import random
 import sys
 import time
+from functools import partial, reduce
+from typing import Union
 
 import numpy as np
 import pandas as pd
@@ -51,7 +60,7 @@ from pyspark.ml.util import (
     MLWriter,
 )
 from pyspark.rddsampler import RDDSampler
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
@@ -60,23 +69,32 @@ from sparkml_som_spark.som import kernel as K
 from sparkml_som_spark.som.params import SOMParams
 from sparkml_som_spark.som.summary import SOMTrainingSummary
 
-def _features_as_array(df: DataFrame, col: str) -> DataFrame:
-    """Normalize the features column to array<double> named `__features`.
+def _is_vector(df: DataFrame, col: str) -> bool:
+    return df.schema[col].dataType.typeName() in ("vector", "vectorudt")
+
+
+def _features_expr(df: DataFrame, col: str) -> Column:
+    """The features column as array<double>.
 
     Accepts array<float/double> (preferred, Arrow-friendly) or
     ml VectorUDT (adapter via vector_to_array) — the reference only
-    accepted ml.linalg.Vector (`SOM.scala:84-86`).
+    accepted ml.linalg.Vector (`SOM.scala:84-86`).  Any other type
+    raises TypeError here, before a job runs.
     """
     dtype = df.schema[col].dataType
     if isinstance(dtype, T.ArrayType):
-        expr = F.col(col).cast(T.ArrayType(T.DoubleType()))
-    elif dtype.typeName() in ("vector", "vectorudt"):
-        expr = vector_to_array(F.col(col)).cast(T.ArrayType(T.DoubleType()))
-    else:
-        raise TypeError(
-            f"featuresCol {col!r} must be array<numeric> or ml Vector, got {dtype.simpleString()}"
-        )
-    return df.select(expr.alias("__features")).filter(F.col("__features").isNotNull())
+        return F.col(col).cast(T.ArrayType(T.DoubleType()))
+    if _is_vector(df, col):
+        return vector_to_array(F.col(col)).cast(T.ArrayType(T.DoubleType()))
+    raise TypeError(
+        f"featuresCol {col!r} must be array<numeric> or ml Vector, got {dtype.simpleString()}"
+    )
+
+
+def _features_as_array(df: DataFrame, col: str) -> DataFrame:
+    """The non-null features as one array<double> column `__features`."""
+    feats = df.select(_features_expr(df, col).alias("__features"))
+    return feats.filter(F.col("__features").isNotNull())
 
 
 def _batch_matrix(series: pd.Series) -> np.ndarray:
@@ -144,80 +162,66 @@ def _sparse_rows_df(df: DataFrame, col: str) -> DataFrame:
     )
 
 
-def _row_nnz(r) -> tuple[np.ndarray, np.ndarray]:
-    """Unwrapped vector row -> (indices, values) of its nonzeros.
-    type 1 = dense encoding, type 0 = sparse encoding."""
-    if r["type"] == 1:
-        v = np.asarray(r["values"], dtype=np.float64)
-        nz = np.flatnonzero(v)
-        return nz.astype(np.int64), v[nz]
-    return (
-        np.asarray(r["indices"], dtype=np.int64),
-        np.asarray(r["values"], dtype=np.float64),
-    )
-
-
 def _row_dense(r, dim: int) -> np.ndarray:
-    """Unwrapped vector row -> dense float64 vector."""
+    """Unwrapped vector row -> dense float64 vector, values as stored.
+    Not a `_csr_block` round trip: that drops a dense row's zeros, so a
+    stored -0.0 would come back +0.0 and change the init codebook."""
     if r["type"] == 1:
         return np.asarray(r["values"], dtype=np.float64)
     v = np.zeros(dim, dtype=np.float64)
-    idx, vals = _row_nnz(r)
-    v[idx] = vals
+    v[np.asarray(r["indices"], dtype=np.int64)] = np.asarray(r["values"], dtype=np.float64)
     return v
 
 
-def _pdf_sparse_block(u: pd.DataFrame, dim: int):
-    """pandas batch of unwrapped vector structs -> (CSR block over the
-    valid rows, positions of those rows).  Null vectors (null struct ->
-    null `type`) are excluded and surface as null predictions."""
-    types = u["type"]
+def _csr_block(types, sizes, indices, values, dim: int | None = None):
+    """Unwrapped vector columns (type, size, indices, values) -> (CSR
+    block tuple (kernel.SparseBlock) over the non-null rows, positions
+    of those rows).
+
+    type 1 = dense encoding (its nonzeros are kept), type 0 = sparse
+    encoding (its stored entries are kept as they are); a null type is
+    a null vector and is skipped.  ``dim`` defaults to the widest row."""
     indptr = [0]
-    idx_chunks: list[np.ndarray] = []
-    val_chunks: list[np.ndarray] = []
+    idx_chunks = [np.empty(0, dtype=np.int64)]
+    val_chunks = [np.empty(0, dtype=np.float64)]
     valid: list[int] = []
-    for i in range(len(u)):
-        if pd.isna(types.iloc[i]):
+    width = 0
+    for i, (t, s, ix, v) in enumerate(zip(types, sizes, indices, values)):
+        if pd.isna(t):
             continue
-        if types.iloc[i] == 1:
-            v = np.asarray(u["values"].iloc[i], dtype=np.float64)
-            nz = np.flatnonzero(v)
-            idx_chunks.append(nz.astype(np.int64))
-            val_chunks.append(v[nz])
+        v = np.asarray(v, dtype=np.float64)
+        if t == 1:
+            width = max(width, len(v))
+            ix = np.flatnonzero(v)
+            v = v[ix]
         else:
-            idx_chunks.append(np.asarray(u["indices"].iloc[i], dtype=np.int64))
-            val_chunks.append(np.asarray(u["values"].iloc[i], dtype=np.float64))
-        indptr.append(indptr[-1] + len(idx_chunks[-1]))
+            width = max(width, int(s))
+        idx_chunks.append(np.asarray(ix, dtype=np.int64))
+        val_chunks.append(v)
+        indptr.append(indptr[-1] + len(v))
         valid.append(i)
     block = (
         np.asarray(indptr, dtype=np.int64),
-        np.concatenate(idx_chunks) if idx_chunks else np.empty(0, np.int64),
-        np.concatenate(val_chunks) if val_chunks else np.empty(0, np.float64),
+        np.concatenate(idx_chunks),
+        np.concatenate(val_chunks),
         len(valid),
-        dim,
+        width if dim is None else dim,
     )
     return block, np.asarray(valid, dtype=np.int64)
 
 
-def _to_sparse_block(rows, dim: int):
-    """Partition iterator of unwrapped vector rows -> ONE CSR block
-    tuple (kernel.SparseBlock).  The sparse twin of `_to_block`."""
-    indptr = [0]
-    idx_chunks: list[np.ndarray] = []
-    val_chunks: list[np.ndarray] = []
-    for r in rows:
-        idx, vals = _row_nnz(r)
-        idx_chunks.append(idx)
-        val_chunks.append(vals)
-        indptr.append(indptr[-1] + len(idx))
-    if len(indptr) > 1:
-        yield (
-            np.asarray(indptr, dtype=np.int64),
-            np.concatenate(idx_chunks) if idx_chunks else np.empty(0, np.int64),
-            np.concatenate(val_chunks) if val_chunks else np.empty(0, np.float64),
-            len(indptr) - 1,
-            dim,
-        )
+def _fold_step(acc, block, bc=None, codebook=None):
+    """One training iteration's fold step ``(acc, block) -> acc``: add
+    the block's (sums, counts, cost) against the codebook — held
+    directly, or through the broadcast `bc` — to the accumulator."""
+    cb = np.ascontiguousarray(bc.value if bc is not None else codebook)
+    cn2 = np.einsum("ij,ij->i", cb, cb)
+    s, c, co = K.aggregate_block(block, cb, len(cb), cn2)
+    return (acc[0] + s, acc[1] + c, acc[2] + co)
+
+
+def _combine(a, b):
+    return (a[0] + b[0], a[1] + b[1], a[2] + b[2])
 
 
 class SOM(Estimator, SOMParams, DefaultParamsWritable, DefaultParamsReadable):
@@ -311,23 +315,13 @@ class SOM(Estimator, SOMParams, DefaultParamsWritable, DefaultParamsReadable):
     def _sparse_stats(self, dataset: DataFrame, col: str) -> tuple[int, float] | None:
         """(dim, density) estimated from a bounded sample of a VectorUDT
         column; None for array columns (always dense)."""
-        if dataset.schema[col].dataType.typeName() not in ("vector", "vectorudt"):
+        if not _is_vector(dataset, col):
             return None
         rows = _sparse_rows_df(dataset, col).limit(self._SPARSE_SAMPLE_ROWS).collect()
         if not rows:
             return None
-        nnz = tot = dim = 0
-        for r in rows:
-            if r["type"] == 1:
-                v = np.asarray(r["values"])
-                dim = max(dim, len(v))
-                nnz += int(np.count_nonzero(v))
-                tot += len(v)
-            else:
-                dim = max(dim, int(r["size"]))
-                nnz += len(r["values"])
-                tot += int(r["size"])
-        return dim, (nnz / tot if tot else 1.0)
+        (indptr, _, _, n, dim), _ = _csr_block(*zip(*rows))
+        return dim, (int(indptr[-1]) / (n * dim) if dim else 1.0)
 
     def _init_codebook(self, feats: DataFrame, sparse_dim: int | None = None) -> np.ndarray:
         """Random init: height*width samples WITH replacement, seeded
@@ -402,7 +396,9 @@ class SOM(Estimator, SOMParams, DefaultParamsWritable, DefaultParamsReadable):
         # ~2x per-iteration overhead re-decoding the same rows).
         if use_sparse:
             def _to_block(rows, _d=sparse_dim):
-                yield from _to_sparse_block(rows, _d)
+                cols = list(zip(*rows))
+                if cols:
+                    yield _csr_block(*cols, dim=_d)[0]
         else:
             def _to_block(rows):
                 buf = [r[0] for r in rows]
@@ -482,6 +478,7 @@ class SOM(Estimator, SOMParams, DefaultParamsWritable, DefaultParamsReadable):
 
         grid_d = K.grid_distances(h, w, self.getTopology())
         history: list[float] = []
+        movement: list[float] = []
         it = 0
         converged = False
         # Small codebooks ride the task closure (cheaper than creating and
@@ -489,55 +486,39 @@ class SOM(Estimator, SOMParams, DefaultParamsWritable, DefaultParamsReadable):
         # per iteration so executors fetch them a single time.
         use_broadcast = codebook.nbytes >= 1 << 20
 
+        # Partial aggregation per block (reference mapPartitions,
+        # SOM.scala:192-209) + combine (the bounded reduceByKey analog,
+        # SOM.scala:209-212).  Single-stage aggregate while the driver
+        # fan-in is small; tree combine (depth 2, O(sqrt(P)) fan-in) once
+        # the partition count would swamp the driver — the extra stage
+        # costs a full job-launch latency, so it must not be paid on
+        # small clusters.
+        if blocks is None:
+            fold = None
+        elif blocks.getNumPartitions() <= 256:
+            fold = blocks.aggregate
+        else:
+            fold = partial(blocks.treeAggregate, depth=2)
+        # the fold step and the combine return new arrays, never mutate
+        # their inputs, so one zero serves every iteration
+        zero = (np.zeros((n_cells, dim), dtype=np.float64), np.zeros(n_cells, dtype=np.int64), 0.0)
+
         n_samples_trained = -1
         while it < max_iter and not converged:
             temp = K.temperature(it, max_iter, t_max, t_min, decay)
-            if local_blocks is not None:
-                cb = np.ascontiguousarray(codebook)
-                cn2 = np.einsum("ij,ij->i", cb, cb)
-                sums = np.zeros((n_cells, dim), dtype=np.float64)
-                counts = np.zeros(n_cells, dtype=np.int64)
-                cost = 0.0
-                for blk in local_blocks:
-                    s, c, co = K.aggregate_block(blk, cb, n_cells, cn2)
-                    sums += s
-                    counts += c
-                    cost += co
+            bc = sc.broadcast(codebook) if fold is not None and use_broadcast else None
+            step = partial(_fold_step, bc=bc, codebook=None if bc is not None else codebook)
+            if fold is None:
+                sums, counts, cost = reduce(step, local_blocks, zero)
             else:
-                bc = sc.broadcast(codebook) if use_broadcast else None
-                cb_direct = None if use_broadcast else codebook
-
-                def seq_op(acc, block, _bc=bc, _cb=cb_direct, _n=n_cells):
-                    cb = np.ascontiguousarray(_bc.value if _bc is not None else _cb)
-                    cn2 = np.einsum("ij,ij->i", cb, cb)
-                    s, c, co = K.aggregate_block(block, cb, _n, cn2)
-                    return (acc[0] + s, acc[1] + c, acc[2] + co)
-
-                def comb_op(a, b):
-                    return (a[0] + b[0], a[1] + b[1], a[2] + b[2])
-
-                zero = (
-                    np.zeros((n_cells, dim), dtype=np.float64),
-                    np.zeros(n_cells, dtype=np.int64),
-                    0.0,
-                )
-                # Partial aggregation per partition (reference mapPartitions,
-                # SOM.scala:192-209) + combine (the bounded reduceByKey analog,
-                # SOM.scala:209-212). Single-stage aggregate while the driver
-                # fan-in is small; tree combine (depth 2, O(sqrt(P)) fan-in)
-                # once partition count would swamp the driver — the extra
-                # stage costs a full job-launch latency, so it must not be
-                # paid on small clusters.
-                if blocks.getNumPartitions() <= 256:
-                    sums, counts, cost = blocks.aggregate(zero, seq_op, comb_op)
-                else:
-                    sums, counts, cost = blocks.treeAggregate(zero, seq_op, comb_op, depth=2)
-                if bc is not None:
-                    bc.destroy()
+                sums, counts, cost = fold(zero, step, _combine)
+            if bc is not None:
+                bc.destroy()
 
             weights = K.neighborhood(grid_d, temp, kern)
             new_codebook = K.smooth_update(codebook, sums, counts, weights)
-            converged = K.max_movement2(codebook, new_codebook) <= tol * tol
+            movement.append(K.max_movement2(codebook, new_codebook))
+            converged = movement[-1] <= tol * tol
             codebook = new_codebook
             history.append(cost)
             # conservation anchor: every BMU assignment lands in exactly
@@ -569,6 +550,7 @@ class SOM(Estimator, SOMParams, DefaultParamsWritable, DefaultParamsReadable):
             temperature_decay=decay,
             training_cost=history[-1] if history else float("nan"),
             objective_history=history,
+            movement_history=movement,
             n_samples=n_samples_trained,
             # wall seconds per fit phase; a sparse or distributed fit's
             # block build after the init counts as ingest
@@ -648,82 +630,65 @@ class SOMModel(Model, SOMParams, MLWritable):
     def has_summary(self) -> bool:
         return self.summary is not None
 
-    def _bmu_udf(self, spark: SparkSession):
-        bc = spark.sparkContext.broadcast(self.prototypes)
-
-        @F.pandas_udf("prediction int, distance double")
-        def predict_udf(arrs: pd.Series) -> pd.DataFrame:
-            cb = np.ascontiguousarray(bc.value)
-            cn2 = np.einsum("ij,ij->i", cb, cb)
-            # null features -> null prediction/distance (fit drops nulls;
-            # transform must not crash and must preserve the row count)
-            valid = arrs.notna().to_numpy()
-            pred = pd.array([pd.NA] * len(arrs), dtype="Int32")
-            dist = pd.array([pd.NA] * len(arrs), dtype="Float64")
-            if valid.any():
-                x = _batch_matrix(arrs[valid])
-                idx, d2 = K.find_bmu(x, cb, cn2)
-                pred[valid] = idx.astype(np.int32)
-                dist[valid] = d2
-            return pd.DataFrame({"prediction": pred, "distance": dist})
-
-        return predict_udf
-
-    def _features_expr(self, df: DataFrame):
+    def _bmu(self, dataset: DataFrame) -> Column:
+        """Each row's BMU as a (prediction, distance) struct column — the
+        one scoring path behind `transform` and `compute_cost`, like the
+        reference's single `findClosest` (`SOMModel.scala:79-97`).  The
+        codebook rides an explicit broadcast (the reference shipped it
+        in the UDF closure per task).  A sparse-trained model scores a
+        VectorUDT column from its unwrap_udt struct, so Arrow moves nnz
+        entries and the kernel is the CSR bincount path — a d=2^18
+        TF-IDF batch never densifies.  Null features yield a null
+        struct field pair (fit drops nulls; scoring must not crash and
+        must keep the row)."""
+        bc = dataset.sparkSession.sparkContext.broadcast(self.prototypes)
         col = self.getOrDefault(self.featuresCol)
-        dtype = df.schema[col].dataType
-        if isinstance(dtype, T.ArrayType):
-            return F.col(col).cast(T.ArrayType(T.DoubleType()))
-        return vector_to_array(F.col(col)).cast(T.ArrayType(T.DoubleType()))
+        if self._sparse_inference and _is_vector(dataset, col):
+            dim = int(self.prototypes.shape[1])
+            feats, find = F.unwrap_udt(F.col(col)), K.find_bmu_sparse
 
-    def _use_sparse_inference(self, df: DataFrame) -> bool:
-        col = self.getOrDefault(self.featuresCol)
-        return (
-            self._sparse_inference
-            and df.schema[col].dataType.typeName() in ("vector", "vectorudt")
-        )
+            def decode(u):
+                return _csr_block(u["type"], u["size"], u["indices"], u["values"], dim)
 
-    def _bmu_udf_sparse(self, spark: SparkSession):
-        """Sparse twin of `_bmu_udf`: consumes the unwrap_udt struct, so
-        Arrow moves nnz entries instead of d-length dense rows, and the
-        kernel is the CSR bincount path — a d=2^18 TF-IDF batch never
-        densifies."""
-        bc = spark.sparkContext.broadcast(self.prototypes)
-        dim = int(self.prototypes.shape[1])
+        else:
+            feats, find = _features_expr(dataset, col), K.find_bmu
 
+            def decode(arrs):
+                valid = arrs.notna().to_numpy()
+                x = _batch_matrix(arrs[valid]) if valid.any() else None
+                return x, np.flatnonzero(valid)
+
+        # typing.Union: pandas_udf reads the hint and recognizes Union,
+        # not the `X | Y` form
         @F.pandas_udf("prediction int, distance double")
-        def predict_sparse(u: pd.DataFrame) -> pd.DataFrame:
+        def predict_udf(batch: Union[pd.Series, pd.DataFrame]) -> pd.DataFrame:
             cb = np.ascontiguousarray(bc.value)
-            cn2 = np.einsum("ij,ij->i", cb, cb)
-            block, valid = _pdf_sparse_block(u, dim)
-            pred = pd.array([pd.NA] * len(u), dtype="Int32")
-            dist = pd.array([pd.NA] * len(u), dtype="Float64")
-            if valid.size:
-                idx, d2 = K.find_bmu_sparse(block, cb, cn2)
-                pred[valid] = idx.astype(np.int32)
-                dist[valid] = d2
-            return pd.DataFrame({"prediction": pred, "distance": dist})
+            block, rows = decode(batch)
+            pred = np.zeros(len(batch), dtype=np.int32)
+            dist = np.zeros(len(batch), dtype=np.float64)
+            missing = np.ones(len(batch), dtype=bool)
+            if rows.size:
+                pred[rows], dist[rows] = find(block, cb, np.einsum("ij,ij->i", cb, cb))
+                missing[rows] = False
+            return pd.DataFrame(
+                {
+                    "prediction": pd.arrays.IntegerArray(pred, missing),
+                    "distance": pd.arrays.FloatingArray(dist, missing),
+                }
+            )
 
-        return predict_sparse
+        return predict_udf(feats)
 
     def _transform(self, dataset: DataFrame) -> DataFrame:
-        """Append the BMU index column (reference `SOMModel.scala:76-81`),
-        via a vectorized pandas_udf against an explicit broadcast — the
-        reference shipped prototypes in the UDF closure per-task. The
-        optional distanceCol (an extension) emits the squared distance to
-        the BMU from the same kernel pass."""
+        """Append the BMU index column (reference `SOMModel.scala:76-81`)
+        and the optional distanceCol (an extension: the squared distance
+        to the BMU from the same kernel pass)."""
         pred_col = self.getOrDefault(self.predictionCol)
         dist_col = self.getDistanceCol()
         if not pred_col and not dist_col:
             # empty names disable output (SchemaUtils.scala:90)
             return dataset
-        if self._use_sparse_inference(dataset):
-            udf = self._bmu_udf_sparse(dataset.sparkSession)
-            feat_in = F.unwrap_udt(F.col(self.getOrDefault(self.featuresCol)))
-        else:
-            udf = self._bmu_udf(dataset.sparkSession)
-            feat_in = self._features_expr(dataset)
-        out = dataset.withColumn("__bmu", udf(feat_in))
+        out = dataset.withColumn("__bmu", self._bmu(dataset))
         if pred_col:
             out = out.withColumn(pred_col, F.col("__bmu.prediction"))
         if dist_col:
@@ -737,46 +702,11 @@ class SOMModel(Model, SOMParams, MLWritable):
         return int(idx[0])
 
     def compute_cost(self, dataset: DataFrame) -> float:
-        """Sum of squared distances to BMU (reference `SOMModel.scala:92-97`).
-        Map + global sum: no shuffle."""
-        spark = dataset.sparkSession
-        bc = spark.sparkContext.broadcast(self.prototypes)
-
-        if self._use_sparse_inference(dataset):
-            dim = int(self.prototypes.shape[1])
-
-            @F.pandas_udf(T.DoubleType())
-            def min_d2_sparse(u: pd.DataFrame) -> pd.Series:
-                cb = np.ascontiguousarray(bc.value)
-                cn2 = np.einsum("ij,ij->i", cb, cb)
-                block, valid = _pdf_sparse_block(u, dim)
-                out = np.zeros(len(u))  # null features contribute zero cost
-                if valid.size:
-                    _, d2 = K.find_bmu_sparse(block, cb, cn2)
-                    out[valid] = d2
-                return pd.Series(out)
-
-            expr = min_d2_sparse(
-                F.unwrap_udt(F.col(self.getOrDefault(self.featuresCol)))
-            )
-        else:
-
-            @F.pandas_udf(T.DoubleType())
-            def min_d2(arrs: pd.Series) -> pd.Series:
-                cb = np.ascontiguousarray(bc.value)
-                cn2 = np.einsum("ij,ij->i", cb, cb)
-                valid = arrs.notna().to_numpy()
-                out = np.zeros(len(arrs))  # null features contribute zero cost
-                if valid.any():
-                    x = _batch_matrix(arrs[valid])
-                    _, d2 = K.find_bmu(x, cb, cn2)
-                    out[valid] = d2
-                return pd.Series(out)
-
-            expr = min_d2(self._features_expr(dataset))
-
-        row = dataset.select(F.sum(expr).alias("cost")).first()
-        return float(row["cost"])
+        """Sum of squared distances to BMU (reference `SOMModel.scala:92-97`):
+        the sum of `transform`'s distances, from the same UDF; null
+        features add nothing.  Map + global sum: no shuffle."""
+        cost = F.coalesce(F.sum(self._bmu(dataset)["distance"]), F.lit(0.0))
+        return float(dataset.select(cost).first()[0])
 
     computeCost = compute_cost  # reference-style alias
 

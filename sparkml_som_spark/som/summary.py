@@ -23,6 +23,9 @@ class SOMTrainingSummary:
     temperature_decay: str
     training_cost: float
     objective_history: list[float] = field(default_factory=list)
+    # max squared prototype displacement of each iteration (the value the
+    # `tol` stop compares with tol^2), one per objective_history entry
+    movement_history: list[float] = field(default_factory=list)
     # rows the final training aggregation actually consumed (sum of
     # per-cell BMU counts) — a data-derived conservation anchor for
     # oracle checks; -1 when no iteration ran (maxIter=0)

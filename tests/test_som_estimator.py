@@ -53,11 +53,15 @@ def test_seed_determinism(spark, small_df):
 def test_compute_cost_matches_summary(spark, small_df):
     som = SOM(height=2, width=2, maxIter=4, seed=5, tol=0.0)
     model = som.fit(small_df)
-    # summary cost was computed against the pre-update codebook of the last
-    # iteration; compute_cost against the final codebook must be <= ~that
     cost = model.compute_cost(small_df)
     assert cost > 0
-    assert cost <= model.summary.objective_history[-1] * (1 + 1e-6) or True
+    # compute_cost is the sum of transform's distanceCol, bit for bit; a
+    # null row keeps a null distance and adds nothing to the cost
+    with_null = small_df.union(spark.createDataFrame([(None,)], "features array<double>"))
+    model.setDistanceCol("d2")
+    total = model.transform(with_null).agg(F.sum("d2")).first()[0]
+    model.setDistanceCol("")
+    assert model.compute_cost(with_null).hex() == total.hex()
     # invariant: cost equals sum of min squared distances computed locally
     local = np.stack([r["features"] for r in small_df.collect()])
     d2 = ((local[:, None, :] - model.prototypes[None, :, :]) ** 2).sum(axis=2)
@@ -409,3 +413,30 @@ def test_warm_start_on_empty_input_keeps_initial_model(spark, small_df):
     assert m1.prototypes.tobytes() == m0.prototypes.tobytes()
     assert m1.summary.objective_history == [0.0]
     assert m1.summary.n_samples == 0
+
+
+def test_features_col_type_checked_at_call(spark, small_df):
+    """A features column that is neither array<numeric> nor an ml Vector
+    fails when transform / compute_cost / fit is called, with the same
+    TypeError, not later inside a Spark task."""
+    model = SOM(height=2, width=2, maxIter=1, seed=1).fit(small_df)
+    bad = spark.createDataFrame([("0.5,0.5,0.5",)], "features string")
+    calls = (model.transform, model.compute_cost, SOM(height=2, width=2).fit)
+    for call in calls:
+        with pytest.raises(TypeError, match="must be array<numeric> or ml Vector"):
+            call(bad)
+
+
+def test_movement_history_records_each_iteration(spark, small_df):
+    """`summary.movement_history` holds each iteration's max squared
+    prototype displacement: one per iteration, and on a fit stopped by
+    `tol` the last one is the value that met tol^2."""
+    fixed = SOM(height=2, width=2, maxIter=5, seed=5, tol=0.0).fit(small_df)
+    assert len(fixed.summary.movement_history) == fixed.summary.iterations == 5
+
+    tol = 1e-3
+    model = SOM(height=2, width=2, maxIter=100, seed=5, tol=tol, tMax=1.0, tMin=0.5).fit(small_df)
+    moves = model.summary.movement_history
+    assert len(moves) == model.summary.iterations < 100
+    assert moves[-1] <= tol * tol
+    assert all(m > tol * tol for m in moves[:-1])

@@ -91,6 +91,24 @@ def test_forced_sparse_path_parity(spark, monkeypatch):
     assert p_sparse == p_dense
 
 
+def test_forced_sparse_cost_is_sum_of_distances(spark, monkeypatch):
+    """On the CSR path too, compute_cost is the sum of transform's
+    distanceCol bit for bit; a null vector adds nothing."""
+    from pyspark.sql import functions as F
+
+    from sparkml_som_spark.som import SOM as SOMcls
+
+    sparse_df, _ = _twin_dfs(spark)
+    monkeypatch.setattr(SOMcls, "_SPARSE_DENSITY_THRESHOLD", 1.1)
+    monkeypatch.setattr(SOMcls, "_SPARSE_MIN_DIM", 0)
+    df = sparse_df.repartition(3)
+    model = SOMcls(height=2, width=2, maxIter=4, seed=9, distanceCol="d2").fit(df)
+    assert model._sparse_inference
+    with_null = df.union(spark.createDataFrame([(None,)], sparse_df.schema))
+    total = model.transform(with_null).agg(F.sum("d2")).first()[0]
+    assert model.compute_cost(with_null).hex() == total.hex()
+
+
 def test_sparse_highdim_hashingtf(spark, tables):
     """d=65536 HashingTF corpus: the densified blocks would be
     500 * 65536 * 8 = 262 MB (over the 256 MB local gate, and at real
