@@ -322,6 +322,9 @@ def kappa_langid_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     # here (interleaved A/B: 1.81 s vs 2.39 s min-of-5) — AQE's runtime
     # exchange reuse already shares the conf aggregate across the three
     # consumers, and the collect barrier serializes jobs; left as-is.
+    # That A/B predates the Arrow `LocalRelation` materialize_small: it
+    # measured the old helper, whose Python-RDD frame started a
+    # Python-worker job on every read.  Not re-measured.
     m = conf.agg(
         F.sum("n").alias("total"),
         F.sum(F.when(F.col("gold") == F.col("predicted"), F.col("n")).otherwise(0)).alias(

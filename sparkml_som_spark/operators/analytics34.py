@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sparkml_som_spark.operators.registry import materialize_reused, query_scope, register
+from sparkml_som_spark.session import local_frame
 from sparkml_som_spark.sources import load_table
 
 # ---------------------------------------------------------------------------
@@ -157,8 +158,8 @@ def som_grouped_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
     tagged.count()
     with ThreadPoolExecutor(max_workers=_CV_FOLDS) as pool:
         rows = list(pool.map(run_fold, range(_CV_FOLDS)))
-    return spark.createDataFrame(
-        rows,
+    return local_frame(
+        spark, rows,
         "fold long, n_val_groups long, n_val long, n_train long, qe_valid boolean",
     )
 

@@ -53,6 +53,7 @@ from sparkml_som_spark.functions import cosine, hash_bottom_k, norm2, word_token
 from sparkml_som_spark.operators.analytics28 import _BM25_QUERY
 from sparkml_som_spark.operators.analytics29 import _RRF_ORACLE, _RRF_QVEC, _RRF_TOPK
 from sparkml_som_spark.operators.registry import drain_stream, register
+from sparkml_som_spark.session import local_frame
 from sparkml_som_spark.sources import load_table
 
 # ---------------------------------------------------------------------------
@@ -163,8 +164,8 @@ def rerank_cross_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         key=lambda r: (-r["rrf"], r["doc_id"]),
     )
     ids = [int(r["doc_id"]) for r in cand]
-    prior = spark.createDataFrame(
-        [(doc_id, rank + 1) for rank, doc_id in enumerate(ids)],
+    prior = local_frame(
+        spark, [(doc_id, rank + 1) for rank, doc_id in enumerate(ids)],
         "doc_id long, prior_rank long",
     )
 
@@ -280,11 +281,25 @@ _PAIR_GEMM_GROUP_BYTES = 128 << 20
 _PAIR_GEMM_MEM_FACTOR = 4
 
 
+def _hot_cell_bytes(multi_df: DataFrame) -> int:
+    """Matrix bytes of the hottest cell group, bounded above: the largest
+    per-cell row count times the widest vector, times 8.  One aggregate
+    action.  A bound for ``multi_df`` also bounds any row subset of it."""
+    head = (
+        multi_df.groupBy("cell")
+        .agg(F.count(F.lit(1)).alias("n"), F.max(F.size("v")).alias("d"))
+        .agg(F.max("n").alias("mx"), F.max("d").alias("dim"))
+        .first()
+    )
+    return int(head["mx"] or 0) * int(head["dim"] or 0) * 8
+
+
 def _cell_pairs_over_tau(
     multi_df: DataFrame,
     tau: float,
     block: int = 2048,
     max_group_bytes: int = _PAIR_GEMM_GROUP_BYTES,
+    hot_bytes: int | None = None,
 ) -> DataFrame:
     """All (a_id, b_id) pairs with a_id < b_id, cosine >= tau, sharing at
     least one assigned cell — ONE block-GEMM per cell group
@@ -311,12 +326,12 @@ def _cell_pairs_over_tau(
     TRUE, so an unguarded equi-join would pair a degenerate vector
     with EVERYTHING, silently diverging from the GEMM path when the
     hot-cell gate trips.  Pairs sharing two cells are emitted by both
-    groups — callers get a distinct()-ed set."""
-    head = multi_df.groupBy("cell").count().agg(F.max("count").alias("mx")).first()
-    mx = int(head["mx"] or 0) if head else 0
-    dim_row = multi_df.select(F.size("v").alias("d")).first()
-    dim = int(dim_row["d"]) if dim_row else 0
-    if mx * dim * 8 * _PAIR_GEMM_MEM_FACTOR > max_group_bytes:
+    groups — callers get a distinct()-ed set.  ``hot_bytes`` is a
+    caller-held `_hot_cell_bytes` bound for ``multi_df`` (or for a row
+    superset of it); without it the bound is probed here."""
+    if hot_bytes is None:
+        hot_bytes = _hot_cell_bytes(multi_df)
+    if hot_bytes * _PAIR_GEMM_MEM_FACTOR > max_group_bytes:
         # Degenerate vectors (zero / non-finite norm) pair with NOTHING,
         # so drop them BEFORE the join: the positive-AND-finite predicate
         # (`< lit(inf)` is False for both Inf and NaN-greatest NaN norms)
@@ -501,7 +516,8 @@ def semdedup_som_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and shared by the three consumers below — the dedup drop set, the
     # audit-restricted drop set, and the kept-pairwise theorem check
     # each previously re-ran their own HOF-cosine equi-join
-    pairs = _cell_pairs_over_tau(multi, _SOMDD_TAU).persist()
+    hot_bytes = _hot_cell_bytes(multi)  # also bounds the kept-rows recompute
+    pairs = _cell_pairs_over_tau(multi, _SOMDD_TAU, hot_bytes=hot_bytes).persist()
     cell_dropped = pairs.select(F.col("b_id").alias("vec_id")).distinct().persist()
 
     # global audit leg, SAMPLE-BOUNDED IN CODE: both comparison legs
@@ -593,8 +609,8 @@ def semdedup_som_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     if n_vectors <= _SOMDD_AUDIT_ROWS:
         cell_dropped_audit = cell_dropped  # audit corpus == full corpus
     else:
-        audit_ids_df = spark.createDataFrame(
-            [(int(i),) for i in aud_ids], "vec_id long"
+        audit_ids_df = local_frame(
+            spark, [(int(i),) for i in aud_ids], "vec_id long"
         )
         cell_dropped_audit = (
             pairs.join(
@@ -620,9 +636,10 @@ def semdedup_som_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so a bug in the drop-set derivation or the pair plumbing CAN trip
     # this guard; GEMM keeps the recomputation sub-second
     n_kept_viol = _cell_pairs_over_tau(
-        multi.join(cell_dropped, "vec_id", "left_anti"), _SOMDD_TAU
+        multi.join(cell_dropped, "vec_id", "left_anti"), _SOMDD_TAU, hot_bytes=hot_bytes
     ).count()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 n_vectors,

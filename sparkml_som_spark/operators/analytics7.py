@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from sparkml_som_spark.operators.corpus_ops3 import distributed_global_rank
 from sparkml_som_spark.operators.registry import materialize_reused, register
+from sparkml_som_spark.session import local_frame
 from sparkml_som_spark.sources import load_table
 
 
@@ -474,9 +475,7 @@ def reachability_3hop_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
         .transform(materialize_reused)  # bounded; reused every hop
     )
 
-    visited = nation.sparkSession.createDataFrame(
-        [(_BFS_SOURCE, 0)], "v int, hop int"
-    )
+    visited = local_frame(nation.sparkSession, [(_BFS_SOURCE, 0)], "v int, hop int")
     frontier = visited.select("v")
     for hop in range(1, _BFS_HOPS + 1):
         nxt = (

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from sparkml_som_spark.functions import word_shingles, word_tokens
 from sparkml_som_spark.operators.registry import register
+from sparkml_som_spark.session import local_frame
 from sparkml_som_spark.sources import load_table
 
 # Sources treated as the held-out benchmark set for decontamination.
@@ -433,7 +434,7 @@ def observed_corpus_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     observed.count()  # force the pass; obs.get blocks until it completes
     m = obs.get
-    return spark.createDataFrame(
-        [(m["n_docs"], m["n_long"], m["avg_chars"], m["total_tokens"])],
+    return local_frame(
+        spark, [(m["n_docs"], m["n_long"], m["avg_chars"], m["total_tokens"])],
         "n_docs long, n_long long, avg_chars double, total_tokens long",
     )

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from sparkml_som_spark.functions import word_tokens
 from sparkml_som_spark.operators.dedup import _SSD_CTE_PREFIX, _SSD_L, substring_match_pairs
 from sparkml_som_spark.operators.registry import materialize_reused, register, session_conf
+from sparkml_som_spark.session import local_frame
 from sparkml_som_spark.sources import load_table
 
 # --------------------------------------------------------------------------
@@ -115,8 +116,8 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         n=_BPE_MERGES, p=_BPE_PASSES
     )
     merges, _words = _learn_bpe(spark, sf_dir)
-    return spark.createDataFrame(
-        merges, "merge_rank int, left_sym string, right_sym string, pair_count long"
+    return local_frame(
+        spark, merges, "merge_rank int, left_sym string, right_sym string, pair_count long"
     )
 
 

@@ -26,6 +26,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from sparkml_som_spark.session import local_frame
+
 
 @dataclass
 class QuerySpec:
@@ -52,14 +54,18 @@ def materialize_small(df: DataFrame, max_rows: int = _MATERIALIZE_SMALL_CAP) -> 
     shipping at most max_rows + 1 rows to the driver — it cannot OOM
     the driver first.  (When the result fits the cap, ``limit`` returns
     the complete set, so the returned DataFrame is value-identical to
-    ``df``.)"""
-    rows = df.limit(max_rows + 1).collect()
-    if len(rows) > max_rows:
+    ``df``.)
+
+    The rows come back as one Arrow table and go out again through
+    `local_frame`, never as Python ``Row``s: the result plans as a
+    ``LocalRelation`` and reading it starts no Spark job."""
+    table = df.limit(max_rows + 1).toArrow()
+    if table.num_rows > max_rows:
         raise ValueError(
             f"materialize_small: result exceeds the {max_rows}-row bound; "
             "return the plan itself for unbounded outputs"
         )
-    return df.sparkSession.createDataFrame(rows, df.schema)
+    return local_frame(df.sparkSession, table, df.schema)
 
 
 def materialize_reused(

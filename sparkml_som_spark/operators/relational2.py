@@ -9,6 +9,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sparkml_som_spark.operators.registry import register
+from sparkml_som_spark.session import local_frame
 from sparkml_som_spark.sources import load_table
 
 
@@ -213,7 +214,8 @@ def range_join_price_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a BroadcastNestedLoopJoin over 3 rows — constant work per fact
     row, no shuffle."""
     orders = load_table(spark, sf_dir, "orders")
-    bands = spark.createDataFrame(
+    bands = local_frame(
+        spark,
         [("small", 0.0, 100000.0), ("medium", 100000.0, 300000.0), ("large", 300000.0, 1e18)],
         "band_name string, lo double, hi double",
     )

@@ -16,6 +16,7 @@ from pyspark.sql.functions import pandas_udf
 
 from sparkml_som_spark.functions import cosine
 from sparkml_som_spark.operators.registry import broadcast, register
+from sparkml_som_spark.session import local_frame
 from sparkml_som_spark.sources import load_table
 
 N_QUERIES = 5
@@ -193,7 +194,7 @@ def ann_ivf_som(spark: SparkSession, sf_dir: str) -> DataFrame:
         d2 = ((cb - qv) ** 2).sum(axis=1)
         for cell in np.argsort(d2)[:nprobe]:
             probe_rows.append((int(r["vec_id"]), int(cell)))
-    probes = spark.createDataFrame(probe_rows, "query_id long, cell int")
+    probes = local_frame(spark, probe_rows, "query_id long, cell int")
 
     cand = (
         assigned.join(F.broadcast(probes), "cell")
@@ -444,8 +445,8 @@ def embedding_pca_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     noninc = all(a >= b - 1e-12 for a, b in zip(ev, ev[1:]))
     total_ok = sum(ev) <= 1.0 + 1e-9
     tv = variance_trace(load_table(spark, sf_dir, "embeddings", spread=True))
-    return spark.createDataFrame(
-        [(len(ev), n_oob, bool(noninc), bool(total_ok), float(tv))],
+    return local_frame(
+        spark, [(len(ev), n_oob, bool(noninc), bool(total_ok), float(tv))],
         "n_components int, n_out_of_range long, ratios_nonincreasing boolean, "
         "total_at_most_1 boolean, total_variance double",
     )
@@ -596,7 +597,8 @@ def embedding_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     # degenerate but correct — the strict inequality only applies when
     # there is variance to beat
     mse_ok = bool(row["mse"] < tv) or tv == 0.0
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 row["n_rows"],

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sparkml_som_spark.operators.registry import broadcast, query_scope, register
+from sparkml_som_spark.session import local_frame
 from sparkml_som_spark.sources import load_table
 
 
@@ -222,8 +223,8 @@ def som_quantization_error(spark: SparkSession, sf_dir: str) -> DataFrame:
         model.setDistanceCol("")  # the cached model is shared across queries
     cost = model.compute_cost(emb)
     agree = abs(row["total_d2"] - cost) <= 1e-6 * max(abs(cost), 1.0)
-    return spark.createDataFrame(
-        [(row["n_rows"], row["n_cells_inconsistent"], bool(agree))],
+    return local_frame(
+        spark, [(row["n_rows"], row["n_cells_inconsistent"], bool(agree))],
         "n_rows long, n_cells_inconsistent long, cost_paths_agree boolean",
     )
 
@@ -337,7 +338,7 @@ def som_umatrix_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         nbrs = np.flatnonzero(grid[c] == 1)
         dist = float(np.linalg.norm(cb[nbrs] - cb[c], axis=1).mean())
         rows.append((c, len(nbrs), round(dist, 6)))
-    return spark.createDataFrame(rows, "cell int, n_neighbors int, u_height double")
+    return local_frame(spark, rows, "cell int, n_neighbors int, u_height double")
 
 
 @register(
@@ -392,8 +393,8 @@ def som_umatrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
     n_invalid = int(((~np.isfinite(u)) | (u < 0)).sum())
-    return spark.createDataFrame(
-        [(h * w, n_pairs, n_asym, n_invalid, model.summary.n_samples)],
+    return local_frame(
+        spark, [(h * w, n_pairs, n_asym, n_invalid, model.summary.n_samples)],
         "n_cells int, n_directed_neighbor_pairs long, n_asymmetric_pairs long, "
         "n_invalid_u long, n_train_rows long",
     )
@@ -431,7 +432,7 @@ def som_topographic_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     adj_pairs = [
         (int(a), int(b)) for a in range(h * w) for b in np.flatnonzero(grid[a] == 1)
     ]
-    adj = spark.createDataFrame(adj_pairs, "bmu1 int, bmu2 int").withColumn(
+    adj = local_frame(spark, adj_pairs, "bmu1 int, bmu2 int").withColumn(
         "is_adj", F.lit(1)
     )
     top2 = emb.select(
@@ -568,8 +569,8 @@ def som_grid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_invalid = sum(1 for q in qes if not (math.isfinite(q) and q > 0))
     counts = {r[5] for r in rows}
     n_train_rows = counts.pop() if len(counts) == 1 else -1
-    return spark.createDataFrame(
-        [(len(rows), n_best, best_is_min, n_invalid, n_train_rows)],
+    return local_frame(
+        spark, [(len(rows), n_best, best_is_min, n_invalid, n_train_rows)],
         "n_candidates long, n_best long, best_is_min_qe boolean, "
         "n_invalid_qe long, n_train_rows long",
     )
@@ -647,8 +648,8 @@ def som_outlier_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).collect()[0]
     finally:
         model.setDistanceCol("")  # the cached model is shared across queries
-    return spark.createDataFrame(
-        [tuple(row)],
+    return local_frame(
+        spark, [tuple(row)],
         "n_rows long, n_cells_over_quota long, n_flags_below_threshold long, "
         "flag_rate_within_5pct boolean",
     )

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sparkml_som_spark.operators.registry import register
+from sparkml_som_spark.session import local_frame
 from sparkml_som_spark.sources import load_table, read_any, write_any
 
 # Repo-local scratch (never under /root/testdata or /root/reference);
@@ -307,9 +308,15 @@ def dpp_partitioned_fact_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _scratch(sf_dir, "orders_dpp_part")
     orders.write.mode("overwrite").partitionBy("o_orderstatus").parquet(base)
     fact = spark.read.parquet(base)
-    dim = spark.createDataFrame(
-        [("F", "final"), ("O", "open"), ("P", "pending")], "status string, label string"
-    )
+    # the dimension is a stored table, as in a warehouse: over driver
+    # rows (a LocalRelation) the optimizer would fold the label filter
+    # into the rows at plan time, and with no Filter left on the build
+    # side DPP has no selective predicate to prune by
+    dim_path = _scratch(sf_dir, "status_dim")
+    local_frame(
+        spark, [("F", "final"), ("O", "open"), ("P", "pending")], "status string, label string"
+    ).write.mode("overwrite").parquet(dim_path)
+    dim = spark.read.parquet(dim_path)
     return (
         fact.join(
             dim.where(F.col("label") == "final"),

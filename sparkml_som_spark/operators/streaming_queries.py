@@ -24,6 +24,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from sparkml_som_spark.operators.registry import drain_stream, register, session_conf
+from sparkml_som_spark.session import local_frame
 from sparkml_som_spark.sources import load_table
 from sparkml_som_spark.streaming.stateful import stateful_user_profile
 from sparkml_som_spark.streaming.windows import (
@@ -679,8 +680,8 @@ def stream_decayed_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
         (et, as_of, total, decayed)
         for et, (as_of, decayed, total) in sorted(state.items())
     ]
-    return spark.createDataFrame(
-        rows, "event_type string, as_of_day date, n_total long, decayed_count double"
+    return local_frame(
+        spark, rows, "event_type string, as_of_day date, n_total long, decayed_count double"
     )
 
 

@@ -10,7 +10,10 @@ from __future__ import annotations
 import os
 import tempfile
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType, StructType, TimestampType
 
 
 def get_spark(
@@ -76,3 +79,42 @@ def get_spark(
             "spark.eventLog.dir", _elog
         )
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, data, schema: StructType | str) -> DataFrame:
+    """Return driver-held rows (or a ``pyarrow.Table``) as a Spark DataFrame.
+
+    The one way the engine turns driver data back into a frame.  The rows
+    go to Spark as an Arrow table, which plans as a ``LocalRelation``:
+    reading it starts no Spark job.  A list handed to ``createDataFrame``
+    instead becomes a Python-RDD scan, and every read of it starts a
+    Python-worker job (collecting one row on a 4-core host: ~0.3 s that
+    way, ~0.03 s this way).
+
+    ``data`` is an iterable of tuples (positional, in ``schema`` order) or
+    a ``pyarrow.Table`` whose columns are in ``schema`` order.  ``schema``
+    is a ``StructType`` or a DDL string.  There is no fallback path: a
+    value Arrow cannot carry in its column type raises.  Top-level
+    ``timestamp`` values go through Spark's own ``toInternal``, so a
+    naive ``datetime`` means local time, as it does on the list path.
+    """
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    if not isinstance(data, pa.Table):
+        arrow_schema = to_arrow_schema(schema)
+        rows = list(data)
+        cols = list(zip(*rows)) if rows else [()] * len(schema.fields)
+        arrays = [
+            _arrow_column(c, f.dataType, a.type)
+            for c, f, a in zip(cols, schema.fields, arrow_schema)
+        ]
+        data = pa.Table.from_arrays(arrays, schema=arrow_schema)
+    return spark.createDataFrame(data, schema)
+
+
+def _arrow_column(values, dtype: DataType, arrow_type):
+    if isinstance(dtype, TimestampType):
+        # pyarrow reads a naive datetime as UTC and drops fixed offsets;
+        # Spark's encoder gives the list path's epoch microseconds
+        return pa.array([dtype.toInternal(v) for v in values], pa.int64()).cast(arrow_type)
+    return pa.array(values, arrow_type)

@@ -65,6 +65,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 
+from sparkml_som_spark.session import local_frame
 from sparkml_som_spark.som import kernel as K
 from sparkml_som_spark.som.params import SOMParams
 from sparkml_som_spark.som.summary import SOMTrainingSummary
@@ -718,7 +719,7 @@ class SOMModel(Model, SOMParams, MLWritable):
             (int(i), int(i // w), int(i % w), [float(v) for v in vec])
             for i, vec in enumerate(self.prototypes)
         ]
-        return spark.createDataFrame(rows, "cell int, row int, col int, vector array<double>")
+        return local_frame(spark, rows, "cell int, row int, col int, vector array<double>")
 
     # --- persistence (closes the reference's stated gap, README.md:91) ---
     def write(self) -> MLWriter:

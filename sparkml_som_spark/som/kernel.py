@@ -149,11 +149,17 @@ def partial_aggregate(batch: np.ndarray, codebook: np.ndarray, n_cells: int, cod
 
     Returns (sums (n_cells, d), counts (n_cells,), cost) for this batch:
     scatter-add of each point into its BMU cell + accumulated
-    quantization cost.
+    quantization cost.  The scatter is one flat bincount over (cell,
+    feature) keys, as in `partial_aggregate_sparse`: it adds each bin's
+    terms in input order from +0.0, as ``np.add.at`` does, so the bits
+    are the same at ~3x the speed.
     """
     idx, d2 = find_bmu(batch, codebook, code_norms2)
-    sums = np.zeros((n_cells, batch.shape[1]), dtype=np.float64)
-    np.add.at(sums, idx, batch)
+    d = batch.shape[1]
+    flat = (idx[:, None] * d + np.arange(d)).ravel()
+    # astype: bincount of an empty input is int64 even with weights
+    sums = np.bincount(flat, weights=batch.ravel(), minlength=n_cells * d)
+    sums = sums.astype(np.float64, copy=False).reshape(n_cells, d)
     counts = np.bincount(idx, minlength=n_cells).astype(np.int64)
     return sums, counts, float(d2.sum())
 

@@ -375,3 +375,31 @@ def test_engine_env_knobs_allowlist():
         "CKPT_DIR",
         "STREAM_EPOCH_GUARD",
     }
+
+
+def test_engine_create_dataframe_allowlist():
+    """Driver-held rows go back to Spark through one helper,
+    `session.local_frame` (an Arrow `LocalRelation`).  A list passed to
+    `createDataFrame` anywhere else plans as a Python-RDD scan that
+    starts a Python-worker job on every read."""
+    import ast
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = os.path.join(repo, "sparkml_som_spark")
+    sites = []
+    for root, _dirs, files in os.walk(pkg):
+        for f in files:
+            if f.endswith(".py"):
+                tree = ast.parse(open(os.path.join(root, f)).read())
+                funcs = [n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)]
+                for node in ast.walk(tree):
+                    if (
+                        isinstance(node, ast.Call)
+                        and isinstance(node.func, ast.Attribute)
+                        and node.func.attr == "createDataFrame"
+                    ):
+                        owners = [
+                            fn.name for fn in funcs if fn.lineno <= node.lineno <= fn.end_lineno
+                        ]
+                        sites.append((f, owners[-1] if owners else None))
+    assert sites == [("session.py", "local_frame")]

@@ -221,3 +221,31 @@ def test_find_bmu_chunked_bit_equal_to_full_matrix(n, d):
         assert np.array_equal(idx, want_idx)
         assert d2.tobytes() == want_d2.tobytes()
     assert 7 not in set(idx[: min(n, 5)].tolist())
+
+
+@pytest.mark.parametrize("d", [3, 128])
+@pytest.mark.parametrize(
+    "n",
+    [0, 1, K._BMU_CHUNK_ROWS - 1, K._BMU_CHUNK_ROWS, K._BMU_CHUNK_ROWS + 1, 10_000],
+)
+def test_partial_aggregate_bincount_bit_equal_to_add_at(n, d):
+    """The flat-bincount scatter of `partial_aggregate` returns the same
+    bits as the ``np.add.at`` row scatter it replaced, at every map size
+    and value scale — with a -0.0 row (the +0.0 start must absorb it the
+    same way) and a NaN row."""
+    rng = np.random.default_rng(n * 7 + d)
+    for k in (1, 100, 400):
+        cb = rng.random((k, d))
+        for scale in (1e-8, 1.0, 1e8):
+            x = rng.normal(size=(n, d)) * scale
+            if n > 2:
+                x[1] = -0.0
+                x[2] = np.nan
+            idx, d2 = K.find_bmu(x, cb * scale)
+            want = np.zeros((k, d))
+            np.add.at(want, idx, x)
+            sums, counts, cost = K.partial_aggregate(x, cb * scale, k)
+            assert sums.shape == (k, d) and sums.dtype == np.float64
+            assert sums.tobytes() == want.tobytes(), (k, scale)
+            assert np.array_equal(counts, np.bincount(idx, minlength=k))
+            assert np.float64(cost).tobytes() == np.float64(d2.sum()).tobytes()
