@@ -69,14 +69,18 @@ def get_spark(
             ),
         )
     )
-    # opt-in event log (perfbench/, tools/parse_eventlog.py): task-level
-    # shuffle byte metrics are only readable from the event log with the
-    # UI disabled
+    # opt-in event log, read by perfbench/spans.py (`read_events`): task
+    # metrics are only readable from the event log with the UI disabled.
+    # One plain JSON-lines file per application; Spark 4's defaults
+    # write a rolled, zstd-compressed log that reader cannot open
     _elog = os.environ.get("SPARK_GRAFT_EVENTLOG_DIR")
     if _elog:
         os.makedirs(_elog, exist_ok=True)  # Spark requires the dir to exist
-        builder = builder.config("spark.eventLog.enabled", "true").config(
-            "spark.eventLog.dir", _elog
+        builder = (
+            builder.config("spark.eventLog.enabled", "true")
+            .config("spark.eventLog.dir", _elog)
+            .config("spark.eventLog.compress", "false")
+            .config("spark.eventLog.rolling.enabled", "false")
         )
     return builder.getOrCreate()
 

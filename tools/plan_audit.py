@@ -103,11 +103,10 @@ def fingerprint(plan: str) -> dict[str, int]:
         "sort_ops": nodes(r"Sort(?!MergeJoin|Aggregate)"),
         # Python-crossing nodes (Arrow-batched pandas paths + the two
         # sanctioned row-at-a-time UDTF surfaces): >0 means the query's
-        # hot path leaves the JVM, so host-mood attribution should use
-        # the pandas_udf canary leg, not the jvm-codegen one (the
-        # r14 two-sided canary finding, operationalized in bench.py —
-        # VERDICT r14 ask #3).  New key: the differ compares only keys
-        # present in both rounds, so adding it sprays no diffs.
+        # returned plan leaves the JVM.  A plan fact only; the time an
+        # entry spends in Python workers is measured by bench.py's
+        # layer rows (`python_s`).  The differ compares only keys
+        # present in both rounds, so adding it sprayed no diffs.
         "python_eval_nodes": nodes(
             r"(ArrowEvalPython|BatchEvalPython|MapInPandas|"
             r"PythonMapInArrow|FlatMapGroupsInPandas|"
