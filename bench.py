@@ -159,14 +159,16 @@ def main() -> None:
 
     canary_pre = _canary()
 
-    # Cold-scratch visibility: some entries build `_SUCCESS`-gated
-    # artifacts under .scratch/<sf>/ on their first run and reuse them
-    # afterwards, so their recorded min-of-reps seconds amortize the
-    # build cost out.  An entry is flagged when its FIRST suite run
-    # added `_SUCCESS` markers that its retime runs left untouched (same
-    # mtime): a build-once artifact.  A per-run sink or state dir adds
-    # its marker the first time too, but every later run rewrites it.
-    # A file walk outside the timed region, no Spark cost.
+    # Cold-scratch visibility: some entries build artifacts under
+    # .scratch/<sf>/ once per process (`sources.build_once`) on their
+    # first run and reuse them afterwards, so their recorded min-of-reps
+    # seconds amortize the build cost out.  An entry is flagged when its
+    # FIRST suite run added or rewrote `_SUCCESS` markers (a new mtime;
+    # a warm checkout's markers already exist) that its retime runs left
+    # untouched (same mtime): a build-once artifact.  A per-run sink or
+    # state dir writes its marker the first time too, but every later
+    # run rewrites it.  A file walk outside the timed region, no Spark
+    # cost.
     _scratch_root = os.path.join(REPO_DIR, ".scratch")
 
     def _scratch_markers() -> dict[str, int]:
@@ -177,7 +179,7 @@ def main() -> None:
             if "_SUCCESS" in files
         }
 
-    added_markers: dict[str, dict[str, int]] = {}
+    written_markers: dict[str, dict[str, int]] = {}
 
     timings: dict[str, float] = {}
     queries = entrymod.queries()
@@ -190,9 +192,9 @@ def main() -> None:
         except Exception as e:  # a failed query must be visible, not silent
             timings[name] = -1.0
             print(f"BENCH ERROR {name}: {e}", file=sys.stderr)
-        _added = {p: m for p, m in _scratch_markers().items() if p not in _marks0}
-        if _added:
-            added_markers[name] = _added
+        _written = {p: m for p, m in _scratch_markers().items() if _marks0.get(p) != m}
+        if _written:
+            written_markers[name] = _written
 
     # This host shows ±2-4 s scheduling jitter (same query, idle
     # machine, minutes apart), which made round-over-round bench diffs
@@ -239,8 +241,8 @@ def main() -> None:
 
     _marks = _scratch_markers()
     cold_scratch: dict[str, list[str]] = {}
-    for name, added in added_markers.items():
-        reused = sorted(d for d, m in added.items() if _marks.get(d) == m)
+    for name, written in written_markers.items():
+        reused = sorted(d for d, m in written.items() if _marks.get(d) == m)
         if reused and timings[name] > 0:
             cold_scratch[name] = reused
 

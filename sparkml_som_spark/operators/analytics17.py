@@ -26,8 +26,7 @@ from pyspark.sql import functions as F
 
 from sparkml_som_spark.operators.analytics9 import _CMS_DEPTH, _CMS_WIDTH
 from sparkml_som_spark.operators.registry import drain_stream, register, session_conf
-from sparkml_som_spark.operators.sources_queries import _scratch
-from sparkml_som_spark.sources import load_table
+from sparkml_som_spark.sources import build_once, load_table, scratch_dir
 
 
 @register(
@@ -63,7 +62,7 @@ def source_python_datasource_writer(spark: SparkSession, sf_dir: str) -> DataFra
     slice_df = o.where(F.col("o_orderkey") <= 4000).select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    path = _scratch(sf_dir, "orders_jsonlsink")
+    path = scratch_dir(sf_dir, "orders_jsonlsink")
     shutil.rmtree(path, ignore_errors=True)
     slice_df.repartition(4).write.format("jsonlsink").option("path", path).mode(
         "append"
@@ -117,21 +116,13 @@ def stream_countmin_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch construction and the estimates must hash-match.
 
     Per-batch cost tracks the batch (its tokens -> 48 cells); the
-    sketch state is bounded, queryable between batches, and survives
-    restarts — none of which is true of an exact counter table over an
-    unbounded vocabulary.
+    sketch state is bounded and queryable between batches (the entry
+    starts each run from an empty sketch) — neither of which is true of
+    an exact counter table over an unbounded vocabulary.
     """
     docs = load_table(spark, sf_dir, "documents")
-    key = os.path.basename(os.path.normpath(sf_dir))
-    src = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-        key,
-        "docs_cms_src",
-    )
-    if not os.path.isdir(src):
-        docs.repartition(16).write.mode("overwrite").parquet(src)
-    cells_dir = _scratch(sf_dir, "cms_cells")
+    src = build_once(sf_dir, "docs_cms_src", lambda p: docs.repartition(16).write.mode("overwrite").parquet(p))
+    cells_dir = scratch_dir(sf_dir, "cms_cells")
     shutil.rmtree(cells_dir, ignore_errors=True)
 
     stream = (

@@ -30,8 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sparkml_som_spark.operators.registry import drain_stream, register
-from sparkml_som_spark.operators.sources_queries import _scratch
-from sparkml_som_spark.sources import load_table
+from sparkml_som_spark.sources import build_once, load_table, scratch_dir
 
 
 @register(
@@ -144,14 +143,18 @@ def source_python_stream_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_stream_sink_registered(spark)
     ev = load_table(spark, sf_dir, "events")
     key = os.path.basename(os.path.normpath(sf_dir))
-    src = _scratch(sf_dir, "events_psw_src")
-    if not os.path.isdir(src):
-        ev.where(F.col("event_id") <= 2000).select(
-            "event_id", "event_type", "value"
-        ).repartition(8).write.mode("overwrite").parquet(src)
-    sink = _scratch(sf_dir, "events_psw_sink")
+    src = build_once(
+        sf_dir,
+        "events_psw_src",
+        lambda p: ev.where(F.col("event_id") <= 2000)
+        .select("event_id", "event_type", "value")
+        .repartition(8)
+        .write.mode("overwrite")
+        .parquet(p),
+    )
+    sink = scratch_dir(sf_dir, "events_psw_sink")
     shutil.rmtree(sink, ignore_errors=True)
-    ckpt = _scratch(sf_dir, "events_psw_ckpt")
+    ckpt = scratch_dir(sf_dir, "events_psw_ckpt")
     shutil.rmtree(ckpt, ignore_errors=True)
 
     stream = (

@@ -52,9 +52,9 @@ from pyspark.sql import functions as F
 from sparkml_som_spark.functions import cosine, hash_bottom_k, norm2, word_tokens
 from sparkml_som_spark.operators.analytics28 import _BM25_QUERY
 from sparkml_som_spark.operators.analytics29 import _RRF_ORACLE, _RRF_QVEC, _RRF_TOPK
-from sparkml_som_spark.operators.registry import drain_stream, register
+from sparkml_som_spark.operators.registry import register
 from sparkml_som_spark.session import local_frame
-from sparkml_som_spark.sources import load_table
+from sparkml_som_spark.sources import build_once, load_table, scratch_dir
 
 # ---------------------------------------------------------------------------
 # Cross-features reranker over the RRF candidate pool
@@ -791,15 +791,9 @@ def stream_dedup_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFram
     are CAP x cells and K x cells rows in queryable parquet (never
     unbounded stream state); per-batch cost tracks the batch, not the
     corpus."""
-    from sparkml_som_spark.operators.streaming_queries import (
-        _EMB_SRC_CACHE,
-        _SCRATCH,
-    )
+    from sparkml_som_spark.operators.streaming_queries import _epoch_files, _run_epochs
 
     emb = load_table(spark, sf_dir, "embeddings")
-    key = os.path.basename(os.path.normpath(sf_dir))
-    src = os.path.join(_SCRATCH, key, "emb_admit_src")
-    cache_key = f"admit:{key}"
     cx = F.floor(
         (F.element_at(F.col("embedding").cast("array<double>"), 1) + 0.6) * 8
     ).cast("int")
@@ -814,57 +808,19 @@ def stream_dedup_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFram
         cy.alias("cy"),
         (F.col("vec_id") % _SADM_EPOCHS).cast("int").alias("epoch"),
     )
-    if _EMB_SRC_CACHE.get(cache_key) is None:
-        shutil.rmtree(src, ignore_errors=True)
-        os.makedirs(src, exist_ok=True)
-        # one file per epoch with pinned mtimes so the file stream's
-        # modification-time order IS epoch order
-        for e in range(_SADM_EPOCHS):
-            part_dir = os.path.join(src, f"_build_{e}")
-            (
-                shaped.where(F.col("epoch") == e)
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(part_dir)
-            )
-            pf = [f for f in os.listdir(part_dir) if f.endswith(".parquet")][0]
-            dst = os.path.join(src, f"epoch_{e}.parquet")
-            shutil.move(os.path.join(part_dir, pf), dst)
-            shutil.rmtree(part_dir)
-            os.utime(dst, (1_600_000_000 + e * 100, 1_600_000_000 + e * 100))
-        _EMB_SRC_CACHE[cache_key] = src
-    admitted_dir = os.path.join(_SCRATCH, key, "admit_corpus")
-    reservoir_dir = os.path.join(_SCRATCH, key, "admit_reservoir")
-    probe_dir = os.path.join(_SCRATCH, key, "admit_probe")
+    src = build_once(sf_dir, "emb_admit_src", _epoch_files(shaped, _SADM_EPOCHS))
+    admitted_dir = scratch_dir(sf_dir, "admit_corpus")
+    reservoir_dir = scratch_dir(sf_dir, "admit_reservoir")
+    probe_dir = scratch_dir(sf_dir, "admit_probe")
     shutil.rmtree(admitted_dir, ignore_errors=True)
     shutil.rmtree(reservoir_dir, ignore_errors=True)
     shutil.rmtree(probe_dir, ignore_errors=True)
 
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("latestFirst", "false")
-        .parquet(src)
-    )
-
     def admit(batch_df, batch_id):
         sp = batch_df.sparkSession
-        # One epoch per micro-batch by construction (one file per epoch,
-        # maxFilesPerTrigger=1, AvailableNow honors the cap) — a per-batch
-        # epoch distinct-collect would be a pure orchestration job (see
-        # stream_minhash_dedup_guard).  The coupling is assertable:
-        # SPARK_GRAFT_STREAM_EPOCH_GUARD=1 enables the check (one extra
-        # job per batch — debug only, ADVICE r15 #2) so a future
-        # source/trigger change cannot silently merge epochs into one
-        # admission group.
-        if os.environ.get("SPARK_GRAFT_STREAM_EPOCH_GUARD") == "1":
-            n_ep = batch_df.select("epoch").distinct().count()
-            if n_ep > 1:
-                raise AssertionError(
-                    f"batch {batch_id} carries {n_ep} epochs; the "
-                    "one-file-per-epoch + maxFilesPerTrigger=1 "
-                    "contract is broken"
-                )
+        # One epoch per micro-batch (_run_epochs checks the callback
+        # count after the drain): a per-batch epoch distinct-collect
+        # would be a pure orchestration job (see stream_minhash_dedup_guard).
         grp = batch_df.drop("epoch")
         if os.path.isdir(probe_dir):
             # probe against the CAPPED per-cell state, never the full
@@ -942,8 +898,7 @@ def stream_dedup_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFram
         os.rename(probe_tmp, probe_dir)
         shutil.rmtree(probe_old, ignore_errors=True)
 
-    q = stream.writeStream.foreachBatch(admit).trigger(availableNow=True).start()
-    drain_stream(q, "stream_dedup_stratified_sample")
+    _run_epochs(spark, src, _SADM_EPOCHS, admit, "stream_dedup_stratified_sample")
 
     adm = spark.read.parquet(admitted_dir)
     # materialize the reservoir from the final probe state: per-cell

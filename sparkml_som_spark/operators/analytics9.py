@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sparkml_som_spark.operators.registry import materialize_reused, register
-from sparkml_som_spark.sources import load_table, read_any, write_any
+from sparkml_som_spark.sources import load_table, read_any, scratch_dir, write_any
 
 
 # --------------------------------------------------------------------------
@@ -425,15 +425,11 @@ def source_orc_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns it needs, so ORC's column pruning is exercised, not just
     the happy-path scan.
     """
-    import os
-
-    from sparkml_som_spark.operators.sources_queries import _scratch
-
     ev = load_table(spark, sf_dir, "events")
     slice_df = ev.where(F.col("event_id") <= 2000).select(
         "event_id", "event_type", "value"
     )
-    path = _scratch(sf_dir, "events_orc")
+    path = scratch_dir(sf_dir, "events_orc")
     write_any(slice_df, path, fmt="orc")
     back = read_any(spark, path, fmt="orc").select("event_type", "value")
     return back.groupBy("event_type").agg(

@@ -40,16 +40,7 @@ from pyspark.sql import functions as F
 
 from sparkml_som_spark.functions import word_tokens
 from sparkml_som_spark.operators.registry import broadcast, materialize_small, register
-from sparkml_som_spark.sources import load_table
-
-_SCRATCH = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".scratch"
-)
-
-
-def _scratch(sf_dir: str, name: str) -> str:
-    return os.path.join(_SCRATCH, os.path.basename(os.path.normpath(sf_dir)), name)
-
+from sparkml_som_spark.sources import load_table, scratch_dir
 
 _N_SHARDS = 16
 _HIST_WIDTH = 25.0  # events.value spans ~[0, 500) -> ~20 bins
@@ -297,7 +288,7 @@ def source_parquet_schema_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     data rewrite; the aggregation after it confirms no rows were lost or
     mistyped across generations."""
     docs = load_table(spark, sf_dir, "documents")
-    base = _scratch(sf_dir, "docs_evolving")
+    base = scratch_dir(sf_dir, "docs_evolving")
     gen1 = docs.where(F.col("doc_id") % 2 == 0).select("doc_id", "n_chars")
     gen2 = docs.where(F.col("doc_id") % 2 == 1).select("doc_id", "n_chars", "lang")
     gen1.write.mode("overwrite").parquet(os.path.join(base, "gen=1"))

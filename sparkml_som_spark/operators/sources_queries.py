@@ -23,16 +23,7 @@ from pyspark.sql import functions as F
 
 from sparkml_som_spark.operators.registry import register
 from sparkml_som_spark.session import local_frame
-from sparkml_som_spark.sources import load_table, read_any, write_any
-
-# Repo-local scratch (never under /root/testdata or /root/reference);
-# .gitignore'd.  Keyed by sf_dir basename so sf0.01 and sf0.1 runs in
-# one session don't clobber each other.
-_SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".scratch")
-
-
-def _scratch(sf_dir: str, name: str) -> str:
-    return os.path.join(_SCRATCH, os.path.basename(os.path.normpath(sf_dir)), name)
+from sparkml_som_spark.sources import build_once, load_table, read_any, scratch_dir, write_any
 
 
 @register(
@@ -60,7 +51,7 @@ def source_csv_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     slice_df = li.filter(F.col("l_orderkey") <= 4000).select(
         "l_orderkey", "l_linenumber", "l_returnflag", "l_quantity", "l_extendedprice"
     )
-    path = _scratch(sf_dir, "lineitem_csv")
+    path = scratch_dir(sf_dir, "lineitem_csv")
     write_any(slice_df, path, fmt="csv")
     back = read_any(spark, path, fmt="csv")
     return (
@@ -96,7 +87,7 @@ def source_json_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     slice_df = o.filter(F.col("o_orderkey") <= 4000).select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
-    path = _scratch(sf_dir, "orders_json")
+    path = scratch_dir(sf_dir, "orders_json")
     write_any(slice_df, path, fmt="json")
     back = read_any(spark, path, fmt="json")
     return (
@@ -133,7 +124,7 @@ def sink_partitioned_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     slice_df = o.filter(F.col("o_orderkey") <= 4000).select(
         "o_orderkey", "o_orderstatus", "o_orderpriority", "o_totalprice"
     )
-    path = _scratch(sf_dir, "orders_part_sorted")
+    path = scratch_dir(sf_dir, "orders_part_sorted")
     (
         slice_df.repartition("o_orderstatus")
         .sortWithinPartitions("o_orderkey")
@@ -208,7 +199,7 @@ def source_csv_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle derives the same good/corrupt split from the clean
     table.  FAILFAST/DROPMALFORMED are the same reader one option away."""
     o = load_table(spark, sf_dir, "orders").where(F.col("o_orderkey") <= 2000)
-    path = _scratch(sf_dir, "orders_corrupt_csv")
+    path = scratch_dir(sf_dir, "orders_corrupt_csv")
     # corrupt on write, fully distributed: each executor emits its own
     # csv text lines ('N/A' is unparseable in the double column)
     (
@@ -305,14 +296,14 @@ def dpp_partitioned_fact_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries `dynamicpruningexpression` on the scan (plan-tested).  The
     oracle is the statically-filtered equivalent."""
     orders = load_table(spark, sf_dir, "orders")
-    base = _scratch(sf_dir, "orders_dpp_part")
+    base = scratch_dir(sf_dir, "orders_dpp_part")
     orders.write.mode("overwrite").partitionBy("o_orderstatus").parquet(base)
     fact = spark.read.parquet(base)
     # the dimension is a stored table, as in a warehouse: over driver
     # rows (a LocalRelation) the optimizer would fold the label filter
     # into the rows at plan time, and with no Filter left on the build
     # side DPP has no selective predicate to prune by
-    dim_path = _scratch(sf_dir, "status_dim")
+    dim_path = scratch_dir(sf_dir, "status_dim")
     local_frame(
         spark, [("F", "final"), ("O", "open"), ("P", "pending")], "status string, label string"
     ).write.mode("overwrite").parquet(dim_path)
@@ -352,7 +343,7 @@ def sink_compaction_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     read-back aggregate hash-matches the source — compaction must be
     byte-lossless."""
     docs = load_table(spark, sf_dir, "documents")
-    base = _scratch(sf_dir, "docs_compacted")
+    base = scratch_dir(sf_dir, "docs_compacted")
     docs.hint("rebalance").write.mode("overwrite").parquet(base)
     compacted = spark.read.parquet(base)
     return compacted.groupBy("source").agg(
@@ -381,7 +372,7 @@ def source_binaryfile_blobs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum(row lengths + newline) — a truncated or double-read file breaks
     the hash."""
     docs = load_table(spark, sf_dir, "documents")
-    base = _scratch(sf_dir, "docs_blob_files")
+    base = scratch_dir(sf_dir, "docs_blob_files")
     docs.select("text").repartition(8).write.mode("overwrite").text(base)
     blobs = spark.read.format("binaryFile").load(base)
     return blobs.agg(
@@ -417,14 +408,9 @@ def source_multiformat_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side combines across all of them; no format pays for another's
     decode."""
     base = load_table(spark, sf_dir, "orders")
-    csv_path = _scratch(sf_dir, "orders_multifmt_csv")
-    json_path = _scratch(sf_dir, "orders_multifmt_json")
-    if not os.path.isdir(csv_path):
-        write_any(base, csv_path, "csv")
-    if not os.path.isdir(json_path):
-        write_any(base, json_path, "json")
     parts = [base]
-    for path, fmt in ((csv_path, "csv"), (json_path, "json")):
+    for fmt in ("csv", "json"):
+        path = build_once(sf_dir, f"orders_multifmt_{fmt}", lambda p: write_any(base, p, fmt))
         raw = read_any(spark, path, fmt)
         parts.append(
             raw.select(

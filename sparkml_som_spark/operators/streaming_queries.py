@@ -20,12 +20,14 @@ a real continuous trigger, and the memory sink becomes kafka/parquet.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamReader
 
 from sparkml_som_spark.operators.registry import drain_stream, register, session_conf
 from sparkml_som_spark.session import local_frame
-from sparkml_som_spark.sources import load_table
+from sparkml_som_spark.sources import build_once, load_table, scratch_dir
 from sparkml_som_spark.streaming.stateful import stateful_user_profile
 from sparkml_som_spark.streaming.windows import (
     dedup_stream,
@@ -35,28 +37,20 @@ from sparkml_som_spark.streaming.windows import (
     tumbling_window_stream,
 )
 
-_SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".scratch")
-
-# Cache of the per-sf streaming source dir: events.parquet re-written
-# once per (session, sf) with the nanos->micros conversion applied, so
-# five streaming queries don't re-write it five times.
-_SRC_CACHE: dict[str, str] = {}
-_EMB_SRC_CACHE: dict[str, str] = {}
-_DOC_SRC_CACHE: dict[str, str] = {}
+def _events_stream_reader(spark: SparkSession, sf_dir: str) -> tuple[DataStreamReader, str]:
+    """A file-stream reader over the events table and its source dir:
+    events.parquet re-written once per process with the nanos->micros
+    conversion load_table applies, so the streaming entries share one
+    copy (schema from the batch read)."""
+    batch = load_table(spark, sf_dir, "events")
+    path = build_once(sf_dir, "events_stream_src", lambda p: batch.write.mode("overwrite").parquet(p))
+    return spark.readStream.schema(batch.schema), path
 
 
 def _stream_source(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, str]:
-    """File-source stream over the events table (schema from the batch
-    read; nanos timestamps already normalized by load_table)."""
-    batch = load_table(spark, sf_dir, "events")
-    key = os.path.basename(os.path.normpath(sf_dir))
-    path = _SRC_CACHE.get(key)
-    if path is None:
-        path = os.path.join(_SCRATCH, key, "events_stream_src")
-        batch.write.mode("overwrite").parquet(path)
-        _SRC_CACHE[key] = path
-    stream = spark.readStream.schema(batch.schema).parquet(path)
-    return stream, key
+    """File-source stream over the events table, and the sf key."""
+    reader, path = _events_stream_reader(spark, sf_dir)
+    return reader.parquet(path), os.path.basename(os.path.normpath(sf_dir))
 
 
 def _run_to_memory(spark: SparkSession, out: DataFrame, table: str, mode: str) -> DataFrame:
@@ -306,13 +300,7 @@ def stream_som_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     model, emb = fit_default_som(spark, sf_dir)
     key = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(_SCRATCH, key, "emb_stream_src")
-    # rewrite once per PROCESS (same policy as _SRC_CACHE) — a bare
-    # os.path.exists would trust a stale or half-written snapshot from
-    # an earlier process forever while the model fits on current data
-    if _EMB_SRC_CACHE.get(key) != path:
-        emb.write.mode("overwrite").parquet(path)
-        _EMB_SRC_CACHE[key] = path
+    path = build_once(sf_dir, "emb_stream_src", lambda p: emb.write.mode("overwrite").parquet(p))
     stream = spark.readStream.schema(emb.schema).parquet(path)
     out = model.transform(stream).select("vec_id", "prediction")
     sink = _run_to_memory(spark, out, f"sgs_stream_som_{key}".replace(".", "_"), "append")
@@ -356,18 +344,9 @@ def stream_incremental_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     double-counted across batch boundaries."""
     from pyspark.sql import functions as F
 
-    batch = load_table(spark, sf_dir, "events")
     key = os.path.basename(os.path.normpath(sf_dir))
-    path = _SRC_CACHE.get(key)
-    if path is None:
-        path = os.path.join(_SCRATCH, key, "events_stream_src")
-        batch.write.mode("overwrite").parquet(path)
-        _SRC_CACHE[key] = path
-    stream = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "8")
-        .parquet(path)
-    )
+    reader, path = _events_stream_reader(spark, sf_dir)
+    stream = reader.option("maxFilesPerTrigger", "8").parquet(path)
     agg = (
         stream.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
@@ -488,11 +467,11 @@ def stream_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import functions as F
 
-    stream, key = _stream_source(spark, sf_dir)
-    sink_dir = os.path.join(_SCRATCH, key, "feb_sink")
-    ckpt_dir = os.path.join(_SCRATCH, key, "feb_ckpt")
+    stream, _ = _stream_source(spark, sf_dir)
+    sink_dir = scratch_dir(sf_dir, "feb_sink")
+    ckpt_dir = scratch_dir(sf_dir, "feb_ckpt")
     # The source snapshot is rewritten once per process with fresh file
-    # names (_SRC_CACHE); a checkpoint surviving from a previous process
+    # names (build_once); a checkpoint surviving from a previous process
     # would treat the rewritten files as NEW data and append a duplicate
     # batch next to the old sink output (reproduced: every count exactly
     # doubles).  Scope the run to this process: clear sink + checkpoint,
@@ -536,8 +515,9 @@ def stream_incremental_dedup_index(spark: SparkSession, sf_dir: str) -> DataFram
     micro-batches, each batch fingerprints its rows, anti-joins against
     the PERSISTENT index of everything already ingested, and appends
     only the novel fingerprints.  State lives in the index table, not
-    in stream state stores, so it survives restarts and is queryable —
-    the shape a 100 TB ingest actually uses (with the index bucketed on
+    in stream state stores, so it is queryable between batches (the
+    entry starts each run from an empty index) — the shape a 100 TB
+    ingest actually uses (with the index bucketed on
     the fingerprint so the per-batch anti-join is co-located; the
     per-batch cost tracks the BATCH, never the corpus).
 
@@ -550,16 +530,11 @@ def stream_incremental_dedup_index(spark: SparkSession, sf_dir: str) -> DataFram
     from pyspark.sql import functions as F
 
     docs = load_table(spark, sf_dir, "documents")
-    key = os.path.basename(os.path.normpath(sf_dir))
-    # rewritten once per (session, sf) like _SRC_CACHE — an existence
-    # check alone would trust a stale dir from an older session
-    src = _DOC_SRC_CACHE.get(key)
-    if src is None:
-        src = os.path.join(_SCRATCH, key, "docs_stream_src")
-        # 16 source files + maxFilesPerTrigger=4 -> 4 real micro-batches
-        docs.repartition(16).write.mode("overwrite").parquet(src)
-        _DOC_SRC_CACHE[key] = src
-    index_dir = os.path.join(_SCRATCH, key, "dedup_fp_index")
+    # 16 source files + maxFilesPerTrigger=4 -> 4 real micro-batches
+    src = build_once(
+        sf_dir, "docs_stream_src", lambda p: docs.repartition(16).write.mode("overwrite").parquet(p)
+    )
+    index_dir = scratch_dir(sf_dir, "dedup_fp_index")
     shutil.rmtree(index_dir, ignore_errors=True)
 
     stream = (
@@ -632,19 +607,8 @@ def stream_decayed_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
     persistence shape)."""
     from pyspark.sql import functions as F
 
-    batch = load_table(spark, sf_dir, "events")
-    key = os.path.basename(os.path.normpath(sf_dir))
-    src = _SRC_CACHE.get(key)
-    if src is None:
-        src = os.path.join(_SCRATCH, key, "events_stream_src")
-        batch.write.mode("overwrite").parquet(src)
-        _SRC_CACHE[key] = src
-
-    stream = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "8")
-        .parquet(src)
-    )
+    reader, src = _events_stream_reader(spark, sf_dir)
+    stream = reader.option("maxFilesPerTrigger", "8").parquet(src)
     state: dict[str, tuple] = {}  # type -> (as_of_day, decayed, n_total)
 
     def merge(batch_df, batch_id):
@@ -808,6 +772,62 @@ def stream_trending_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _epoch_files(frame: DataFrame, n_epochs: int) -> Callable[[str], None]:
+    """A `build_once` writer for an epoch-ordered stream source: one
+    parquet file per value of ``frame``'s ``epoch`` column, written in
+    epoch order with pinned mtimes so the file stream's
+    modification-time ordering IS epoch order."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    def write(src: str) -> None:
+        os.makedirs(src)
+        for e in range(n_epochs):
+            part_dir = os.path.join(src, f"_build_{e}")
+            frame.where(F.col("epoch") == e).coalesce(1).write.mode("overwrite").parquet(part_dir)
+            pf = [f for f in os.listdir(part_dir) if f.endswith(".parquet")][0]
+            dst = os.path.join(src, f"epoch_{e}.parquet")
+            shutil.move(os.path.join(part_dir, pf), dst)
+            shutil.rmtree(part_dir)
+            os.utime(dst, (1_600_000_000 + e * 100, 1_600_000_000 + e * 100))
+
+    return write
+
+
+def _run_epochs(spark: SparkSession, src: str, n_epochs: int, per_batch, entry: str) -> None:
+    """Drain the `_epoch_files` source ``src`` through ``per_batch``,
+    one file (= one epoch) per micro-batch: maxFilesPerTrigger=1, which
+    Trigger.AvailableNow honors, in pinned-mtime order.
+
+    The callbacks treat each batch as one epoch, so this raises, naming
+    ``entry``, unless the callback ran once per epoch file: a source or
+    trigger change that merged epochs into one batch would otherwise
+    change the admissions silently.  Counting callbacks costs no job;
+    `recentProgress` would not do, as its numInputRows reads 0 for a
+    batch whose frame the callback did not read."""
+    batch_ids: list[int] = []
+
+    def run(batch_df, batch_id):
+        batch_ids.append(batch_id)
+        per_batch(batch_df, batch_id)
+
+    stream = (
+        spark.readStream.schema(spark.read.parquet(src).schema)
+        .option("maxFilesPerTrigger", "1")
+        .option("latestFirst", "false")
+        .parquet(src)
+    )
+    q = stream.writeStream.foreachBatch(run).trigger(availableNow=True).start()
+    drain_stream(q, entry)
+    if batch_ids != list(range(n_epochs)):
+        raise AssertionError(
+            f"{entry}: expected one micro-batch per epoch file ({n_epochs}), "
+            f"got batch ids {batch_ids}; the one-file-per-epoch + "
+            "maxFilesPerTrigger=1 contract is broken"
+        )
+
+
 def _dedup_guard_oracle() -> str:
     """4-epoch unrolled admission replay over the exhaustive near-dup
     pair set: admitted_t = epoch-t docs with no >= 0.8 pair into the
@@ -871,7 +891,6 @@ def stream_minhash_dedup_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch.  State lives in queryable storage, not stream state
     stores (the `stream_incremental_dedup_index` discipline)."""
     import shutil
-    import time as _time
 
     from pyspark.sql import functions as F
 
@@ -881,62 +900,23 @@ def stream_minhash_dedup_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    key = os.path.basename(os.path.normpath(sf_dir))
-    src = os.path.join(_SCRATCH, key, "docs_guard_src")
-    cache_key = f"guard:{key}"
-    if _DOC_SRC_CACHE.get(cache_key) is None:
-        shutil.rmtree(src, ignore_errors=True)
-        os.makedirs(src, exist_ok=True)
-        # one file per epoch, written sequentially with pinned mtimes so
-        # the file stream's modification-time ordering IS epoch order
-        with_epoch = docs.withColumn("epoch", (F.col("doc_id") % 4).cast("int"))
-        for e in range(4):
-            part_dir = os.path.join(src, f"_build_{e}")
-            (
-                with_epoch.where(F.col("epoch") == e)
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(part_dir)
-            )
-            pf = [f for f in os.listdir(part_dir) if f.endswith(".parquet")][0]
-            dst = os.path.join(src, f"epoch_{e}.parquet")
-            shutil.move(os.path.join(part_dir, pf), dst)
-            shutil.rmtree(part_dir)
-            os.utime(dst, (1_600_000_000 + e * 100, 1_600_000_000 + e * 100))
-        _DOC_SRC_CACHE[cache_key] = src
-    admitted_dir = os.path.join(_SCRATCH, key, "guard_admitted")
-    band_dir = os.path.join(_SCRATCH, key, "guard_band_index")
+    src = build_once(
+        sf_dir,
+        "docs_guard_src",
+        _epoch_files(docs.withColumn("epoch", (F.col("doc_id") % 4).cast("int")), 4),
+    )
+    admitted_dir = scratch_dir(sf_dir, "guard_admitted")
+    band_dir = scratch_dir(sf_dir, "guard_band_index")
     shutil.rmtree(admitted_dir, ignore_errors=True)
     shutil.rmtree(band_dir, ignore_errors=True)
 
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("latestFirst", "false")
-        .parquet(src)
-    )
-
     def guard(batch_df, batch_id):
         sp = batch_df.sparkSession
-        # Each micro-batch is exactly ONE epoch: the source dir is built
-        # above with one file per epoch and maxFilesPerTrigger=1, which
-        # Trigger.AvailableNow honors (4 files -> 4 single-file batches
-        # in pinned-mtime order).  A per-batch epoch distinct-collect
-        # would be a pure orchestration job — the r15 drain decomposition
-        # measured it at ~+0.25 s over a no-op drain — so the whole batch
-        # is one epoch group.  The coupling is assertable:
-        # SPARK_GRAFT_STREAM_EPOCH_GUARD=1 enables the check (one extra
-        # job per batch — debug only, ADVICE r15 #2) so a future
-        # source/trigger change cannot silently merge epochs into one
-        # admission group.
-        if os.environ.get("SPARK_GRAFT_STREAM_EPOCH_GUARD") == "1":
-            n_ep = batch_df.select("epoch").distinct().count()
-            if n_ep > 1:
-                raise AssertionError(
-                    f"batch {batch_id} carries {n_ep} epochs; the "
-                    "one-file-per-epoch + maxFilesPerTrigger=1 "
-                    "contract is broken"
-                )
+        # Each micro-batch is exactly ONE epoch (_run_epochs checks the
+        # callback count after the drain), so the whole batch is one
+        # admission group: a per-batch epoch distinct-collect would be a
+        # pure orchestration job — the r15 drain decomposition measured
+        # it at ~+0.25 s over a no-op drain.
         grp = batch_df.select("doc_id", "source", "text")
         # band the batch ONCE; the same rows serve the probe join and
         # (filtered to admissions) the index append — the admitted corpus
@@ -1012,7 +992,7 @@ def stream_minhash_dedup_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit("band").alias("kind"),
             )
         )
-        tmp = os.path.join(_SCRATCH, key, "guard_fused_tmp")
+        tmp = scratch_dir(sf_dir, "guard_fused_tmp")
         shutil.rmtree(tmp, ignore_errors=True)
         out.write.mode("overwrite").partitionBy("kind").parquet(tmp)
         for kind, dst in (("adm", admitted_dir), ("band", band_dir)):
@@ -1028,8 +1008,7 @@ def stream_minhash_dedup_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
                     )
         shutil.rmtree(tmp, ignore_errors=True)
 
-    q = stream.writeStream.foreachBatch(guard).trigger(availableNow=True).start()
-    drain_stream(q, "stream_minhash_dedup_guard")
+    _run_epochs(spark, src, 4, guard, "stream_minhash_dedup_guard")
 
     adm = spark.read.parquet(admitted_dir).withColumn(
         "epoch", (F.col("doc_id") % 4).cast("int")

@@ -8,6 +8,8 @@ names DuckDB uses in the oracle harness.
 from __future__ import annotations
 
 import os
+import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -82,6 +84,37 @@ def load_tables(
             df.createOrReplaceTempView(name)
         out[name] = df
     return out
+
+
+# Repo-local scratch (never under the read-only testdata), .gitignore'd.
+# Keyed by the sf dir's basename so runs at two scales in one process
+# don't clobber each other.
+_SCRATCH_ROOT = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".scratch"
+)
+_BUILT: set[str] = set()
+
+
+def scratch_dir(sf_dir: str, name: str) -> str:
+    """``.scratch/<basename(sf_dir)>/<name>`` under the repo root."""
+    return os.path.join(_SCRATCH_ROOT, os.path.basename(os.path.normpath(sf_dir)), name)
+
+
+def build_once(sf_dir: str, name: str, write: Callable[[str], None]) -> str:
+    """Path of the scratch artifact ``name``, built by ``write(path)``
+    into an emptied dir the first time this process asks for it.
+
+    The one reuse rule for scratch artifacts: reuse lasts only as long
+    as the process that built the artifact.  Nothing an earlier process
+    left on disk is trusted (a crashed, half-written dir or one built
+    from other data looks the same as a good one), and a ``write`` that
+    raises is not recorded, so the next call builds again."""
+    path = scratch_dir(sf_dir, name)
+    if path not in _BUILT:
+        shutil.rmtree(path, ignore_errors=True)
+        write(path)
+        _BUILT.add(path)
+    return path
 
 
 def read_any(spark: SparkSession, path: str, fmt: str | None = None, **options) -> DataFrame:

@@ -23,6 +23,11 @@ from __future__ import annotations
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 
+def _doc_row(d: int) -> tuple:
+    # deterministic formulas; mirrored in the DuckDB oracle
+    return (d, f"src{d % 20}", 20 + (d * 7) % 180)
+
+
 class SynthDocsDataSource(DataSource):
     """``spark.read.format("synthdocs").option("n", N).load()``."""
 
@@ -53,8 +58,7 @@ class SynthDocsReader(DataSourceReader):
         lo = self.n * i // self.parts
         hi = self.n * (i + 1) // self.parts
         for d in range(lo, hi):
-            # deterministic formulas; mirrored in the DuckDB oracle
-            yield (d, f"src{d % 20}", 20 + (d * 7) % 180)
+            yield _doc_row(d)
 
 
 def ensure_registered(spark) -> None:
@@ -103,7 +107,7 @@ class SynthDocsStreamReader(DataSourceStreamReader):
 
     def read(self, partition):
         for d in range(partition.lo, partition.hi):
-            yield (d, f"src{d % 20}", 20 + (d * 7) % 180)
+            yield _doc_row(d)
 
     def commit(self, end):
         pass  # nothing to ack for a deterministic generator
@@ -139,6 +143,32 @@ class JsonlCommit(WriterCommitMessage):
     n_rows: int
 
 
+def _write_jsonl(root: str, fields: list[str], iterator) -> JsonlCommit:
+    """One task's rows to a private per-attempt file under ``root``: a
+    retried task writes a NEW uuid, and only the attempt whose message
+    reaches commit() is manifest-listed."""
+    _os.makedirs(root, exist_ok=True)
+    path = _os.path.join(root, f"part-{_uuid.uuid4().hex}.jsonl")
+    n = 0
+    with open(path, "w") as f:
+        for row in iterator:
+            f.write(_json.dumps(dict(zip(fields, row))) + "\n")
+            n += 1
+    return JsonlCommit(path=path, n_rows=n)
+
+
+def _remove_written(messages) -> None:
+    """abort(): delete the files the tasks that did finish wrote (a
+    failed task's message is None)."""
+    for m in messages:
+        if m is None:
+            continue
+        try:
+            _os.remove(m.path)
+        except OSError:
+            pass
+
+
 class JsonlSinkDataSource(DataSource):
     """``df.write.format("jsonlsink").option("path", dir).save()``."""
 
@@ -156,17 +186,7 @@ class JsonlSinkWriter(DataSourceWriter):
         self.fields = [f.name for f in schema.fields]
 
     def write(self, iterator) -> JsonlCommit:
-        _os.makedirs(self.path, exist_ok=True)
-        # private per-attempt file: a retried task writes a NEW uuid,
-        # and only the attempt whose message reaches commit() is
-        # manifest-listed
-        path = _os.path.join(self.path, f"part-{_uuid.uuid4().hex}.jsonl")
-        n = 0
-        with open(path, "w") as f:
-            for row in iterator:
-                f.write(_json.dumps(dict(zip(self.fields, row))) + "\n")
-                n += 1
-        return JsonlCommit(path=path, n_rows=n)
+        return _write_jsonl(self.path, self.fields, iterator)
 
     def commit(self, messages) -> None:
         manifest = {
@@ -177,11 +197,7 @@ class JsonlSinkWriter(DataSourceWriter):
             _json.dump(manifest, f)
 
     def abort(self, messages) -> None:
-        for m in messages:
-            try:
-                _os.remove(m.path)
-            except OSError:
-                pass
+        _remove_written(messages)
 
 
 def ensure_sink_registered(spark) -> None:
@@ -217,14 +233,7 @@ class JsonlStreamWriter(DataSourceStreamWriter):
         self.fields = [f.name for f in schema.fields]
 
     def write(self, iterator) -> JsonlCommit:
-        _os.makedirs(self.path, exist_ok=True)
-        path = _os.path.join(self.path, f"part-{_uuid.uuid4().hex}.jsonl")
-        n = 0
-        with open(path, "w") as f:
-            for row in iterator:
-                f.write(_json.dumps(dict(zip(self.fields, row))) + "\n")
-                n += 1
-        return JsonlCommit(path=path, n_rows=n)
+        return _write_jsonl(self.path, self.fields, iterator)
 
     def commit(self, messages, batchId: int) -> None:
         manifest = {
@@ -238,13 +247,7 @@ class JsonlStreamWriter(DataSourceStreamWriter):
             _json.dump(manifest, f)
 
     def abort(self, messages, batchId: int) -> None:
-        for m in messages:
-            if m is None:
-                continue
-            try:
-                _os.remove(m.path)
-            except OSError:
-                pass
+        _remove_written(messages)
 
 
 def ensure_stream_sink_registered(spark) -> None:

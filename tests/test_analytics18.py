@@ -55,9 +55,9 @@ def test_stream_writer_batch_manifests(spark):
     files exist."""
     reg = _registry()
     reg["source_python_stream_writer"].fn(spark, SF).collect()
-    from sparkml_som_spark.operators.sources_queries import _scratch
+    from sparkml_som_spark.sources import scratch_dir
 
-    sink = _scratch(SF, "events_psw_sink")
+    sink = scratch_dir(SF, "events_psw_sink")
     manifests = sorted(glob.glob(os.path.join(sink, "_MANIFEST-*.json")))
     assert len(manifests) >= 2, "expected multiple micro-batches"
     total = 0

@@ -312,22 +312,18 @@ def test_stream_sampler_state_equals_batch_recompute(spark, sf_dir, reg):
     the reservoir must equal a batch bottom-k recompute over the
     admitted corpus, and the admission set must equal a pure-NumPy
     4-epoch replay."""
-    import os
-
     from sparkml_som_spark.operators.analytics35 import (
         _SADM_EPOCHS,
         _SADM_K,
         _SADM_TAU,
     )
-    from sparkml_som_spark.operators.streaming_queries import _SCRATCH
-
     from sparkml_som_spark.operators.analytics35 import _SADM_STATE_CAP
+    from sparkml_som_spark.sources import scratch_dir
 
     out = {r["label"]: r for r in reg["stream_dedup_stratified_sample"].fn(spark, sf_dir).collect()}
-    key = os.path.basename(os.path.normpath(sf_dir))
-    adm = spark.read.parquet(os.path.join(_SCRATCH, key, "admit_corpus")).collect()
-    res = spark.read.parquet(os.path.join(_SCRATCH, key, "admit_reservoir")).collect()
-    probe = spark.read.parquet(os.path.join(_SCRATCH, key, "admit_probe")).collect()
+    adm = spark.read.parquet(scratch_dir(sf_dir, "admit_corpus")).collect()
+    res = spark.read.parquet(scratch_dir(sf_dir, "admit_reservoir")).collect()
+    probe = spark.read.parquet(scratch_dir(sf_dir, "admit_probe")).collect()
 
     # (1) reservoir == per-cell bottom-K of the admitted corpus, and
     # the capped probe state == per-cell bottom-CAP of the same corpus

@@ -186,12 +186,9 @@ def test_stream_guard_admissions_monotone(spark, registry):
 
 
 def test_epoch_guard_passes_on_shipped_source(spark, registry):
-    os.environ["SPARK_GRAFT_STREAM_EPOCH_GUARD"] = "1"
-    try:
-        rows = registry["stream_minhash_dedup_guard"].fn(spark, SF).collect()
-        assert len(rows) == 4  # guard ran, no AssertionError, 4 epochs
-    finally:
-        os.environ.pop("SPARK_GRAFT_STREAM_EPOCH_GUARD", None)
+    # the epoch contract check is always on: one callback per epoch file
+    rows = registry["stream_minhash_dedup_guard"].fn(spark, SF).collect()
+    assert len(rows) == 4  # check ran, no AssertionError, 4 epochs
 
 
 def test_bpe_apply_consistent_with_merges(spark, registry):
@@ -228,3 +225,20 @@ def test_span_explain_text_matches_length(spark, registry):
         assert len(toks) == r["longest_run_tokens"]
         assert r["span_text"] in docs[r["a_id"]]
         assert r["span_text"] in docs[r["b_id"]]
+
+
+def test_epoch_check_raises_on_wrong_callback_count(spark, tmp_path):
+    """The epoch-stream runner raises, naming the entry, when the
+    callback did not run once per epoch: here one epoch file is missing,
+    so 3 callbacks ran for 4 epochs."""
+    from sparkml_som_spark.operators.streaming_queries import _epoch_files, _run_epochs
+
+    src = str(tmp_path / "src")
+    frame = spark.range(40).withColumn("epoch", (F.col("id") % 4).cast("int"))
+    _epoch_files(frame, 4)(src)
+    seen = []
+    _run_epochs(spark, src, 4, lambda df, i: seen.append(i), "probe_entry")
+    assert seen == [0, 1, 2, 3]
+    os.remove(os.path.join(src, "epoch_3.parquet"))
+    with pytest.raises(AssertionError, match="probe_entry"):
+        _run_epochs(spark, src, 4, lambda df, i: None, "probe_entry")

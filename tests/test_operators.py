@@ -373,7 +373,6 @@ def test_engine_env_knobs_allowlist():
         "EVENTLOG_DIR",
         "CKPT_MODE",
         "CKPT_DIR",
-        "STREAM_EPOCH_GUARD",
     }
 
 
