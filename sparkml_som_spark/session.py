@@ -28,6 +28,11 @@ def get_spark(
     - shuffle partitions sized to the local core count; on a real cluster
       AQE coalesces from a higher initial number, so this is a floor not
       a hand-tuned constant.
+    - Python workers run under the engine's daemon,
+      ``sparkml_som_spark.worker_daemon``: a task no longer re-reads every
+      zip archive on the workers' path.  Workers must import
+      ``sparkml_som_spark``, from their cwd or ``PYTHONPATH``, as engine
+      UDFs (pickled by reference) already require.
     """
     if cores is None:
         cores = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -62,6 +67,9 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        # Python workers fork from the engine's daemon, which spares each
+        # task a re-read of every zip archive on the workers' path
+        .config("spark.python.daemon.module", "sparkml_som_spark.worker_daemon")
         .config(
             "spark.sql.warehouse.dir",
             os.environ.get(

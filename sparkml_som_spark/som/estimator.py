@@ -505,6 +505,10 @@ class SOM(Estimator, SOMParams, DefaultParamsWritable, DefaultParamsReadable):
         zero = (np.zeros((n_cells, dim), dtype=np.float64), np.zeros(n_cells, dtype=np.int64), 0.0)
 
         n_samples_trained = -1
+        # fold_s: the block fold (BMU + scatter, local or one Spark job);
+        # update_s: neighborhood, smooth update and movement
+        fold_s = update_s = 0.0
+        t_iters = t_blocks
         while it < max_iter and not converged:
             temp = K.temperature(it, max_iter, t_max, t_min, decay)
             bc = sc.broadcast(codebook) if fold is not None and use_broadcast else None
@@ -515,6 +519,8 @@ class SOM(Estimator, SOMParams, DefaultParamsWritable, DefaultParamsReadable):
                 sums, counts, cost = fold(zero, step, _combine)
             if bc is not None:
                 bc.destroy()
+            t_fold = time.perf_counter()
+            fold_s += t_fold - t_iters
 
             weights = K.neighborhood(grid_d, temp, kern)
             new_codebook = K.smooth_update(codebook, sums, counts, weights)
@@ -527,7 +533,8 @@ class SOM(Estimator, SOMParams, DefaultParamsWritable, DefaultParamsReadable):
             # distributed aggregation consumed this iteration
             n_samples_trained = int(counts.sum())
             it += 1
-        t_iters = time.perf_counter()
+            t_iters = time.perf_counter()
+            update_s += t_iters - t_fold
 
         model = SOMModel(prototypes=codebook)
         model._resetUid(self.uid)
@@ -559,6 +566,8 @@ class SOM(Estimator, SOMParams, DefaultParamsWritable, DefaultParamsReadable):
                 "ingest_s": (t_ingest - t0) + (t_blocks - t_init),
                 "init_s": t_init - t_ingest,
                 "iterations_s": t_iters - t_blocks,
+                "fold_s": fold_s,
+                "update_s": update_s,
             },
         )
         if blocks is not None:

@@ -32,7 +32,9 @@ class SOMTrainingSummary:
     n_samples: int = -1
     # wall seconds of each fit phase: ingest_s (projection, sizing and
     # decode), init_s (codebook draw), iterations_s, summary_s (model,
-    # lazy predictions, cache release)
+    # lazy predictions, cache release); iterations_s splits into fold_s
+    # (the block fold: BMU + scatter, local or one Spark job per
+    # iteration) and update_s (neighborhood, smooth update, movement)
     timings: dict[str, float] = field(default_factory=dict)
 
     @property

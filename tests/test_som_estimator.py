@@ -209,11 +209,8 @@ def test_pipeline_compat(spark, small_df):
 def test_local_and_distributed_fit_paths_agree(spark):
     """The small-data driver-local loop must produce the same model as
     the distributed aggregate path (identical kernel math; only the
-    float summation grouping differs)."""
-    import numpy as np
-
-    from sparkml_som_spark.som import SOM
-
+    float summation grouping differs): prototypes to 1e-12, the same
+    trained row count and the same predictions."""
     rng = np.random.default_rng(3)
     df = spark.createDataFrame(
         [(row.tolist(),) for row in rng.random((400, 4))], "features array<double>"
@@ -227,11 +224,20 @@ def test_local_and_distributed_fit_paths_agree(spark):
         _LOCAL_FIT_BYTES = 0  # force the aggregate/treeAggregate path
 
     dist = DistributedSOM(**kwargs).fit(df)
-    assert np.allclose(local.prototypes, dist.prototypes, atol=1e-9)
-    assert np.allclose(
-        local.summary.objective_history, dist.summary.objective_history, atol=1e-9
-    )
-    df.unpersist()
+    try:
+        assert np.abs(local.prototypes - dist.prototypes).max() <= 1e-12
+        assert np.allclose(
+            local.summary.objective_history, dist.summary.objective_history, atol=1e-9
+        )
+        assert local.summary.n_samples == dist.summary.n_samples == 400
+
+        def predictions(model):
+            rows = model.transform(df).select("features", "prediction").collect()
+            return sorted((tuple(r.features), r.prediction) for r in rows)
+
+        assert predictions(local) == predictions(dist)
+    finally:
+        df.unpersist()
 
 
 def test_pipeline_model_persistence(spark, tables, tmp_path):
@@ -397,10 +403,21 @@ def test_fit_phase_timings_cover_fit_wall(spark):
     finally:
         df.unpersist()
     timings = model.summary.timings
-    assert set(timings) == {"ingest_s", "init_s", "iterations_s", "summary_s"}
+    phases = ("ingest_s", "init_s", "iterations_s", "summary_s")
+    assert set(timings) == {*phases, "fold_s", "update_s"}
     assert all(v >= 0 for v in timings.values())
-    total = sum(timings.values())
+    total = sum(timings[k] for k in phases)
     assert 0.8 * wall <= total <= wall
+
+
+@pytest.mark.parametrize("local_fit_bytes", [SOM._LOCAL_FIT_BYTES, 0], ids=["local", "distributed"])
+def test_iterations_split_into_fold_and_update(spark, small_df, local_fit_bytes):
+    class PathSOM(SOM):
+        _LOCAL_FIT_BYTES = local_fit_bytes
+
+    timings = PathSOM(height=3, width=3, maxIter=5, seed=7).fit(small_df).summary.timings
+    assert timings["fold_s"] > 0 and timings["update_s"] > 0
+    assert abs(timings["fold_s"] + timings["update_s"] - timings["iterations_s"]) <= 1e-3
 
 
 def test_warm_start_on_empty_input_keeps_initial_model(spark, small_df):
