@@ -347,7 +347,7 @@ def gini_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = load_table(spark, sf_dir, "orders")
     rev = o.groupBy("o_custkey").agg(F.round(F.sum("o_totalprice"), 4).alias("x"))
-    # opt r16, measured REJECTION: pinning `rev` (materialize_reused)
+    # opt r16, measured REJECTION: pinning `rev` (`localCheckpoint`)
     # before the rank read SLOWER — the range-partitioner's sample pass
     # only re-runs the final aggregate above the groupBy exchange (the
     # shuffle files are reused across the sample and fill passes), which

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from sparkml_som_spark.operators.registry import REGISTRY, materialize_reused, register
+from sparkml_som_spark.operators.registry import REGISTRY, register
 from sparkml_som_spark.operators.text import text_langid_ngram
 from sparkml_som_spark.sources import load_table
 
@@ -312,7 +312,7 @@ def kappa_langid_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pinned-result parent, sf0.01, 4-core host, 4 pairs x 3 reps):
     # unpinned median 3.84 s vs 2.95 s, slower in 4/4 pairs; pinned
     # here 3.14 s vs 3.22 s, 2/4 — flat
-    pred = materialize_reused(text_langid_ngram(spark, sf_dir))
+    pred = text_langid_ngram(spark, sf_dir).localCheckpoint()
     conf = (
         pred.join(docs, "doc_id")
         .groupBy(F.col("lang").alias("gold"), F.col("predicted_lang").alias("predicted"))

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sparkml_som_spark.operators.dedup import _NGRAM_MAX_DF, _NGRAM_ORACLE
-from sparkml_som_spark.operators.registry import materialize_reused, materialize_small, register
+from sparkml_som_spark.operators.registry import materialize_small, register
 from sparkml_som_spark.sources import load_table
 
 _ND_PAIRS = _NGRAM_ORACLE.format(thr=0.8, max_df=_NGRAM_MAX_DF)
@@ -225,7 +225,7 @@ def quality_char_bigram_logloss(spark: SparkSession, sf_dir: str) -> DataFrame:
     # total aggregate — unshareable exchanges, so the bigram explode +
     # count would run twice (opt r15, guide §2.4; A/B at sf0.1: 0.73 s
     # vs 0.86 s min-of-4).  Bounded at ~|charset|^2 rows.
-    vocab = bg.groupBy("b").agg(F.count(F.lit(1)).alias("c")).transform(materialize_reused)
+    vocab = bg.groupBy("b").agg(F.count(F.lit(1)).alias("c")).localCheckpoint()
     total = vocab.agg(F.sum("c").alias("n"))
     scored = bg.join(F.broadcast(vocab), "b").crossJoin(F.broadcast(total))
     return scored.groupBy("source").agg(

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sparkml_som_spark.functions import word_tokens
-from sparkml_som_spark.operators.registry import materialize_reused, register
+from sparkml_som_spark.operators.registry import register
 from sparkml_som_spark.sources import load_table
 
 _BM25_K1 = 1.2
@@ -102,7 +102,7 @@ def bm25_rank_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for i, w in enumerate(_BM25_QUERY)
             ],
         )
-        .transform(materialize_reused)
+        .localCheckpoint()
     )
     dl = per_doc.select("doc_id", "dlen")
     stats = dl.agg(F.count("*").alias("n"), F.avg("dlen").alias("avgdl"))

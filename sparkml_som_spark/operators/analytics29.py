@@ -46,7 +46,7 @@ from sparkml_som_spark.operators.analytics28 import (
     _BM25_QUERY,
     _BM25_TERMS_SQL,
 )
-from sparkml_som_spark.operators.registry import materialize_reused, register
+from sparkml_som_spark.operators.registry import register
 from sparkml_som_spark.sources import load_table
 
 # ---------------------------------------------------------------------------
@@ -244,7 +244,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "source", _dsir_bucket(F.col("feat")).alias("b")
     )
     # r16 continuation, measured REJECTION: pinning `feats`
-    # (materialize_reused) to collapse the two tokenize+explode passes
+    # (`localCheckpoint`) to collapse the two tokenize+explode passes
     # (histogram + scoring) into one measured FLAT — order-alternated
     # A/B at sf0.1, 6 reps: two-pass min 1.557 s vs pinned 1.522 s,
     # pinned better only 2/6 pairwise.  The token-occurrence checkpoint
@@ -260,7 +260,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         # be shared, so the whole feature pass would run twice (opt r15,
         # guide §2.4; A/B at sf0.1: 0.72 s vs 0.83 s min-of-4).  Bounded
         # at _DSIR_BUCKETS rows.
-    ).transform(materialize_reused)
+    ).localCheckpoint()
     totals = bucket_counts.agg(
         F.sum("ct").alias("tott"), F.sum("cr").alias("totr")
     )
@@ -509,7 +509,7 @@ def _bm25_scores(docs: DataFrame) -> DataFrame:
                 for i, w in enumerate(_BM25_QUERY)
             ],
         )
-        .transform(materialize_reused)
+        .localCheckpoint()
     )
     dl = per_doc.select("doc_id", "dlen")
     stats = dl.agg(F.count("*").alias("n"), F.avg("dlen").alias("avgdl"))

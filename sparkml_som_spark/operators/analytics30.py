@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sparkml_som_spark.functions import cosine
-from sparkml_som_spark.operators.registry import materialize_reused, register
+from sparkml_som_spark.operators.registry import register
 from sparkml_som_spark.operators.similarity import topk_per_query
 from sparkml_som_spark.sources import build_once, load_table, scratch_dir
 
@@ -238,10 +238,11 @@ def community_lpa_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
             # join and the carry left-join), so without a per-round
             # materialization the plan doubles every round — 2^rounds
             # replays of round 1 (guide §2.4; interleaved A/B at sf0.1:
-            # 1.13 s vs 1.42 s min-of-4).  Lazy checkpoint: it
-            # materializes inside the next round's first action.
-            # Bounded at one row per node.
-            .transform(lambda d: materialize_reused(d, eager=False, require_truncation=True))
+            # 1.13 s vs 1.42 s min-of-4).  The loop needs its lineage
+            # cut, which a checkpoint does and a persist would not.
+            # Lazy checkpoint: it materializes inside the next round's
+            # first action.  Bounded at one row per node.
+            .localCheckpoint(eager=False)
         )
     return (
         labels.groupBy(F.col("lab").alias("community"))
@@ -321,7 +322,7 @@ def recs_item_item_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         # replays of the lineitem-orders join + distinct + cap window
         # without materialization (opt r15, guide §2.4).  Bounded at
         # _PAIR_CAP rows per customer.
-    ).transform(materialize_reused)
+    ).localCheckpoint()
     n_u = ub.groupBy("b").agg(F.count(F.lit(1)).alias("n"))
     x, y = ub.alias("x"), ub.alias("y")
     co = (

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from sparkml_som_spark.operators.registry import materialize_reused, query_scope, register
+from sparkml_som_spark.operators.registry import query_scope, register
 from sparkml_som_spark.session import local_frame
 from sparkml_som_spark.sources import load_table
 
@@ -323,7 +323,7 @@ def sample_dedup_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
         # materialization each replays the within-cell cosine self-join
         # that produces `dropped` — the entry's one expensive subtree
         # (opt r15, guide §2.4).  Bounded at n_vectors rows, 4 columns.
-        .transform(materialize_reused)
+        .localCheckpoint()
     )
     # per-cell draw through the salted two-phase ranking (the
     # `topk_per_query` discipline): phase 1 keeps the k md5-smallest

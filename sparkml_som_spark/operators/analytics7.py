@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sparkml_som_spark.operators.corpus_ops3 import distributed_global_rank
-from sparkml_som_spark.operators.registry import materialize_reused, register
+from sparkml_som_spark.operators.registry import register
 from sparkml_som_spark.session import local_frame
 from sparkml_som_spark.sources import load_table
 
@@ -462,7 +462,7 @@ def reachability_3hop_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
         # strong-edge filter — so the corpus-scale join+aggregate ran
         # twice (guide §2.4; interleaved A/B at sf0.1: 1.56 s vs 1.80 s
         # min-of-4).  Bounded at nations^2 rows.
-        .transform(materialize_reused)
+        .localCheckpoint()
     )
     stats = e0.agg(F.count("*").alias("n_e"), F.sum("w").alias("tot")).collect()[0]
     n_e, tot = stats["n_e"], stats["tot"]
@@ -472,7 +472,7 @@ def reachability_3hop_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (2 * F.col("w") * F.lit(n_e) >= 3 * F.lit(tot))
         )
         .select("src", "dst")
-        .transform(materialize_reused)  # bounded; reused every hop
+        .localCheckpoint()  # bounded; reused every hop
     )
 
     visited = local_frame(nation.sparkSession, [(_BFS_SOURCE, 0)], "v int, hop int")

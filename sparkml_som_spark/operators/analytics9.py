@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from sparkml_som_spark.operators.registry import materialize_reused, register
+from sparkml_som_spark.operators.registry import register
 from sparkml_som_spark.sources import load_table, read_any, scratch_dir, write_any
 
 
@@ -212,7 +212,7 @@ def basket_lift_brand_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         # lineitem-join + distinct (opt r15, guide §2.4).  Eager local
         # checkpoint = one compute + bounded executor-resident blocks
         # (distinct (order, brand) is far smaller than lineitem).
-        .transform(materialize_reused)
+        .localCheckpoint()
     )
     n = ob.agg(F.countDistinct("o").alias("n_orders"))
     s = ob.groupBy("b").agg(F.count(F.lit(1)).alias("cnt"))

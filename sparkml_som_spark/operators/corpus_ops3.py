@@ -530,7 +530,7 @@ def pipeline_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("copy_rk") == 1)
         .select("doc_id", "source", "n_chars")
     )
-    # opt r16, measured REJECTION: pinning `deduped` (materialize_reused)
+    # opt r16, measured REJECTION: pinning `deduped` (`localCheckpoint`)
     # before the rank measured FLAT — the range-partitioner's sample pass
     # re-runs only the sort+window above the fingerprint exchange (the
     # shuffle files are reused across sample and fill), which costs about

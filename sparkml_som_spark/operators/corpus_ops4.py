@@ -557,7 +557,6 @@ def curriculum_phases(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded per-partition counts (one long per partition — no extra
     corpus pass).  id_checksum pins exact phase membership."""
     from sparkml_som_spark.operators.corpus_ops3 import distributed_global_rank
-    from sparkml_som_spark.operators.registry import materialize_reused
     from sparkml_som_spark.operators.text import quality_scored
 
     docs = load_table(spark, sf_dir, "documents", spread=True)
@@ -567,7 +566,7 @@ def curriculum_phases(spark: SparkSession, sf_dir: str) -> DataFrame:
     # range-partitioner's sample pass and the rank shuffle's fill pass.
     # Pinning it (one row per doc) makes tokenization a single pass; N
     # comes from the rank helper's own partition counts, not a third.
-    q = materialize_reused(q)
+    q = q.localCheckpoint()
     total: list = []
     ranked = distributed_global_rank(
         q,

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from sparkml_som_spark.functions import word_tokens
 from sparkml_som_spark.operators.dedup import _SSD_CTE_PREFIX, _SSD_L, substring_match_pairs
-from sparkml_som_spark.operators.registry import materialize_reused, register, session_conf
+from sparkml_som_spark.operators.registry import register, session_conf
 from sparkml_som_spark.session import local_frame
 from sparkml_som_spark.sources import load_table
 
@@ -304,7 +304,7 @@ def dedup_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # positional-gram index join runs twice (opt r15, guide §2.4;
     # interleaved A/B at sf0.1: 2.43 s vs 2.69 s min-of-5).  Bounded at
     # the candidate-match count the DF cap already pins.
-    pairs = materialize_reused(substring_match_pairs(docs))
+    pairs = substring_match_pairs(docs).localCheckpoint()
     starts = (
         pairs.select(F.col("a_id").alias("doc_id"), F.col("i").alias("s"))
         .unionByName(pairs.select(F.col("b_id").alias("doc_id"), F.col("j").alias("s")))
@@ -504,8 +504,10 @@ def quality_bigram_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the per-doc score then derive from the pinned counts.  Exact-integer
     # identity: SUM(c) over occurrences == SUM(cnt * c) over distinct
     # pairs, COUNT(*) == SUM(cnt), so the one IEEE division is unchanged.
-    dbc = materialize_reused(
-        bg.groupBy("doc_id", "source", "b").agg(F.count(F.lit(1)).alias("cnt"))
+    dbc = (
+        bg.groupBy("doc_id", "source", "b")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .localCheckpoint()
     )
     vocab = dbc.groupBy("b").agg(F.sum("cnt").alias("c"))
     doc_score = (
@@ -522,7 +524,7 @@ def quality_bigram_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the rank helper's own partition counts — a `ranked.count()` would
     # be a SECOND full mapInPandas pass whose only output is a number
     # the helper has already summed
-    doc_score = materialize_reused(doc_score)
+    doc_score = doc_score.localCheckpoint()
     total: list = []
     ranked = distributed_global_rank(
         doc_score, ["score", "doc_id"], total_out=total

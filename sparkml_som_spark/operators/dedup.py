@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sparkml_som_spark.functions import word_grams_positional, word_shingles, word_tokens
-from sparkml_som_spark.operators.registry import broadcast, materialize_reused, register
+from sparkml_som_spark.operators.registry import broadcast, register
 from sparkml_som_spark.sources import build_once, load_table
 
 
@@ -726,7 +726,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialization each side replays the token explode + the two
     # aggregation shuffles (60 bit-vote sums) — the entry's dominant
     # cost (opt r15, guide §2.4).  Bounded at one 2-column row per doc.
-    fps = materialize_reused(bit_votes.select("doc_id", fp_expr.alias("fp")))
+    fps = bit_votes.select("doc_id", fp_expr.alias("fp")).localCheckpoint()
 
     bands = [
         F.shiftright(F.col("fp"), b * _SIMHASH_BAND_BITS)
@@ -1085,7 +1085,7 @@ def dedup_incremental_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         # vs 2.62 s min-of-4).  Bounded at 2x the merged edge count.
         # (dedup_connected_components needs no such checkpoint: its sym
         # is a scan of the persisted edge-set parquet.)
-        .transform(materialize_reused)
+        .localCheckpoint()
     )
     labels = min_label_components(sym)
     return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
@@ -1128,12 +1128,13 @@ def min_label_components(sym: DataFrame, stats: dict | None = None) -> DataFrame
     # Same aggregate shape as the identity init (one groupBy over the
     # edge set) but saves a full propagate-join-checkpoint round —
     # near-dup components have tiny diameters, so this is often a third
-    # of the rounds.
+    # of the rounds.  The loop needs its lineage cut: every checkpoint
+    # in it truncates, so the plan does not nest one level per round.
     labels = (
         sym.groupBy(F.col("src").alias("node"))
         .agg(F.min("dst").alias("nbr_min"))
         .select("node", F.least(F.col("node"), F.col("nbr_min")).alias("label"))
-        .transform(lambda d: materialize_reused(d, require_truncation=True))
+        .localCheckpoint()
     )
     # r16 continuation, measured REJECTION: running this loop with AQE
     # off (the BPE-merge-loop treatment — one job per round instead of
@@ -1180,8 +1181,9 @@ def min_label_components(sym: DataFrame, stats: dict | None = None) -> DataFrame
             )
         # carry the previous label through the checkpoint; the LAZY
         # checkpoint + count below is one job that both materializes
-        # this round's labels and answers convergence
-        stepped = materialize_reused(stepped, eager=False, require_truncation=True)
+        # this round's labels and answers convergence, and it cuts the
+        # lineage the next round would otherwise nest under
+        stepped = stepped.localCheckpoint(eager=False)
         changed = stepped.where(F.col("label") != F.col("prev")).count()
         labels = stepped.select("node", "label")
         if changed == 0:

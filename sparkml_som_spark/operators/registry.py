@@ -68,58 +68,6 @@ def materialize_small(df: DataFrame, max_rows: int = _MATERIALIZE_SMALL_CAP) -> 
     return local_frame(df.sparkSession, table, df.schema)
 
 
-def materialize_reused(
-    df: DataFrame, eager: bool = True, require_truncation: bool = False
-) -> DataFrame:
-    """Materialize an intermediate that several consumers reuse
-    (VERDICT r15 ask #5 / ADVICE r15).  Locally the measured-fastest
-    form is ``localCheckpoint`` — but its blocks are non-replicated
-    executor state with TRUNCATED lineage, so on a real cluster one
-    executor loss makes the query unrecoverable instead of recomputable.
-    ``SPARK_GRAFT_CKPT_MODE`` selects the cluster-appropriate form
-    without touching the measured local default:
-
-    - ``local`` (default): ``localCheckpoint(eager)`` — the r15 measured
-      winner on local[32]; fine wherever executors are stable.
-    - ``persist``: ``persist(MEMORY_AND_DISK)`` (+ count() when eager) —
-      lineage is KEPT, so an executor loss recomputes the blocks; the
-      fault-tolerant choice for corpus-scale intermediates at 100 TB.
-    - ``reliable``: ``df.checkpoint(eager)`` — replicated-store
-      checkpoint; requires ``spark.sparkContext.setCheckpointDir`` (set
-      here lazily from ``SPARK_GRAFT_CKPT_DIR`` or the warehouse tmp).
-
-    ``require_truncation=True`` marks call sites whose CORRECTNESS
-    depends on cutting lineage (iterative loops whose plans nest
-    per-round, stream bodies that append to directories their own plan
-    reads).  ``persist`` keeps lineage and is silently unsafe there, so
-    those sites map persist -> local and a cluster deployment should use
-    ``reliable`` for them.
-    """
-    import os
-
-    mode = os.environ.get("SPARK_GRAFT_CKPT_MODE", "local")
-    if mode == "persist" and not require_truncation:
-        from pyspark import StorageLevel
-
-        out = df.persist(StorageLevel.MEMORY_AND_DISK)
-        if eager:
-            out.count()
-        return out
-    if mode == "reliable":
-        sc = df.sparkSession.sparkContext
-        if sc._jsc.sc().getCheckpointDir().isEmpty():
-            import tempfile
-
-            sc.setCheckpointDir(
-                os.environ.get(
-                    "SPARK_GRAFT_CKPT_DIR",
-                    os.path.join(tempfile.gettempdir(), "sparkml_som_ckpt"),
-                )
-            )
-        return df.checkpoint(eager=eager)
-    return df.localCheckpoint(eager=eager)
-
-
 # --- resource scope ------------------------------------------------------
 # The one scope that is running or was last left holding resources:
 # `running` while an entry runs (a nested entry joins it), and the

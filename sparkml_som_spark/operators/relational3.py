@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from sparkml_som_spark.operators.registry import materialize_reused, register
+from sparkml_som_spark.operators.registry import register
 from sparkml_som_spark.sources import load_table
 
 
@@ -756,7 +756,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         # keys, so its reduce-side aggregate would run twice (opt r15,
         # guide §2.4; interleaved A/B at sf0.1: 0.91 s vs 1.12 s
         # min-of-4).  Bounded at one row per (doc, distinct term).
-        .transform(materialize_reused)
+        .localCheckpoint()
     )
     dfreq = tf.groupBy("term").agg(F.count("*").alias("d"))
     nd = docs.agg(F.count("*").alias("n"))

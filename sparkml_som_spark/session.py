@@ -16,30 +16,25 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import DataType, StructType, TimestampType
 
 
-def get_spark(
-    app_name: str = "sparkml-som-spark",
-    cores: int | str | None = None,
-    shuffle_partitions: int | None = None,
-) -> SparkSession:
+def get_spark(app_name: str = "sparkml-som-spark", cores: int | str | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession with scale-aware defaults.
 
     - AQE on: runtime coalescing of shuffle partitions + skew-join splitting.
     - Arrow on: every pandas_udf / mapInPandas crossing is vectorized.
-    - shuffle partitions sized to the local core count; on a real cluster
-      AQE coalesces from a higher initial number, so this is a floor not
-      a hand-tuned constant.
+    - shuffle partitions: ``SPARK_GRAFT_SHUFFLE``, else the host's core
+      count; on a real cluster AQE coalesces from a higher initial
+      number, so this is a floor not a hand-tuned constant.
     - Python workers run under the engine's daemon,
       ``sparkml_som_spark.worker_daemon``: a task no longer re-reads every
-      zip archive on the workers' path.  Workers must import
-      ``sparkml_som_spark``, from their cwd or ``PYTHONPATH``, as engine
-      UDFs (pickled by reference) already require.
+      zip archive on the workers' path.  The directory that holds
+      ``sparkml_som_spark`` goes on every worker's ``PYTHONPATH``
+      (``spark.executorEnv.PYTHONPATH``), so the daemon and engine UDFs
+      pickled by reference import from any cwd.
     """
     if cores is None:
         cores = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = f"local[{cores}]"
-    if shuffle_partitions is None:
-        n = os.cpu_count() or 8
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", n))
+    shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", os.cpu_count() or 8))
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -70,6 +65,11 @@ def get_spark(
         # Python workers fork from the engine's daemon, which spares each
         # task a re-read of every zip archive on the workers' path
         .config("spark.python.daemon.module", "sparkml_som_spark.worker_daemon")
+        # Spark merges this into each worker's path, the daemon's too
+        .config(
+            "spark.executorEnv.PYTHONPATH",
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        )
         .config(
             "spark.sql.warehouse.dir",
             os.environ.get(

@@ -580,14 +580,21 @@ class SOM(Estimator, SOMParams, DefaultParamsWritable, DefaultParamsReadable):
 class _SOMModelWriter(MLWriter):
     """ML-format writer: params via DefaultParamsWriter metadata + the
     codebook as a parquet table — so `PipelineModel.save` containing a
-    SOM stage works out of the box."""
+    SOM stage works out of the box.  The metadata also carries
+    ``sparseInference``, so a sparse-trained model scores sparse after a
+    reload."""
 
     def __init__(self, instance: "SOMModel") -> None:
         super().__init__()
         self.instance = instance
 
     def saveImpl(self, path: str) -> None:
-        DefaultParamsWriter.saveMetadata(self.instance, path, self.sc)
+        DefaultParamsWriter.saveMetadata(
+            self.instance,
+            path,
+            self.sc,
+            extraMetadata={"sparseInference": self.instance._sparse_inference},
+        )
         self.instance.prototypes_df(self.sparkSession).write.mode("overwrite").parquet(
             os.path.join(path, "prototypes")
         )
@@ -609,6 +616,8 @@ class _SOMModelReader(MLReader):
         model = self._clazz(prototypes=prototypes)
         model._resetUid(metadata["uid"])
         DefaultParamsReader.getAndSetParams(model, metadata)
+        # absent from saves that predate the key: those scored dense
+        model._sparse_inference = bool(metadata.get("sparseInference", False))
         return model
 
 
@@ -624,8 +633,8 @@ class SOMModel(Model, SOMParams, MLWritable):
             np.asarray(prototypes, dtype=np.float64) if prototypes is not None else None
         )
         self.summary: SOMTrainingSummary | None = None
-        # set by SOM._fit when training ran on CSR blocks; keeps
-        # inference nnz-sized for VectorUDT inputs
+        # set by SOM._fit when training ran on CSR blocks (and kept by
+        # save/load); keeps inference nnz-sized for VectorUDT inputs
         self._sparse_inference: bool = False
 
     def setFeaturesCol(self, v: str) -> "SOMModel":

@@ -329,29 +329,6 @@ def test_every_registry_entry_is_documented(registry):
     assert not missing, f"registry entries absent from COVERAGE.md: {missing}"
 
 
-def _rows(spark, registry, name):
-    return sorted(repr(tuple(r)) for r in registry[name].fn(spark, SF).collect())
-
-
-@pytest.mark.parametrize(
-    "name",
-    [
-        "tfidf_top_terms",  # dual-keyed aggregate reuse site (relational3)
-        "dsir_importance_weights",  # broadcast + aggregate dual consumer
-        "dedup_incremental_components",  # iterative loop w/ truncation sites
-    ],
-)
-def test_ckpt_mode_result_invariant(spark, registry, name):
-    os.environ.pop("SPARK_GRAFT_CKPT_MODE", None)
-    base = _rows(spark, registry, name)
-    try:
-        for mode in ("persist", "reliable"):
-            os.environ["SPARK_GRAFT_CKPT_MODE"] = mode
-            assert _rows(spark, registry, name) == base, mode
-    finally:
-        os.environ.pop("SPARK_GRAFT_CKPT_MODE", None)
-
-
 def test_engine_env_knobs_allowlist():
     """The engine reads exactly these SPARK_GRAFT_* variables.  A new
     name here means a new hidden code path: ship one behaviour and
@@ -371,8 +348,6 @@ def test_engine_env_knobs_allowlist():
         "DRIVER_MEM",
         "WAREHOUSE",
         "EVENTLOG_DIR",
-        "CKPT_MODE",
-        "CKPT_DIR",
     }
 
 

@@ -91,6 +91,38 @@ def test_forced_sparse_path_parity(spark, monkeypatch):
     assert p_sparse == p_dense
 
 
+def test_forced_sparse_model_stays_sparse_after_save_and_load(spark, monkeypatch, tmp_path):
+    """The sparse-inference flag survives `SOMModel.load` and
+    `PipelineModel.load`: the reloaded model scores VectorUDT input on the
+    CSR path and gives the in-session model's predictions and distances
+    bit for bit."""
+    from pyspark.ml import Pipeline, PipelineModel
+
+    from sparkml_som_spark.som import SOM as SOMcls
+    from sparkml_som_spark.som import SOMModel
+
+    sparse_df, _ = _twin_dfs(spark)
+    monkeypatch.setattr(SOMcls, "_SPARSE_DENSITY_THRESHOLD", 1.1)
+    monkeypatch.setattr(SOMcls, "_SPARSE_MIN_DIM", 0)
+    df = sparse_df.coalesce(1)
+    som = SOMcls(height=2, width=2, maxIter=4, seed=9, tol=0.0, distanceCol="d2")
+    model = som.fit(df)
+    assert model._sparse_inference
+    model.save(str(tmp_path / "som"))
+    Pipeline(stages=[som]).fit(df).save(str(tmp_path / "pipe"))
+
+    def scores(m):
+        return [(r["prediction"], r["d2"].hex()) for r in m.transform(df).collect()]
+
+    want = scores(model)
+    loaded = SOMModel.load(str(tmp_path / "som"))
+    assert loaded._sparse_inference
+    assert scores(loaded) == want
+    piped = PipelineModel.load(str(tmp_path / "pipe"))
+    assert piped.stages[0]._sparse_inference
+    assert scores(piped) == want
+
+
 def test_forced_sparse_cost_is_sum_of_distances(spark, monkeypatch):
     """On the CSR path too, compute_cost is the sum of transform's
     distanceCol bit for bit; a null vector adds nothing."""

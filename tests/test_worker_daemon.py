@@ -134,3 +134,43 @@ def test_workers_import_the_daemon_via_pythonpath_from_any_cwd(tmp_path):
         timeout=300,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
+
+
+def test_workers_find_the_engine_from_any_cwd_without_pythonpath(tmp_path):
+    # a subprocess, cwd outside the checkout, PYTHONPATH unset: only the
+    # driver's sys.path points at the checkout, so the workers (the daemon
+    # included) find the engine through the session's executor env alone
+    script = textwrap.dedent(
+        """
+        import sys
+
+        sys.path.insert(0, sys.argv[1])
+        import pandas as pd
+        from pyspark.sql import functions as F
+        from sparkml_som_spark.session import get_spark
+
+        spark = get_spark("daemon-cwd-test", cores=1)
+        got = spark.sparkContext.parallelize([1, 2]).map(lambda x: x + 1).collect()
+
+        @F.pandas_udf("long")
+        def plus_one(s: pd.Series) -> pd.Series:
+            return s + 1
+
+        rows = spark.range(3).select(plus_one("id").alias("v")).collect()
+        spark.stop()
+        assert got == [2, 3], got
+        assert sorted(r.v for r in rows) == [1, 2, 3], rows
+        """
+    )
+    env = dict(os.environ)
+    env.pop("PYTHONPATH", None)
+    env.pop("PYSPARK_SUBMIT_ARGS", None)
+    proc = subprocess.run(
+        [sys.executable, "-c", script, REPO],
+        env=env,
+        cwd=str(tmp_path),
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
