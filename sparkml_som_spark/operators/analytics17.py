@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from sparkml_som_spark.operators.analytics9 import _CMS_DEPTH, _CMS_WIDTH
 from sparkml_som_spark.operators.registry import drain_stream, register, session_conf
-from sparkml_som_spark.sources import build_once, load_table, scratch_dir
+from sparkml_som_spark.sources import build_once, load_table, read_parquet, scratch_dir
 
 
 @register(
@@ -160,7 +160,7 @@ def stream_countmin_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         sess = batch_df.sparkSession
         new_cells = batch_cells(batch_df)
         if os.path.isdir(cells_dir):
-            old = sess.read.parquet(cells_dir)
+            old = read_parquet(sess, cells_dir)
             new_cells = (
                 old.unionByName(new_cells)
                 .groupBy("i", "bucket")
@@ -182,7 +182,7 @@ def stream_countmin_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         q = stream.writeStream.foreachBatch(merge).trigger(availableNow=True).start()
         drain_stream(q, "stream_countmin_merge")
 
-    cells = spark.read.parquet(cells_dir)
+    cells = read_parquet(spark, cells_dir)
     tc = (
         docs.select(F.explode(F.split(F.lower("text"), " ")).alias("tok"))
         .groupBy("tok")

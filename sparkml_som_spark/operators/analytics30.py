@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 from sparkml_som_spark.functions import cosine
 from sparkml_som_spark.operators.registry import register
 from sparkml_som_spark.operators.similarity import topk_per_query
-from sparkml_som_spark.sources import build_once, load_table, scratch_dir
+from sparkml_som_spark.sources import build_once, load_table, read_parquet, scratch_dir
 
 # Hot-group guard for the C(n,2) pair builders: cap members per group
 # at _PAIR_CAP by deterministic hash rank BEFORE the self-join, so one
@@ -126,14 +126,14 @@ def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             "overwrite"
         ).parquet(scratch_dir(sf_dir, "copurchase_nodes_v1"))
 
-    return spark.read.parquet(build_once(sf_dir, "copurchase_edges_v1", write))
+    return read_parquet(spark, build_once(sf_dir, "copurchase_edges_v1", write))
 
 
 def copurchase_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct part nodes of the co-purchase graph (same build-once
     artifact as `copurchase_edges`; isolated nodes included)."""
     copurchase_edges(spark, sf_dir)  # ensure the build ran
-    return spark.read.parquet(scratch_dir(sf_dir, "copurchase_nodes_v1"))
+    return read_parquet(spark, scratch_dir(sf_dir, "copurchase_nodes_v1"))
 
 
 # ---------------------------------------------------------------------------

@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sparkml_som_spark.operators.registry import drain_stream, register, session_conf
-from sparkml_som_spark.sources import build_once, load_table, scratch_dir
+from sparkml_som_spark.sources import build_once, load_table, read_parquet, scratch_dir
 
 # ---------------------------------------------------------------------------
 # Streaming mergeable quantile sketch
@@ -108,7 +108,7 @@ def stream_quantile_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         sess = batch_df.sparkSession
         cells = batch_cells(batch_df)
         if os.path.isdir(cells_dir):
-            old = sess.read.parquet(cells_dir)
+            old = read_parquet(sess, cells_dir)
             cells = (
                 old.unionByName(cells)
                 .groupBy("event_type", "bin")
@@ -126,7 +126,7 @@ def stream_quantile_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         q = stream.writeStream.foreachBatch(merge).trigger(availableNow=True).start()
         drain_stream(q, "stream_quantile_merge")
 
-    merged = spark.read.parquet(cells_dir)
+    merged = read_parquet(spark, cells_dir)
     w_cum = Window.partitionBy("event_type").orderBy("bin")
     w_all = Window.partitionBy("event_type")
     cum = merged.withColumn("cum_n", F.sum("n").over(w_cum)).withColumn(
@@ -454,7 +454,7 @@ def lsh_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(path)
         )
 
-    truth = spark.read.parquet(build_once(sf_dir, "lsh_truth_tau05", write_truth))
+    truth = read_parquet(spark, build_once(sf_dir, "lsh_truth_tau05", write_truth))
     truth.persist()
     n_truth = truth.count()
 

@@ -54,7 +54,7 @@ from sparkml_som_spark.operators.analytics28 import _BM25_QUERY
 from sparkml_som_spark.operators.analytics29 import _RRF_ORACLE, _RRF_QVEC, _RRF_TOPK
 from sparkml_som_spark.operators.registry import register
 from sparkml_som_spark.session import local_frame
-from sparkml_som_spark.sources import build_once, load_table, scratch_dir
+from sparkml_som_spark.sources import build_once, load_table, read_parquet, scratch_dir
 
 # ---------------------------------------------------------------------------
 # Cross-features reranker over the RRF candidate pool
@@ -826,7 +826,7 @@ def stream_dedup_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFram
             # probe against the CAPPED per-cell state, never the full
             # admitted corpus: pairs per cell are bounded at
             # batch_cell_rows x _SADM_STATE_CAP at any skew
-            state = sp.read.parquet(probe_dir)
+            state = read_parquet(sp, probe_dir)
             rejected = (
                 grp.alias("x")
                 .join(
@@ -865,7 +865,7 @@ def stream_dedup_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFram
         # along for the output).
         ppool = admitted.select("vec_id", "label", "v", "cx", "cy")
         if os.path.isdir(probe_dir):
-            ppool = ppool.unionByName(sp.read.parquet(probe_dir))
+            ppool = ppool.unionByName(read_parquet(sp, probe_dir))
         new_probe = hash_bottom_k(ppool, ("cx", "cy"), _SADM_STATE_CAP)
         probe_tmp = probe_dir + "_tmp"
 
@@ -900,18 +900,18 @@ def stream_dedup_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFram
 
     _run_epochs(spark, src, _SADM_EPOCHS, admit, "stream_dedup_stratified_sample")
 
-    adm = spark.read.parquet(admitted_dir)
+    adm = read_parquet(spark, admitted_dir)
     # materialize the reservoir from the final probe state: per-cell
     # bottom-K, equal to bottom-K over ALL admitted rows because
     # K <= CAP under the same md5 order (merge-invariance); kept as a
     # queryable parquet artifact like the probe state
     (
-        hash_bottom_k(spark.read.parquet(probe_dir), ("cx", "cy"), _SADM_K)
+        hash_bottom_k(read_parquet(spark, probe_dir), ("cx", "cy"), _SADM_K)
         .select("vec_id", "label", "cx", "cy")
         .write.mode("overwrite")
         .parquet(reservoir_dir)
     )
-    res = spark.read.parquet(reservoir_dir)
+    res = read_parquet(spark, reservoir_dir)
     totals = shaped.groupBy("label").agg(F.count(F.lit(1)).alias("n_vectors"))
     adm_counts = adm.groupBy("label").agg(F.count(F.lit(1)).alias("n_admitted"))
     res_counts = res.groupBy("label").agg(

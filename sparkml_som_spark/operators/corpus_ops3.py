@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 
 from sparkml_som_spark.functions import word_tokens
 from sparkml_som_spark.operators.registry import broadcast, materialize_small, register
-from sparkml_som_spark.sources import load_table, scratch_dir
+from sparkml_som_spark.sources import load_table, read_parquet, scratch_dir
 
 _N_SHARDS = 16
 _HIST_WIDTH = 25.0  # events.value spans ~[0, 500) -> ~20 bins
@@ -293,8 +293,8 @@ def source_parquet_schema_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     gen2 = docs.where(F.col("doc_id") % 2 == 1).select("doc_id", "n_chars", "lang")
     gen1.write.mode("overwrite").parquet(os.path.join(base, "gen=1"))
     gen2.write.mode("overwrite").parquet(os.path.join(base, "gen=2"))
-    merged = spark.read.option("mergeSchema", "true").parquet(
-        os.path.join(base, "gen=1"), os.path.join(base, "gen=2")
+    merged = read_parquet(
+        spark, os.path.join(base, "gen=1"), os.path.join(base, "gen=2"), mergeSchema="true"
     )
     return merged.groupBy("lang").agg(
         F.count("*").alias("n_docs"),

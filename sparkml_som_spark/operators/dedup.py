@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from sparkml_som_spark.functions import word_grams_positional, word_shingles, word_tokens
 from sparkml_som_spark.operators.registry import broadcast, register
-from sparkml_som_spark.sources import build_once, load_table
+from sparkml_som_spark.sources import build_once, load_table, read_parquet
 
 
 @register(
@@ -332,7 +332,7 @@ def delta_verified_pairs(spark: SparkSession, sf_dir: str, docs: DataFrame) -> D
         .write.mode("overwrite")
         .parquet(path),
     )
-    index_existing = spark.read.parquet(idx_path)
+    index_existing = read_parquet(spark, idx_path)
     # delta-side min-hashing touches ONLY the new batch's docs
     delta = minhash_band_buckets(docs.where(F.col("doc_id") >= _INCR_SPLIT))
     index = index_existing.unionByName(delta)
@@ -603,7 +603,7 @@ def dedup_incremental_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(path),
     )
-    index_existing = spark.read.parquet(idx_path)
+    index_existing = read_parquet(spark, idx_path)
     delta = positional_grams(docs.where(F.col("doc_id") >= _INCR_SPLIT))
     grams = index_existing.unionByName(delta)
     # b-side restricted to delta docs: with a_id < b_id this captures
@@ -1015,7 +1015,7 @@ def jaccard_sym_edges(
 
     # thr is part of the artifact name: a caller passing thr != 0.8 must
     # NOT receive the 0.8 edge set another caller built
-    out = spark.read.parquet(build_once(sf_dir, f"jaccard{str(thr).replace('.', '')}_sym_edges_v2", write))
+    out = read_parquet(spark, build_once(sf_dir, f"jaccard{str(thr).replace('.', '')}_sym_edges_v2", write))
     return out if with_jaccard else out.select("src", "dst")
 
 
@@ -1068,7 +1068,7 @@ def dedup_incremental_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).union(edges.select(F.col("b_id").alias("src"), F.col("a_id").alias("dst")))
         min_label_components(sym_exist).write.mode("overwrite").parquet(path)
 
-    assign = spark.read.parquet(build_once(sf_dir, "cc_assign_existing", write))  # (node, label)
+    assign = read_parquet(spark, build_once(sf_dir, "cc_assign_existing", write))  # (node, label)
     delta_edges = delta_verified_pairs(spark, sf_dir, docs).select("a_id", "b_id")
     star = assign.where(F.col("node") != F.col("label")).select(
         F.col("node").alias("a_id"), F.col("label").alias("b_id")

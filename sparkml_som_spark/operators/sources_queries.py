@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from sparkml_som_spark.operators.registry import register
 from sparkml_som_spark.session import local_frame
-from sparkml_som_spark.sources import build_once, load_table, read_any, scratch_dir, write_any
+from sparkml_som_spark.sources import build_once, load_table, read_any, read_parquet, scratch_dir, write_any
 
 
 @register(
@@ -132,7 +132,7 @@ def sink_partitioned_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .partitionBy("o_orderstatus")
         .parquet(path)
     )
-    back = spark.read.parquet(path).filter(F.col("o_orderstatus") == "F")
+    back = read_parquet(spark, path).filter(F.col("o_orderstatus") == "F")
     return (
         back.groupBy("o_orderpriority")
         .agg(
@@ -298,7 +298,7 @@ def dpp_partitioned_fact_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     base = scratch_dir(sf_dir, "orders_dpp_part")
     orders.write.mode("overwrite").partitionBy("o_orderstatus").parquet(base)
-    fact = spark.read.parquet(base)
+    fact = read_parquet(spark, base)
     # the dimension is a stored table, as in a warehouse: over driver
     # rows (a LocalRelation) the optimizer would fold the label filter
     # into the rows at plan time, and with no Filter left on the build
@@ -307,7 +307,7 @@ def dpp_partitioned_fact_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     local_frame(
         spark, [("F", "final"), ("O", "open"), ("P", "pending")], "status string, label string"
     ).write.mode("overwrite").parquet(dim_path)
-    dim = spark.read.parquet(dim_path)
+    dim = read_parquet(spark, dim_path)
     return (
         fact.join(
             dim.where(F.col("label") == "final"),
@@ -345,7 +345,7 @@ def sink_compaction_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     base = scratch_dir(sf_dir, "docs_compacted")
     docs.hint("rebalance").write.mode("overwrite").parquet(base)
-    compacted = spark.read.parquet(base)
+    compacted = read_parquet(spark, base)
     return compacted.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_chars").alias("sum_chars"),

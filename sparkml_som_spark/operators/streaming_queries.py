@@ -27,7 +27,7 @@ from pyspark.sql.streaming import DataStreamReader
 
 from sparkml_som_spark.operators.registry import drain_stream, register, session_conf
 from sparkml_som_spark.session import local_frame
-from sparkml_som_spark.sources import build_once, load_table, scratch_dir
+from sparkml_som_spark.sources import build_once, load_table, read_parquet, scratch_dir
 from sparkml_som_spark.streaming.stateful import stateful_user_profile
 from sparkml_som_spark.streaming.windows import (
     dedup_stream,
@@ -53,19 +53,35 @@ def _stream_source(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, str]:
     return reader.parquet(path), os.path.basename(os.path.normpath(sf_dir))
 
 
-def _run_to_memory(spark: SparkSession, out: DataFrame, table: str, mode: str) -> DataFrame:
+def _run_to_memory(
+    spark: SparkSession, out: DataFrame, table: str, mode: str, *, no_data_batch: bool = True
+) -> DataFrame:
     """Drain an AvailableNow query into a memory sink and return the
     sink contents.  Distinctive `sgs_` view prefix avoids colliding
     with the harness's pre-registered table views.
 
-    The stream runs with a reduced shuffle-partition count (restored
-    after): stateful operators create one state store per shuffle
-    partition per micro-batch, and at registry-test data volumes the
-    per-store open/commit overhead dominates — 8 stores move the same
-    rows with a quarter of the commits.  On a real firehose the right
-    number is sized to state volume, not to this constant; it is fixed
-    into the checkpoint at first start either way."""
-    with session_conf(spark, "spark.sql.shuffle.partitions", "8"):
+    The stream runs with ``min(8, defaultParallelism)`` shuffle
+    partitions (restored after): stateful operators create one state
+    store per shuffle partition per micro-batch, and at registry-test
+    data volumes the per-store open/commit overhead dominates — 8
+    stores move the same rows with a quarter of the commits, and no
+    more stores than cores keeps each micro-batch to one task wave.  On
+    a real firehose the right number is sized to state volume, not to
+    the core count; it is fixed into the checkpoint at first start
+    either way.
+
+    ``no_data_batch=False`` turns off the trailing no-data micro-batch
+    that only advances the watermark.  Pass it only where no row the
+    sink holds comes from a watermark advance, so that batch can only
+    evict state the stopped query throws away: an outer join's null
+    rows, a window's append-mode rows and a timeout's rows come from
+    it."""
+    parts = min(8, spark.sparkContext.defaultParallelism)
+    nodata = "spark.sql.streaming.noDataMicroBatches.enabled"
+    with (
+        session_conf(spark, "spark.sql.shuffle.partitions", str(parts)),
+        session_conf(spark, nodata, str(no_data_batch).lower()),
+    ):
         q = (
             out.writeStream.format("memory")
             .queryName(table)
@@ -165,7 +181,10 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream, key = _stream_source(spark, sf_dir)
-    return _run_to_memory(spark, dedup_stream(stream), f"sgs_stream_dedup_{key}".replace(".", "_"), "append")
+    # rows are emitted on first arrival; the watermark batch only evicts state
+    return _run_to_memory(
+        spark, dedup_stream(stream), f"sgs_stream_dedup_{key}".replace(".", "_"), "append", no_data_batch=False
+    )
 
 
 @register(
@@ -192,7 +211,8 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         s_stream.where(F.col("event_type") == "signup"),
         c_stream.where(F.col("event_type") == "click"),
     )
-    return _run_to_memory(spark, out, f"sgs_stream_ijoin_{key}".replace(".", "_"), "append")
+    # an inner join emits on a match; the watermark batch only evicts state
+    return _run_to_memory(spark, out, f"sgs_stream_ijoin_{key}".replace(".", "_"), "append", no_data_batch=False)
 
 
 @register(
@@ -238,8 +258,9 @@ def stream_interval_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame
         s_stream.where(F.col("event_type") == "signup"),
         c_stream.where(F.col("event_type") == "click"),
     )
+    # an inner join emits on a match; the watermark batch only evicts state
     return _run_to_memory(
-        spark, out, f"sgs_stream_ijoin_bkt_{key}".replace(".", "_"), "append"
+        spark, out, f"sgs_stream_ijoin_bkt_{key}".replace(".", "_"), "append", no_data_batch=False
     )
 
 
@@ -493,7 +514,7 @@ def stream_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     drain_stream(q, "stream_foreachbatch_sink", timeout_s=120)
-    back = spark.read.option("basePath", sink_dir).parquet(sink_dir)
+    back = read_parquet(spark, sink_dir, basePath=sink_dir)
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.round(F.sum("value"), 4).alias("sum_value"),
@@ -547,7 +568,7 @@ def stream_incremental_dedup_index(spark: SparkSession, sf_dir: str) -> DataFram
     def merge(batch_df, batch_id):
         batch = batch_df.dropDuplicates(["source", "fp"])
         if os.path.isdir(index_dir):
-            idx = batch_df.sparkSession.read.parquet(index_dir)
+            idx = read_parquet(batch_df.sparkSession, index_dir)
             batch = batch.join(idx, ["source", "fp"], "left_anti")
         batch.write.mode("append").parquet(index_dir)
 
@@ -558,7 +579,7 @@ def stream_incremental_dedup_index(spark: SparkSession, sf_dir: str) -> DataFram
     )
     drain_stream(q, "stream_incremental_dedup_index")
     return (
-        spark.read.parquet(index_dir)
+        read_parquet(spark, index_dir)
         .groupBy("source")
         .agg(F.count(F.lit(1)).alias("n_unique"))
     )
@@ -813,7 +834,7 @@ def _run_epochs(spark: SparkSession, src: str, n_epochs: int, per_batch, entry: 
         per_batch(batch_df, batch_id)
 
     stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
+        spark.readStream.schema(read_parquet(spark, src).schema)
         .option("maxFilesPerTrigger", "1")
         .option("latestFirst", "false")
         .parquet(src)
@@ -933,8 +954,8 @@ def stream_minhash_dedup_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
             # explicit selects: the state files carry the union schema
             # (null band/sig on admitted rows and vice versa); narrowing
             # here keeps the union below aligned
-            adm = sp.read.parquet(admitted_dir).select("doc_id", "source", "text")
-            idx = sp.read.parquet(band_dir).select("doc_id", "band", "sig")
+            adm = read_parquet(sp, admitted_dir).select("doc_id", "source", "text")
+            idx = read_parquet(sp, band_dir).select("doc_id", "band", "sig")
             cand = (
                 bb.alias("x")
                 .join(
@@ -1010,7 +1031,7 @@ def stream_minhash_dedup_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _run_epochs(spark, src, 4, guard, "stream_minhash_dedup_guard")
 
-    adm = spark.read.parquet(admitted_dir).withColumn(
+    adm = read_parquet(spark, admitted_dir).withColumn(
         "epoch", (F.col("doc_id") % 4).cast("int")
     )
     totals = docs.withColumn("epoch", (F.col("doc_id") % 4).cast("int")).groupBy(

@@ -7,7 +7,10 @@ so the same builder is used in tests, bench, and the driver contract.
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
 import tempfile
 
 import pyarrow as pa
@@ -30,6 +33,8 @@ def get_spark(app_name: str = "sparkml-som-spark", cores: int | str | None = Non
       ``sparkml_som_spark`` goes on every worker's ``PYTHONPATH``
       (``spark.executorEnv.PYTHONPATH``), so the daemon and engine UDFs
       pickled by reference import from any cwd.
+    - warehouse: ``SPARK_GRAFT_WAREHOUSE``, else a dir of this process's
+      own (``default_warehouse``).
     """
     if cores is None:
         cores = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -61,6 +66,10 @@ def get_spark(app_name: str = "sparkml-som-spark", cores: int | str | None = Non
         # codec, SMJ preference, SHJ threshold: Spark defaults (OPTIMIZATION_r15.md §3/§3a)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.sql.session.timeZone", "UTC")
+        # TIMESTAMP(NANOS) parquet columns read as long (load_table converts
+        # them); set here, not per read, so an inferred schema never depends
+        # on which read came first
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
         # Python workers fork from the engine's daemon, which spares each
         # task a re-read of every zip archive on the workers' path
@@ -70,12 +79,7 @@ def get_spark(app_name: str = "sparkml-som-spark", cores: int | str | None = Non
             "spark.executorEnv.PYTHONPATH",
             os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         )
-        .config(
-            "spark.sql.warehouse.dir",
-            os.environ.get(
-                "SPARK_GRAFT_WAREHOUSE", os.path.join(tempfile.gettempdir(), "sparkml_som_warehouse")
-            ),
-        )
+        .config("spark.sql.warehouse.dir", os.environ.get("SPARK_GRAFT_WAREHOUSE") or default_warehouse())
     )
     # opt-in event log, read by perfbench/spans.py (`read_events`): task
     # metrics are only readable from the event log with the UI disabled.
@@ -91,6 +95,16 @@ def get_spark(app_name: str = "sparkml-som-spark", cores: int | str | None = Non
             .config("spark.eventLog.rolling.enabled", "false")
         )
     return builder.getOrCreate()
+
+
+@functools.cache
+def default_warehouse() -> str:
+    """This process's own warehouse dir, made on first use and removed at
+    exit.  A dir shared between processes lets one process's managed
+    table collide with, or be deleted under, another's."""
+    path = tempfile.mkdtemp(prefix="sparkml_som_warehouse_")
+    atexit.register(shutil.rmtree, path, True)
+    return path
 
 
 def local_frame(spark: SparkSession, data, schema: StructType | str) -> DataFrame:

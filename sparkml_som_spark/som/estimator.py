@@ -69,6 +69,7 @@ from sparkml_som_spark.session import local_frame
 from sparkml_som_spark.som import kernel as K
 from sparkml_som_spark.som.params import SOMParams
 from sparkml_som_spark.som.summary import SOMTrainingSummary
+from sparkml_som_spark.sources import read_parquet
 
 def _is_vector(df: DataFrame, col: str) -> bool:
     return df.schema[col].dataType.typeName() in ("vector", "vectorudt")
@@ -608,7 +609,7 @@ class _SOMModelReader(MLReader):
     def load(self, path: str) -> "SOMModel":
         metadata = DefaultParamsReader.loadMetadata(path, self.sc)
         rows = (
-            self.sparkSession.read.parquet(os.path.join(path, "prototypes"))
+            read_parquet(self.sparkSession, os.path.join(path, "prototypes"))
             .orderBy("cell")
             .collect()
         )

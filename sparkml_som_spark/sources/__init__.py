@@ -12,6 +12,9 @@ import shutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+from sparkml_som_spark.worker_daemon import _stamp
 
 TABLE_NAMES = [
     "region",
@@ -31,18 +34,16 @@ DIM_TABLES = {"region", "nation", "supplier", "part", "customer"}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str, spread: bool = False) -> DataFrame:
-    path = os.path.join(sf_dir, f"{name}.parquet")
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         # events.parquet has shipped with three different physical types for
-        # `ts` across testdata generations: TIMESTAMP(NANOS) (rejected by the
-        # parquet reader unless read as long), TIMESTAMP(MICROS) without a
-        # timezone (inferred as TIMESTAMP_NTZ by Spark 4), and plain LTZ.
-        # Normalize ALL of them to TIMESTAMP (LTZ) here, in the one place
+        # `ts` across testdata generations: TIMESTAMP(NANOS) (read as long:
+        # get_spark sets spark.sql.legacy.parquet.nanosAsLong), TIMESTAMP(MICROS)
+        # without a timezone (inferred as TIMESTAMP_NTZ by Spark 4), and plain
+        # LTZ.  Normalize ALL of them to TIMESTAMP (LTZ) here, in the one place
         # every batch query, stream snapshot, and test fixture loads from:
         # withWatermark()/window() require LTZ, and the session timezone is
         # pinned UTC (session.py) so the cast never shifts wall-clock values.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
         from pyspark.sql import functions as F
 
         ts_type = dict(df.dtypes).get("ts")
@@ -51,10 +52,40 @@ def load_table(spark: SparkSession, sf_dir: str, name: str, spread: bool = False
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         elif ts_type and ts_type != "timestamp":
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    else:
-        df = spark.read.parquet(path)
     if spread:
         df = _spread(df)
+    return df
+
+
+# (paths, options) -> (the paths' stat stamps, the schema Spark inferred)
+_SCHEMAS: dict[tuple, tuple[tuple, StructType]] = {}
+
+
+def read_parquet(spark: SparkSession, *paths: str, **options) -> DataFrame:
+    """``spark.read.options(**options).parquet(*paths)``, inferring the
+    schema at most once per process while the paths are unchanged.
+
+    Spark reads parquet footers in a Spark job to infer a schema, on
+    every read.  The first read here lets it; the schema is recorded
+    with each path's stat stamp (mtime, size, inode), and later reads
+    whose stamps all match pass it back with ``.schema``, which starts
+    no job.  Spark still lists the files on every read, so files added
+    in a partition subdirectory (which leaves the path's stamp alone)
+    are still read; a rewritten path has a new stamp and is inferred
+    again.  The record lasts as long as the process, like
+    ``build_once``'s.  The conf keys that shape an inferred schema
+    (``nanosAsLong`` among them) are fixed by ``get_spark``'s builder.
+    A path that cannot be stat'ed (a URI, or missing) is never recorded."""
+    key = (tuple(os.path.abspath(p) for p in paths), tuple(sorted(options.items())))
+    try:
+        stamps = tuple(_stamp(p) for p in paths)
+    except OSError:
+        return spark.read.options(**options).parquet(*paths)
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == stamps:
+        return spark.read.options(**options).schema(hit[1]).parquet(*paths)
+    df = spark.read.options(**options).parquet(*paths)
+    _SCHEMAS[key] = (stamps, df.schema)
     return df
 
 
@@ -122,6 +153,8 @@ def read_any(spark: SparkSession, path: str, fmt: str | None = None, **options) 
     if fmt is None:
         ext = os.path.splitext(path)[1].lstrip(".").lower()
         fmt = {"pq": "parquet", "jsonl": "json", "txt": "text"}.get(ext, ext or "parquet")
+    if fmt == "parquet":
+        return read_parquet(spark, path, **options)
     reader = spark.read
     if fmt == "csv":
         reader = reader.option("header", "true").option("inferSchema", "true")

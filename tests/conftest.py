@@ -30,14 +30,13 @@ def tables(spark, sf_dir):
 
 
 # Session conf keys a registry entry must leave as it found them, both
-# the effective and the explicit value.  Not watched:
-# spark.sql.legacy.parquet.nanosAsLong — load_table sets it on every
-# `events` read, and restoring it would break an `events` DataFrame
-# loaded earlier and read later, such as the session `tables` fixture.
+# the effective and the explicit value.
 WATCHED_CONF = (
     "spark.sql.adaptive.enabled",
     "spark.sql.shuffle.partitions",
     "spark.sql.scripting.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.streaming.noDataMicroBatches.enabled",
 )
 
 

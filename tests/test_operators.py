@@ -377,3 +377,40 @@ def test_engine_create_dataframe_allowlist():
                         ]
                         sites.append((f, owners[-1] if owners else None))
     assert sites == [("session.py", "local_frame")]
+
+
+def test_engine_parquet_read_allowlist():
+    """Parquet goes through one reader, `sources.read_parquet`, which
+    infers a path's schema once per process.  A direct `.read.parquet`
+    anywhere else starts a footer-reading Spark job on every read."""
+    import ast
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = os.path.join(repo, "sparkml_som_spark")
+
+    def reads(node):
+        while isinstance(node, (ast.Call, ast.Attribute)):
+            if isinstance(node, ast.Attribute) and node.attr == "read":
+                return True
+            node = node.func if isinstance(node, ast.Call) else node.value
+        return False
+
+    sites = []
+    for root, _dirs, files in os.walk(pkg):
+        for f in files:
+            if f.endswith(".py"):
+                tree = ast.parse(open(os.path.join(root, f)).read())
+                funcs = [n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)]
+                for node in ast.walk(tree):
+                    if (
+                        isinstance(node, ast.Call)
+                        and isinstance(node.func, ast.Attribute)
+                        and node.func.attr == "parquet"
+                        and reads(node.func.value)
+                    ):
+                        owners = [
+                            fn.name for fn in funcs if fn.lineno <= node.lineno <= fn.end_lineno
+                        ]
+                        rel = os.path.relpath(os.path.join(root, f), pkg)
+                        sites.append((rel, owners[-1] if owners else None))
+    assert sites and set(sites) == {(os.path.join("sources", "__init__.py"), "read_parquet")}, sites

@@ -107,3 +107,34 @@ def test_python_stream_datasource_matches_batch(spark):
             F.count("*"), F.sum("n_tokens"), F.sum("doc_id")
         ).first()
         assert tuple(got) == tuple(want), parts
+
+
+def _next_job_id(spark):
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def test_second_load_table_starts_no_job(spark):
+    first = load_table(spark, SF, "events")
+    before = _next_job_id(spark)
+    again = load_table(spark, SF, "events")
+    assert _next_job_id(spark) == before
+    assert again.sameSemantics(first)
+
+
+def test_read_parquet_reuses_schema_until_the_path_changes(spark, tmp_path):
+    from sparkml_som_spark.sources import read_parquet
+
+    path = str(tmp_path / "t")
+    write_any(spark.range(6).withColumn("k", F.col("id") % 2), path, partition_by=["k"])
+    first = read_parquet(spark, path)
+    before = _next_job_id(spark)
+    again = read_parquet(spark, path)
+    assert _next_job_id(spark) == before
+    assert again.sameSemantics(first)
+    assert sorted(again.collect()) == sorted(first.collect())
+
+    # a rewrite with another schema is read with the new one
+    spark.range(3).selectExpr("id", "id * 2 AS twice").write.mode("overwrite").parquet(path)
+    back = read_parquet(spark, path)
+    assert back.columns == ["id", "twice"]
+    assert sorted(r["twice"] for r in back.collect()) == [0, 2, 4]

@@ -312,3 +312,51 @@ def test_left_outer_join_watermark_gated_nulls(spark):
     # the boundary genuinely bites on this fixture: some unmatched
     # signups must be retained, or the test shows nothing
     assert len(want_nulls) < len(unmatched)
+
+
+@pytest.mark.parametrize(
+    "name, batches",
+    [
+        ("stream_dedup_exact", 1),
+        ("stream_interval_join", 1),
+        ("stream_interval_join_bucketed", 1),
+        # its null rows come from the trailing no-data batch
+        ("stream_left_outer_join", 2),
+    ],
+)
+def test_memory_sink_entry_batches_and_state_partitions(spark, monkeypatch, name, batches):
+    """Entries whose rows all arrive with their data run one micro-batch;
+    the left outer join keeps the watermark batch.  Each state operator
+    runs min(8, defaultParallelism) partitions, and the rows equal the
+    DuckDB oracle under the strict canon."""
+    import duckdb
+
+    from sparkml_som_spark.operators import streaming_queries
+    from sparkml_som_spark.operators.registry import load_all
+    from tests.test_registry_scope import _canon
+
+    progress = []
+    drain = streaming_queries.drain_stream
+
+    def recording_drain(query, entry, timeout_s=300):
+        try:
+            drain(query, entry, timeout_s)
+        finally:
+            progress.extend(query.recentProgress)
+
+    monkeypatch.setattr(streaming_queries, "drain_stream", recording_drain)
+    spec = load_all()[name]
+    df = spec.fn(spark, SF)
+    cols = [c.lower() for c in df.columns]
+    got = _canon(df.collect(), cols)
+
+    assert len({p["batchId"] for p in progress}) == batches
+    parts = {s["numShufflePartitions"] for p in progress for s in p["stateOperators"]}
+    assert parts == {min(8, spark.sparkContext.defaultParallelism)}
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{SF}/events.parquet')")
+    res = con.execute(spec.sql)
+    o_cols = [d[0].lower() for d in res.description]
+    assert sorted(cols) == sorted(o_cols)
+    assert got == _canon(res.fetchall(), o_cols)
