@@ -4,10 +4,12 @@ These replace the reference's per-row Scala paths with batched linear
 algebra (reference: BMU search `SOM.scala:306-326`, distance identity
 `MLUtils.scala:51-89`, neighborhood/decay scalars `SOM.scala:272-290`,
 topology-weighted update `SOM.scala:219-244`). One GEMM per Arrow batch
-replaces per-pair triangle-inequality pruning — on dense data the
-vectorized form wins and is exactly the same
-``|x|^2 + |c|^2 - 2*x.c`` identity, clamped at 0 like the reference's
-precision guard (`MLUtils.scala:79`).
+replaces the per-pair distances; the BMU search then ranks cells by the
+norm-free ``|c|^2/2 - x.c`` and computes the exact
+``|x|^2 + |c|^2 - 2*x.c`` distance, clamped at 0 like the reference's
+precision guard (`MLUtils.scala:79`), only at each row's winning cell:
+the batched form of the reference's pruned `findClosest`, which computes
+the full distance only for cells its norm bound cannot rule out.
 """
 
 from __future__ import annotations
@@ -98,10 +100,11 @@ def squared_distances(batch: np.ndarray, codebook: np.ndarray, code_norms2: np.n
     return d2
 
 
-# Rows per chunk of the distance epilogue in `find_bmu`: the (chunk, k)
+# Rows per chunk of the argmin pass in `find_bmu`: the (chunk, k)
 # float64 buffers stay cache-resident for the k of a typical map (256
 # rows x 100 cells = 200 KB each; 256 beat 512/1024/2048 rows at k=100
-# and k=400 on a 4-core x86 host), where the unchunked form streams and
+# and k=400 on a 4-core x86 host, and 128-512 rows read within noise of
+# 256 for the norm-free argmin), where the unchunked form streams and
 # page-faults fresh (n, k) temporaries on every call.
 _BMU_CHUNK_ROWS = 256
 
@@ -112,12 +115,24 @@ def find_bmu(batch: np.ndarray, codebook: np.ndarray, code_norms2: np.ndarray | 
     Batched replacement for `SOM.findClosest` (`SOM.scala:306-326`).
     Returns (bmu_idx int64 (n,), min_d2 float64 (n,)).
 
-    Bit-equal to ``squared_distances`` followed by an argmin: the one
-    GEMM runs over the whole batch, then ``(|x|^2 + |c|^2) - 2g``, the
-    clamp and the argmin run per row chunk in reused buffers, with the
-    same per-element operations (the norm sum is added as
-    ``|c|^2 + |x|^2`` from a pre-broadcast ``|c|^2`` tile, which is
-    faster and, addition being commutative, the same bits).
+    The reference prunes every cell that cannot win with the bound
+    ``(|x| - |c|)^2 <= |x - c|^2`` and computes the full distance only
+    for the survivors.  This is its batched form: one GEMM
+    ``g = batch @ codebook.T`` over the whole batch, then per 256-row
+    chunk a norm-free argmin of ``|c|^2/2 - g`` (one subtract from a
+    pre-broadcast ``|c|^2/2`` tile into a reused buffer; halving is
+    exact, so it ranks cells as ``|c|^2 - 2g`` does, and ``|x|^2`` is
+    the same for every cell of a row).  The exact distance is computed
+    only at the winning cell, with the per-element operations of
+    ``squared_distances``: ``max((|c|^2 + |x|^2) - 2.0 * g, 0)``.
+
+    A row whose winning distance is not finite and positive (it clamped
+    to 0, is NaN, or overflowed) is redone over its full row in that
+    form, so clamp ties and NaN rows keep that form's first-index argmin.  The
+    result then equals ``squared_distances`` followed by an argmin, bit
+    for bit, except where two cells' distances for a row lie within a
+    few ulps of ``(|x| + max|c|)^2``: the rounding of ``|c|^2 + |x|^2``
+    can order such a pair differently from the norm-free form.
     """
     if code_norms2 is None:
         code_norms2 = np.einsum("ij,ij->i", codebook, codebook)
@@ -125,22 +140,23 @@ def find_bmu(batch: np.ndarray, codebook: np.ndarray, code_norms2: np.ndarray | 
     g = batch @ codebook.T
     n, k = g.shape
     idx = np.empty(n, dtype=np.int64)
-    min_d2 = np.empty(n, dtype=np.float64)
     rows = max(1, min(n, _BMU_CHUNK_ROWS))
-    cn2_tile = np.empty((rows, k), dtype=np.float64)
-    cn2_tile[:] = code_norms2
-    d2_buf = np.empty((rows, k), dtype=np.float64)
-    g2_buf = np.empty((rows, k), dtype=np.float64)
+    half_tile = np.empty((rows, k), dtype=np.float64)
+    half_tile[:] = 0.5 * code_norms2
+    s_buf = np.empty((rows, k), dtype=np.float64)
     for lo in range(0, n, rows):
         hi = min(lo + rows, n)
-        d2 = d2_buf[: hi - lo]
-        g2 = g2_buf[: hi - lo]
-        np.add(cn2_tile[: hi - lo], x_norms2[lo:hi, None], out=d2)
-        np.multiply(g[lo:hi], 2.0, out=g2)
-        np.subtract(d2, g2, out=d2)
+        s = s_buf[: hi - lo]
+        np.subtract(half_tile[: hi - lo], g[lo:hi], out=s)
+        s.argmin(axis=1, out=idx[lo:hi])
+    min_d2 = (code_norms2[idx] + x_norms2) - 2.0 * g[np.arange(n), idx]
+    np.maximum(min_d2, 0.0, out=min_d2)
+    redo = np.flatnonzero(~((min_d2 > 0.0) & (min_d2 < np.inf)))
+    if redo.size:
+        d2 = (code_norms2 + x_norms2[redo, None]) - 2.0 * g[redo]
         np.maximum(d2, 0.0, out=d2)
-        d2.argmin(axis=1, out=idx[lo:hi])
-        min_d2[lo:hi] = d2[np.arange(hi - lo), idx[lo:hi]]
+        idx[redo] = d2.argmin(axis=1)
+        min_d2[redo] = d2[np.arange(redo.size), idx[redo]]
     return idx, min_d2
 
 

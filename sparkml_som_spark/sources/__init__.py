@@ -14,7 +14,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from sparkml_som_spark.worker_daemon import _stamp
+from sparkml_som_spark.stamp import stat_stamp
 
 TABLE_NAMES = [
     "region",
@@ -78,7 +78,7 @@ def read_parquet(spark: SparkSession, *paths: str, **options) -> DataFrame:
     A path that cannot be stat'ed (a URI, or missing) is never recorded."""
     key = (tuple(os.path.abspath(p) for p in paths), tuple(sorted(options.items())))
     try:
-        stamps = tuple(_stamp(p) for p in paths)
+        stamps = tuple(stat_stamp(p) for p in paths)
     except OSError:
         return spark.read.options(**options).parquet(*paths)
     hit = _SCHEMAS.get(key)

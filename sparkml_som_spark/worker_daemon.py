@@ -10,22 +10,18 @@ zip archive is re-read only when its stat stamp (mtime, size, inode)
 differs from its stamp at its last read.
 """
 
-import os
 import sys
 import zipimport
+
+from sparkml_som_spark.stamp import stat_stamp
 
 _stdlib_invalidate = zipimport.zipimporter.invalidate_caches
 _stamps: dict[str, tuple[int, int, int]] = {}  # archive -> its stamp at its last read
 
 
-def _stamp(path):
-    st = os.stat(path)
-    return st.st_mtime_ns, st.st_size, st.st_ino
-
-
 def invalidate_caches(self):
     try:
-        stamp = _stamp(self.archive)
+        stamp = stat_stamp(self.archive)
     except OSError:
         return _stdlib_invalidate(self)
     files = zipimport._zip_directory_cache.get(self.archive)
@@ -43,7 +39,7 @@ if __name__ == "__main__":
         # the archives this process has imported from were read at its start
         for _path in list(zipimport._zip_directory_cache):
             try:
-                _stamps[_path] = _stamp(_path)
+                _stamps[_path] = stat_stamp(_path)
             except OSError:
                 pass
         zipimport.zipimporter.invalidate_caches = invalidate_caches

@@ -249,3 +249,96 @@ def test_partial_aggregate_bincount_bit_equal_to_add_at(n, d):
             assert sums.tobytes() == want.tobytes(), (k, scale)
             assert np.array_equal(counts, np.bincount(idx, minlength=k))
             assert np.float64(cost).tobytes() == np.float64(d2.sum()).tobytes()
+
+
+def _reference_bmu(batch, codebook, code_norms2=None):
+    """The full-matrix form `find_bmu` must equal: every cell's clamped
+    ``squared_distances``, then a first-index argmin."""
+    d2 = K.squared_distances(batch, codebook, code_norms2)
+    idx = d2.argmin(axis=1)
+    return idx, d2[np.arange(len(idx)), idx]
+
+
+@pytest.mark.parametrize("scale", [1e-150, 1e-8, 1.0, 1e8, 1e150])
+@pytest.mark.parametrize("k", [1, 20])
+@pytest.mark.parametrize("n", [0, K._BMU_CHUNK_ROWS - 1, K._BMU_CHUNK_ROWS, K._BMU_CHUNK_ROWS + 1, 1_000])
+def test_find_bmu_norm_free_argmin_bit_equal_across_scales(n, k, scale):
+    """The norm-free argmin with the exact distance at the winner returns
+    the bits of the full clamped matrix + argmin at every value scale —
+    with a duplicated prototype (the first index wins), rows sitting on
+    a prototype (the clamp at 0), a NaN row, a row whose norm overflows
+    (every distance inf) and a row of signed zeros."""
+    rng = np.random.default_rng(n * 31 + k)
+    cb = rng.normal(size=(k, 3)) * scale
+    if k > 7:
+        cb[7] = cb[3]
+    x = rng.normal(size=(n, 3)) * scale
+    if n > 10:
+        x[:4] = cb[min(3, k - 1)]
+        x[5] = np.nan
+        x[6] = 1e155
+        x[7] = -0.0
+    with np.errstate(over="ignore", invalid="ignore"):
+        want_idx, want_d2 = _reference_bmu(x, cb)
+        idx, d2 = K.find_bmu(x, cb)
+    assert idx.dtype == np.int64 and d2.dtype == np.float64
+    assert idx.shape == d2.shape == (n,)
+    assert np.array_equal(idx, want_idx)
+    assert d2.tobytes() == want_d2.tobytes()
+    if n > 10:
+        assert idx[5] == 0 and np.isnan(d2[5])
+        assert idx[6] == 0 and d2[6] == np.inf
+        if k > 7:
+            assert 7 not in set(idx[:4].tolist())
+
+
+def test_find_bmu_clamp_tie_keeps_the_first_cell():
+    """Two distinct prototypes that both clamp to 0 for a row tie in the
+    full form, so its argmin takes the first.  The norm-free form ranks
+    the second lower by an ulp; the winner's clamped distance sends the
+    row back through the full form, which keeps the first."""
+    rng = np.random.default_rng(0)
+    for _ in range(1_000):
+        x = rng.random((1, 3))
+        cb = x + rng.normal(size=(2, 3)) * 1e-9
+        cn2 = np.einsum("ij,ij->i", cb, cb)
+        norm_free = 0.5 * cn2 - (x @ cb.T)[0]
+        if (K.squared_distances(x, cb, cn2) == 0).all() and norm_free[1] < norm_free[0]:
+            break
+    else:
+        pytest.fail("no row with two clamped cells ranked apart by the norm-free form")
+    assert not np.array_equal(cb[0], cb[1])
+    idx, d2 = K.find_bmu(x, cb, cn2)
+    assert idx.tolist() == [0] and d2.tolist() == [0.0]
+    want_idx, want_d2 = _reference_bmu(x, cb, cn2)
+    assert np.array_equal(idx, want_idx) and d2.tobytes() == want_d2.tobytes()
+
+
+@pytest.mark.parametrize("seed", [41, 42, 43])
+def test_main_shape_trajectory_bit_equal_to_reference_fold(seed, monkeypatch):
+    """100 iterations of the reference ``Main`` shape (10k x 3 points, a
+    10x10 Gaussian map, exponential decay) through the estimator's fold
+    step give the same prototype and objective bytes as the same loop
+    with `find_bmu` swapped for the full-matrix form."""
+    from sparkml_som_spark.som.estimator import _fold_step
+
+    rng = np.random.default_rng(seed)
+    x = rng.random((10_000, 3))
+    init = x[rng.integers(0, len(x), 100)]  # drawn with replacement, like takeSample
+    grid = K.grid_distances(10, 10)
+    zero = (np.zeros((100, 3)), np.zeros(100, dtype=np.int64), 0.0)
+
+    def trajectory():
+        cb, history = init, []
+        for it in range(100):
+            sums, counts, cost = _fold_step(zero, x, codebook=cb)
+            weights = K.neighborhood(grid, K.temperature(it, 100, 10.0, 1.0, "exponential"), "gaussian")
+            cb = K.smooth_update(cb, sums, counts, weights)
+            history.append(cost)
+        return cb, np.asarray(history)
+
+    got_cb, got_history = trajectory()
+    monkeypatch.setattr(K, "find_bmu", _reference_bmu)
+    want_cb, want_history = trajectory()
+    assert got_cb.tobytes() == want_cb.tobytes()
+    assert got_history.tobytes() == want_history.tobytes()

@@ -46,6 +46,20 @@ def zip_on_path(tmp_path, monkeypatch):
     zipimport._zip_directory_cache.pop(archive, None)
 
 
+def test_importing_the_engine_leaves_the_daemon_module_unloaded():
+    # `python -m sparkml_som_spark.worker_daemon` imports the package
+    # first; were the daemon module loaded by then, runpy would warn
+    # ("found in sys.modules") at every session start
+    script = (
+        "import sys, sparkml_som_spark, sparkml_som_spark.sources, sparkml_som_spark.session\n"
+        "assert 'sparkml_som_spark.worker_daemon' not in sys.modules\n"
+    )
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(p for p in (REPO, env.get("PYTHONPATH")) if p)
+    proc = subprocess.run([sys.executable, "-c", script], env=env, capture_output=True, text=True, timeout=120)
+    assert proc.returncode == 0, proc.stderr[-3000:]
+
+
 def test_unchanged_archive_is_not_reread(zip_on_path, monkeypatch):
     import wdpkg.first  # noqa: F401
 
