@@ -118,7 +118,7 @@ def find_bmu(batch: np.ndarray, codebook: np.ndarray, code_norms2: np.ndarray | 
     The reference prunes every cell that cannot win with the bound
     ``(|x| - |c|)^2 <= |x - c|^2`` and computes the full distance only
     for the survivors.  This is its batched form: one GEMM
-    ``g = batch @ codebook.T`` over the whole batch, then per 256-row
+    ``g = batch @ codebook.T`` over the whole batch, then per row
     chunk a norm-free argmin of ``|c|^2/2 - g`` (one subtract from a
     pre-broadcast ``|c|^2/2`` tile into a reused buffer; halving is
     exact, so it ranks cells as ``|c|^2 - 2g`` does, and ``|x|^2`` is
