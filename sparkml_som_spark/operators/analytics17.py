@@ -9,11 +9,11 @@ Scale discipline:
   an abandoned attempt can never corrupt the result (the exactly-once
   write contract, demonstrated end-to-end);
 - the streaming sketch merges per-batch (row, bucket) cell counts
-  into a persisted bounded cell table (depth x width rows) — integer
+  into a driver-held bounded cell table (depth x width cells) — integer
   addition is batch-order independent, so the final sketch is
   BIT-EQUAL to the batch-built sketch, which is the whole point of a
   mergeable summary: per-batch cost tracks the batch, never the
-  corpus, and the state is queryable between batches.
+  corpus, and the state is readable between batches.
 """
 
 from __future__ import annotations
@@ -26,7 +26,8 @@ from pyspark.sql import functions as F
 
 from sparkml_som_spark.operators.analytics9 import _CMS_DEPTH, _CMS_WIDTH
 from sparkml_som_spark.operators.registry import drain_stream, register, session_conf
-from sparkml_som_spark.sources import build_once, load_table, read_parquet, scratch_dir
+from sparkml_som_spark.session import local_frame
+from sparkml_som_spark.sources import build_once, load_table, scratch_dir
 
 
 @register(
@@ -104,26 +105,25 @@ def source_python_datasource_writer(spark: SparkSession, sf_dir: str) -> DataFra
            est.est_cnt >= tc.cnt       AS lower_bound_ok
     FROM tc JOIN est ON est.tok = tc.tok
     """,
-    desc="streaming count-min: per-batch cell counts merged additively into a persisted bounded sketch; final sketch bit-equal to batch",
+    desc="streaming count-min: per-batch cell counts merged additively into a driver-held bounded sketch; final sketch bit-equal to batch",
 )
 def stream_countmin_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming heavy-hitter sketching — the mergeability story run
     for real: documents arrive in rate-limited micro-batches, each
     batch reduces to its own (row, bucket) cell counts, and foreachBatch
-    merges them ADDITIVELY into a persisted sketch of depth x width
-    rows.  Integer addition is batch-order independent, so the final
-    sketch is bit-equal to the batch-built one — the oracle replays the
-    batch construction and the estimates must hash-match.
+    collects them (one job, at most depth x width rows) and adds them
+    ADDITIVELY into a driver-held sketch.  Integer addition is
+    batch-order independent, so the final sketch is bit-equal to the
+    batch-built one — the oracle replays the batch construction and the
+    estimates must hash-match.
 
     Per-batch cost tracks the batch (its tokens -> 48 cells); the
-    sketch state is bounded and queryable between batches (the entry
-    starts each run from an empty sketch) — neither of which is true of
-    an exact counter table over an unbounded vocabulary.
+    sketch state is bounded and readable between batches (each call
+    starts from an empty sketch) — neither of which is true of an exact
+    counter table over an unbounded vocabulary.
     """
     docs = load_table(spark, sf_dir, "documents")
     src = build_once(sf_dir, "docs_cms_src", lambda p: docs.repartition(16).write.mode("overwrite").parquet(p))
-    cells_dir = scratch_dir(sf_dir, "cms_cells")
-    shutil.rmtree(cells_dir, ignore_errors=True)
 
     stream = (
         spark.readStream.schema(docs.schema)
@@ -156,23 +156,11 @@ def stream_countmin_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return tb.groupBy("i", "bucket").agg(F.count(F.lit(1)).alias("cell"))
 
+    sketch: dict[tuple[int, int], int] = {}  # (i, bucket) -> cell
+
     def merge(batch_df, batch_id):
-        sess = batch_df.sparkSession
-        new_cells = batch_cells(batch_df)
-        if os.path.isdir(cells_dir):
-            old = read_parquet(sess, cells_dir)
-            new_cells = (
-                old.unionByName(new_cells)
-                .groupBy("i", "bucket")
-                .agg(F.sum("cell").alias("cell"))
-            )
-        # write-to-temp + swap keeps the whole merge JVM-side (a
-        # collect + createDataFrame round-trip pays a Python-worker
-        # spawn per batch) and never reads the dir being replaced
-        tmp = cells_dir + ".tmp"
-        new_cells.coalesce(1).write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(cells_dir, ignore_errors=True)
-        os.replace(tmp, cells_dir)
+        for i, bucket, cell in batch_cells(batch_df).collect():
+            sketch[i, bucket] = sketch.get((i, bucket), 0) + cell
 
     # tiny per-batch state (48 cells): run the stream with a reduced
     # shuffle-partition count, same rationale as _run_to_memory — at
@@ -182,7 +170,9 @@ def stream_countmin_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         q = stream.writeStream.foreachBatch(merge).trigger(availableNow=True).start()
         drain_stream(q, "stream_countmin_merge")
 
-    cells = read_parquet(spark, cells_dir)
+    cells = local_frame(
+        spark, [(*key, cell) for key, cell in sketch.items()], "i int, bucket long, cell long"
+    )
     tc = (
         docs.select(F.explode(F.split(F.lower("text"), " ")).alias("tok"))
         .groupBy("tok")

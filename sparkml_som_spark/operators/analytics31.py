@@ -5,7 +5,7 @@ parameter tuning.
 * ``stream_quantile_merge`` — the mergeable fixed-width quantile
   sketch (`quantile_mergeable_sketch`) run in the STREAMING regime:
   micro-batches reduce to (type, bin) histogram cells, foreachBatch
-  merges them additively into a persisted sketch, and the final
+  merges them additively into a driver-held sketch, and the final
   quantile read-off must equal the batch-built one exactly (integer
   addition is batch-order independent — the "incremental == batch"
   law the incremental-dedup family already pins, now for sketches).
@@ -21,11 +21,11 @@ parameter tuning.
   precision, and recall against exact-Jaccard ground truth, next to
   the theoretical s-curve capture probability 1-(1-tau^r)^b.
 
-Scale discipline: the streaming sketch's state is bounded by
-types x bins cells no matter the stream length, and each micro-batch
-shuffles only its own cells.  Pattern matching is per-user windows —
-state bounded by a user's events, no cross-user data motion beyond
-the one keyed shuffle.  The tuning sweep's pair work is band-bucket
+Scale discipline: the streaming sketch's driver-held state is bounded
+by types x bins cells no matter the stream length, and each micro-batch
+shuffles and collects only its own cells.  Pattern matching is per-user
+windows — state bounded by a user's events, no cross-user data motion
+beyond the one keyed shuffle.  The tuning sweep's pair work is band-bucket
 bounded exactly like the production LSH it tunes; its exact-Jaccard
 truth uses the DF-capped inverted index (the same bound
 `dedup_ngram_jaccard` rides), and the liberal r=1 row of the grid is
@@ -36,14 +36,12 @@ section.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sparkml_som_spark.operators.registry import drain_stream, register, session_conf
-from sparkml_som_spark.sources import build_once, load_table, read_parquet, scratch_dir
+from sparkml_som_spark.session import local_frame
+from sparkml_som_spark.sources import build_once, load_table, read_parquet
 
 # ---------------------------------------------------------------------------
 # Streaming mergeable quantile sketch
@@ -70,27 +68,24 @@ _SQ_PS = (("p50", 0.5), ("p90", 0.9), ("p99", 0.99))
            {", ".join(f"MIN(CASE WHEN cum_n >= {p} * total THEN ROUND(bin * {_SQ_BIN_W}, 2) END) AS approx_{nm}" for nm, p in _SQ_PS)}
     FROM cum GROUP BY event_type ORDER BY event_type
     """,
-    desc="streaming mergeable quantile sketch: per-micro-batch histogram cells merged additively into persisted state; final p50/p90/p99 equal the batch build",
+    desc="streaming mergeable quantile sketch: per-micro-batch histogram cells merged additively into driver-held state; final p50/p90/p99 equal the batch build",
 )
 def stream_quantile_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`quantile_mergeable_sketch`'s merge law exercised for real:
     events arrive in rate-limited micro-batches, each batch reduces to
-    its own (event_type, bin) histogram cells, and foreachBatch merges
-    them ADDITIVELY into a persisted sketch.  Because integer addition
-    commutes across batch boundaries, the final sketch — and therefore
-    the quantile read-off — is bit-equal to the batch-built histogram;
-    the oracle replays the batch construction and the value hash pins
-    the equality.
+    its own (event_type, bin) histogram cells, and foreachBatch collects
+    them and merges them ADDITIVELY into a driver-held sketch.  Because
+    integer addition commutes across batch boundaries, the final sketch
+    — and therefore the quantile read-off — is bit-equal to the
+    batch-built histogram; the oracle replays the batch construction
+    and the value hash pins the equality.
 
     Scale: sketch state is types x ~50 bins regardless of stream
-    length; each micro-batch shuffles only its OWN cells (map-side
-    combined), and the merge is a cell-keyed sum — the same shape a
-    1000-executor Structured Streaming job would keep in a state
-    store keyed by (type, bin)."""
+    length; each micro-batch shuffles and collects only its OWN cells
+    (map-side combined), and the merge is a cell-keyed sum on the
+    driver, where the SOM keeps its codebook too."""
     ev = load_table(spark, sf_dir, "events")
     src = build_once(sf_dir, "events_squant_src", lambda p: ev.repartition(8).write.mode("overwrite").parquet(p))
-    cells_dir = scratch_dir(sf_dir, "squant_cells")
-    shutil.rmtree(cells_dir, ignore_errors=True)
 
     stream = (
         spark.readStream.schema(ev.schema)
@@ -104,29 +99,19 @@ def stream_quantile_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor(F.col("value") / _SQ_BIN_W).cast("long").alias("bin"),
         ).agg(F.count(F.lit(1)).alias("n"))
 
+    sketch: dict[tuple[str, int], int] = {}  # (event_type, bin) -> n
+
     def merge(batch_df, batch_id):
-        sess = batch_df.sparkSession
-        cells = batch_cells(batch_df)
-        if os.path.isdir(cells_dir):
-            old = read_parquet(sess, cells_dir)
-            cells = (
-                old.unionByName(cells)
-                .groupBy("event_type", "bin")
-                .agg(F.sum("n").alias("n"))
-            )
-        # write-to-temp + swap keeps the merge JVM-side and never reads
-        # the directory being replaced (same shape as the count-min
-        # merge in analytics17)
-        tmp = cells_dir + ".tmp"
-        cells.coalesce(1).write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(cells_dir, ignore_errors=True)
-        os.replace(tmp, cells_dir)
+        for event_type, bin_, n in batch_cells(batch_df).collect():
+            sketch[event_type, bin_] = sketch.get((event_type, bin_), 0) + n
 
     with session_conf(spark, "spark.sql.shuffle.partitions", "4"):
         q = stream.writeStream.foreachBatch(merge).trigger(availableNow=True).start()
         drain_stream(q, "stream_quantile_merge")
 
-    merged = read_parquet(spark, cells_dir)
+    merged = local_frame(
+        spark, [(*key, n) for key, n in sketch.items()], "event_type string, bin long, n long"
+    )
     w_cum = Window.partitionBy("event_type").orderBy("bin")
     w_all = Window.partitionBy("event_type")
     cum = merged.withColumn("cum_n", F.sum("n").over(w_cum)).withColumn(

@@ -910,7 +910,13 @@ def stream_minhash_dedup_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-batch probe join touches only the batch's bucket rows, and
     verification touches candidate pairs only — per-batch cost tracks
     the batch.  State lives in queryable storage, not stream state
-    stores (the `stream_incremental_dedup_index` discipline)."""
+    stores (the `stream_incremental_dedup_index` discipline): one
+    ``guard_state`` dir whose ``batch=<id>`` subdirs each hold one
+    epoch's admitted rows and band rows, partitioned by ``kind``.  An
+    epoch is written whole to ``guard_state/_tmp`` (a ``_`` path, which
+    Spark's listing skips) and promoted by ONE ``os.rename`` to
+    ``batch=<id>``, so a crash at any point leaves whole epochs only:
+    the state reads as the epochs promoted before it, never a mix."""
     import shutil
 
     from pyspark.sql import functions as F
@@ -926,10 +932,9 @@ def stream_minhash_dedup_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
         "docs_guard_src",
         _epoch_files(docs.withColumn("epoch", (F.col("doc_id") % 4).cast("int")), 4),
     )
-    admitted_dir = scratch_dir(sf_dir, "guard_admitted")
-    band_dir = scratch_dir(sf_dir, "guard_band_index")
-    shutil.rmtree(admitted_dir, ignore_errors=True)
-    shutil.rmtree(band_dir, ignore_errors=True)
+    state_dir = scratch_dir(sf_dir, "guard_state")
+    shutil.rmtree(state_dir, ignore_errors=True)
+    promoted: list[int] = []  # batch ids with a batch=<id> dir
 
     def guard(batch_df, batch_id):
         sp = batch_df.sparkSession
@@ -950,12 +955,13 @@ def stream_minhash_dedup_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
         # exchanges ARE runtime-reused).
         bb = minhash_band_buckets(grp).localCheckpoint(eager=False)
         rejected = None
-        if os.path.isdir(band_dir):
+        if promoted:
             # explicit selects: the state files carry the union schema
             # (null band/sig on admitted rows and vice versa); narrowing
             # here keeps the union below aligned
-            adm = read_parquet(sp, admitted_dir).select("doc_id", "source", "text")
-            idx = read_parquet(sp, band_dir).select("doc_id", "band", "sig")
+            state = read_parquet(sp, state_dir)
+            adm = state.where(F.col("kind") == "adm").select("doc_id", "source", "text")
+            idx = state.where(F.col("kind") == "band").select("doc_id", "band", "sig")
             cand = (
                 bb.alias("x")
                 .join(
@@ -981,20 +987,15 @@ def stream_minhash_dedup_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
         admitted = (
             grp.join(rejected, "doc_id", "left_anti") if rejected is not None else grp
         )
-        # r16 (VERDICT r15 ask #2): the TWO state appends are ONE job — a
-        # union of the admitted rows and their band rows, tagged with a
-        # `kind` column, written partitionBy("kind") to a FRESH tmp dir
-        # and promoted into the two live state dirs by driver-side
-        # renames (~ms, no job).  The admitted eager checkpoint STAYS: a
-        # no-checkpoint full fusion (everything in one job, leaning on
-        # AQE runtime exchange reuse for the duplicated admitted subtree)
-        # was MEASURED SLOWER — guard min 13.8 s vs 10.5 s with the
-        # checkpoint kept, 6 order-alternated reps at sf0.1
-        # (OPTIMIZATION_r16.md §3) — so only the write side is fused
-        # (3 -> 2 jobs/epoch).  A crash between
-        # the renames can strand a partially-promoted epoch — acceptable
-        # because every oracle/bench run starts from a clean scratch dir
-        # (the ADVICE r15 #3 trade, documented).
+        # the TWO state appends are ONE job — a union of the admitted
+        # rows and their band rows, tagged with a `kind` column and
+        # written partitionBy("kind") as one epoch dir.  The admitted
+        # eager checkpoint STAYS: a no-checkpoint full fusion
+        # (everything in one job, leaning on AQE runtime exchange reuse
+        # for the duplicated admitted subtree) was MEASURED SLOWER —
+        # guard min 13.8 s vs 10.5 s with the checkpoint kept, 6
+        # order-alternated reps at sf0.1 (OPTIMIZATION_r16.md §3) — so
+        # only the write side is fused (3 -> 2 jobs/epoch).
         admitted = admitted.localCheckpoint(eager=True)
         out = admitted.select(
             "doc_id",
@@ -1013,26 +1014,20 @@ def stream_minhash_dedup_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit("band").alias("kind"),
             )
         )
-        tmp = scratch_dir(sf_dir, "guard_fused_tmp")
-        shutil.rmtree(tmp, ignore_errors=True)
+        # an epoch that admitted nothing wrote no `kind=` dir: nothing
+        # to promote, and `_tmp` stays invisible to reads
+        tmp = os.path.join(state_dir, "_tmp")
         out.write.mode("overwrite").partitionBy("kind").parquet(tmp)
-        for kind, dst in (("adm", admitted_dir), ("band", band_dir)):
-            kdir = os.path.join(tmp, f"kind={kind}")
-            if not os.path.isdir(kdir):
-                continue  # empty partition: nothing admitted
-            os.makedirs(dst, exist_ok=True)
-            for i, fname in enumerate(sorted(os.listdir(kdir))):
-                if fname.endswith(".parquet"):
-                    os.rename(
-                        os.path.join(kdir, fname),
-                        os.path.join(dst, f"b{batch_id}_{i}.parquet"),
-                    )
-        shutil.rmtree(tmp, ignore_errors=True)
+        if any(name.startswith("kind=") for name in os.listdir(tmp)):
+            os.rename(tmp, os.path.join(state_dir, f"batch={batch_id}"))
+            promoted.append(batch_id)
 
     _run_epochs(spark, src, 4, guard, "stream_minhash_dedup_guard")
 
-    adm = read_parquet(spark, admitted_dir).withColumn(
-        "epoch", (F.col("doc_id") % 4).cast("int")
+    adm = (
+        read_parquet(spark, state_dir)
+        .where(F.col("kind") == "adm")
+        .withColumn("epoch", (F.col("doc_id") % 4).cast("int"))
     )
     totals = docs.withColumn("epoch", (F.col("doc_id") % 4).cast("int")).groupBy(
         "epoch"

@@ -4,11 +4,12 @@ sketch equality."""
 
 import json
 import os
+import shutil
 
 from pyspark.sql import functions as F
 
 from sparkml_som_spark.operators.registry import load_all
-from sparkml_som_spark.sources import load_table
+from sparkml_som_spark.sources import load_table, scratch_dir
 
 SF = "/root/testdata/sf0.001"
 
@@ -45,12 +46,18 @@ def test_jsonlsink_manifest_protocol(spark, tmp_path):
 
 def test_stream_countmin_equals_batch_sketch(spark):
     """The streamed-and-merged sketch must produce the same estimates
-    as the batch count-min entry (integer merges are order-free)."""
+    as the batch count-min entry (integer merges are order-free), on
+    every call: each call starts from an empty driver-held sketch and
+    leaves no state dir behind."""
     reg = _registry()
-    stream_rows = {
-        r["tok"]: (r["exact_cnt"], r["est_cnt"])
-        for r in reg["stream_countmin_merge"].fn(spark, SF).collect()
-    }
+    cells_dir = scratch_dir(SF, "cms_cells")
+    # a dir an older engine left must not decide the check below
+    shutil.rmtree(cells_dir, ignore_errors=True)
+    first = reg["stream_countmin_merge"].fn(spark, SF).collect()
+    second = reg["stream_countmin_merge"].fn(spark, SF).collect()
+    assert sorted(first) == sorted(second)
+    assert not os.path.exists(cells_dir)
+    stream_rows = {r["tok"]: (r["exact_cnt"], r["est_cnt"]) for r in second}
     batch_rows = {
         r["tok"]: (r["exact_cnt"], r["est_cnt"])
         for r in reg["countmin_heavy_hitters"].fn(spark, SF).collect()

@@ -13,7 +13,12 @@ from pyspark.sql import functions as F
 
 def test_stream_quantiles_equal_batch_build(spark, sf_dir):
     """THE merge law: the micro-batch-merged sketch reads off exactly
-    the quantiles of a single-pass batch histogram."""
+    the quantiles of a single-pass batch histogram, on every call: each
+    call starts from an empty driver-held sketch and leaves no state
+    dir behind."""
+    import os
+    import shutil
+
     from pyspark.sql import Window
 
     from sparkml_som_spark.operators.analytics31 import (
@@ -21,9 +26,16 @@ def test_stream_quantiles_equal_batch_build(spark, sf_dir):
         _SQ_PS,
         stream_quantile_merge,
     )
-    from sparkml_som_spark.sources import load_table
+    from sparkml_som_spark.sources import load_table, scratch_dir
 
-    got = {r["event_type"]: r for r in stream_quantile_merge(spark, sf_dir).collect()}
+    cells_dir = scratch_dir(sf_dir, "squant_cells")
+    # a dir an older engine left must not decide the check below
+    shutil.rmtree(cells_dir, ignore_errors=True)
+    first = stream_quantile_merge(spark, sf_dir).collect()
+    second = stream_quantile_merge(spark, sf_dir).collect()
+    assert first == second  # ordered by event_type
+    assert not os.path.exists(cells_dir)
+    got = {r["event_type"]: r for r in second}
 
     ev = load_table(spark, sf_dir, "events")
     merged = ev.groupBy(

@@ -191,6 +191,41 @@ def test_epoch_guard_passes_on_shipped_source(spark, registry):
     assert len(rows) == 4  # check ran, no AssertionError, 4 epochs
 
 
+def test_guard_crash_leaves_whole_epochs(spark, registry, monkeypatch):
+    """A crash while promoting epoch 2 leaves the guard's state as the
+    whole epochs 0 and 1, admitting what a clean run admits for them:
+    each epoch is promoted by one rename, never file by file."""
+    from sparkml_som_spark.sources import read_parquet, scratch_dir
+
+    guard = registry["stream_minhash_dedup_guard"].fn
+    state_dir = scratch_dir(SF, "guard_state")
+
+    def admitted():
+        state = read_parquet(spark, state_dir).where(F.col("kind") == "adm")
+        return {(r["batch"], r["doc_id"]) for r in state.select("batch", "doc_id").collect()}
+
+    guard(spark, SF).collect()
+    clean = {(b, d) for b, d in admitted() if b < 2}
+    assert {b for b, _ in clean} == {0, 1}
+
+    rename = os.rename
+
+    def crash_on_epoch_2(src, dst):
+        if os.path.basename(dst) == "batch=2":
+            raise OSError("crash while promoting epoch 2")
+        rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crash_on_epoch_2)
+    with pytest.raises(Exception, match="crash while promoting epoch 2"):
+        guard(spark, SF)
+    monkeypatch.undo()
+    assert sorted(n for n in os.listdir(state_dir) if not n.startswith("_")) == [
+        "batch=0",
+        "batch=1",
+    ]
+    assert admitted() == clean
+
+
 def test_bpe_apply_consistent_with_merges(spark, registry):
     """chars_per_token must be >= 1 (merges only shrink token counts),
     and with zero merges it would be exactly 1 — so after 8 merges on
