@@ -24,7 +24,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sparkml_som_spark.operators.analytics9 import _CMS_DEPTH, _CMS_WIDTH
+from sparkml_som_spark.operators.analytics9 import _CMS_WIDTH, cms_estimate, cms_rows
 from sparkml_som_spark.operators.registry import drain_stream, register, session_conf
 from sparkml_som_spark.session import local_frame
 from sparkml_som_spark.sources import build_once, load_table, scratch_dir
@@ -132,28 +132,7 @@ def stream_countmin_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def batch_cells(df: DataFrame) -> DataFrame:
-        tb = (
-            df.select(F.explode(F.split(F.lower("text"), " ")).alias("tok"))
-            .select(
-                "tok",
-                F.explode(F.array(*[F.lit(i) for i in range(_CMS_DEPTH)])).alias("i"),
-            )
-            .withColumn(
-                "bucket",
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat(F.col("i").cast("string"), F.lit(":"), F.col("tok"))
-                        ),
-                        1,
-                        15,
-                    ),
-                    16,
-                    10,
-                ).cast("long")
-                % _CMS_WIDTH,
-            )
-        )
+        tb = cms_rows(df.select(F.explode(F.split(F.lower("text"), " ")).alias("tok")))
         return tb.groupBy("i", "bucket").agg(F.count(F.lit(1)).alias("cell"))
 
     sketch: dict[tuple[int, int], int] = {}  # (i, bucket) -> cell
@@ -178,28 +157,7 @@ def stream_countmin_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    tb = tc.select(
-        "tok",
-        "cnt",
-        F.explode(F.array(*[F.lit(i) for i in range(_CMS_DEPTH)])).alias("i"),
-    ).withColumn(
-        "bucket",
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.col("i").cast("string"), F.lit(":"), F.col("tok"))),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % _CMS_WIDTH,
-    )
-    est = (
-        tb.join(F.broadcast(cells), ["i", "bucket"])
-        .groupBy("tok")
-        .agg(F.min("cell").alias("est_cnt"))
-    )
+    est = cms_estimate(cms_rows(tc), cells)
     return tc.join(est, "tok").select(
         "tok",
         F.col("cnt").alias("exact_cnt"),

@@ -31,6 +31,52 @@ _BM25_TOPK = 10
 _BM25_TERMS_SQL = ", ".join(f"'{t}'" for t in _BM25_QUERY)
 
 
+def bm25_scores(docs: DataFrame) -> DataFrame:
+    """Okapi BM25 for the fixed query over ``docs``: one row per doc that
+    holds a query term, with ``doc_id``, ``n_terms`` (distinct query terms
+    matched) and the unrounded ``score``.  `bm25_rank_docs` ranks it and
+    `hybrid_rrf_fusion` uses it as its lexical leg."""
+    toks = docs.select("doc_id", F.explode(word_tokens(F.col("text"))).alias("term"))
+    # opt r15 (guide §2.3 "aggregate before you shuffle" / §2.4): dl and
+    # tf previously each re-ran the corpus explode (dl twice more via
+    # stats and the scored join).  ONE explode + ONE per-doc aggregate
+    # now carries dlen AND the per-query-term counts (the query is a
+    # fixed, tiny term list, so the wide aggregate is |query|+1 columns);
+    # tf falls out as a stack over the materialized per-doc row.
+    # Interleaved A/B at sf0.1: 0.73 s vs 1.12 s min-of-5, results
+    # bit-equal.  Bounded at one row per doc.
+    per_doc = (
+        toks.groupBy("doc_id")
+        .agg(
+            F.count("*").alias("dlen"),
+            *[
+                F.sum(F.when(F.col("term") == w, 1).otherwise(0)).alias(f"f{i}")
+                for i, w in enumerate(_BM25_QUERY)
+            ],
+        )
+        .localCheckpoint()
+    )
+    dl = per_doc.select("doc_id", "dlen")
+    stats = dl.agg(F.count("*").alias("n"), F.avg("dlen").alias("avgdl"))
+    _stack = "stack({}, {}) as (term, f)".format(
+        len(_BM25_QUERY), ", ".join(f"'{w}', f{i}" for i, w in enumerate(_BM25_QUERY))
+    )
+    tf = per_doc.selectExpr("doc_id", _stack).where(F.col("f") > 0)
+    dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
+    idf = F.log((F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1)
+    denom = F.col("f") + _BM25_K1 * (
+        1 - _BM25_B + _BM25_B * F.col("dlen") / F.col("avgdl")
+    )
+    return (
+        tf.join(F.broadcast(dfreq), "term")
+        .join(dl, "doc_id")
+        .crossJoin(F.broadcast(stats))
+        .withColumn("contrib", idf * F.col("f") * (_BM25_K1 + 1) / denom)
+        .groupBy("doc_id")
+        .agg(F.count("*").alias("n_terms"), F.sum("contrib").alias("score"))
+    )
+
+
 @register(
     "bm25_rank_docs",
     sql=f"""
@@ -83,48 +129,9 @@ def bm25_rank_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     orderBy+limit, which Spark executes as TakeOrderedAndProject
     (per-partition partial top-k, bounded merge) — no corpus-sized
     window partition anywhere."""
-    docs = load_table(spark, sf_dir, "documents", spread=True)
-    toks = docs.select("doc_id", F.explode(word_tokens(F.col("text"))).alias("term"))
-    # opt r15 (guide §2.3 "aggregate before you shuffle" / §2.4): dl and
-    # tf previously each re-ran the corpus explode (dl twice more via
-    # stats and the scored join).  ONE explode + ONE per-doc aggregate
-    # now carries dlen AND the per-query-term counts (the query is a
-    # fixed, tiny term list, so the wide aggregate is |query|+1 columns);
-    # tf falls out as a stack over the materialized per-doc row.
-    # Interleaved A/B at sf0.1: 0.73 s vs 1.12 s min-of-5, results
-    # bit-equal.  Bounded at one row per doc.
-    per_doc = (
-        toks.groupBy("doc_id")
-        .agg(
-            F.count("*").alias("dlen"),
-            *[
-                F.sum(F.when(F.col("term") == w, 1).otherwise(0)).alias(f"f{i}")
-                for i, w in enumerate(_BM25_QUERY)
-            ],
-        )
-        .localCheckpoint()
-    )
-    dl = per_doc.select("doc_id", "dlen")
-    stats = dl.agg(F.count("*").alias("n"), F.avg("dlen").alias("avgdl"))
-    _stack = "stack({}, {}) as (term, f)".format(
-        len(_BM25_QUERY), ", ".join(f"'{w}', f{i}" for i, w in enumerate(_BM25_QUERY))
-    )
-    tf = per_doc.selectExpr("doc_id", _stack).where(F.col("f") > 0)
-    dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
-    idf = F.log((F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1)
-    denom = F.col("f") + _BM25_K1 * (
-        1 - _BM25_B + _BM25_B * F.col("dlen") / F.col("avgdl")
-    )
-    scored = (
-        tf.join(F.broadcast(dfreq), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .withColumn("contrib", idf * F.col("f") * (_BM25_K1 + 1) / denom)
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("n_terms"), F.sum("contrib").alias("score"))
-    )
     return (
-        scored.orderBy(F.desc("score"), F.asc("doc_id"))
+        bm25_scores(load_table(spark, sf_dir, "documents", spread=True))
+        .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(_BM25_TOPK)
         .select("doc_id", "n_terms", F.round("score", 4).alias("bm25"))
     )

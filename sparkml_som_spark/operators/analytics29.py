@@ -43,8 +43,8 @@ from sparkml_som_spark.functions import cosine, word_tokens
 from sparkml_som_spark.operators.analytics28 import (
     _BM25_B,
     _BM25_K1,
-    _BM25_QUERY,
     _BM25_TERMS_SQL,
+    bm25_scores,
 )
 from sparkml_som_spark.operators.registry import register
 from sparkml_som_spark.sources import load_table
@@ -492,46 +492,6 @@ _RRF_TOPK = 10
 _RRF_QVEC = 0  # embedding query: vec_id 0 against the rest
 
 
-def _bm25_scores(docs: DataFrame) -> DataFrame:
-    """BM25 scores for the fixed query (shared constants with
-    bm25_rank_docs — same formula, reused here as the lexical leg)."""
-    toks = docs.select("doc_id", F.explode(word_tokens(F.col("text"))).alias("term"))
-    # opt r15: one explode + one per-doc aggregate replaces the separate
-    # dl / tf passes over the corpus explode (same restructure as
-    # bm25_rank_docs — guide §2.3/§2.4; A/B'd there: 0.73 s vs 1.12 s,
-    # bit-equal results).  Bounded at one row per doc.
-    per_doc = (
-        toks.groupBy("doc_id")
-        .agg(
-            F.count("*").alias("dlen"),
-            *[
-                F.sum(F.when(F.col("term") == w, 1).otherwise(0)).alias(f"f{i}")
-                for i, w in enumerate(_BM25_QUERY)
-            ],
-        )
-        .localCheckpoint()
-    )
-    dl = per_doc.select("doc_id", "dlen")
-    stats = dl.agg(F.count("*").alias("n"), F.avg("dlen").alias("avgdl"))
-    _stack = "stack({}, {}) as (term, f)".format(
-        len(_BM25_QUERY), ", ".join(f"'{w}', f{i}" for i, w in enumerate(_BM25_QUERY))
-    )
-    tf = per_doc.selectExpr("doc_id", _stack).where(F.col("f") > 0)
-    dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
-    idf = F.log((F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1)
-    denom = F.col("f") + _BM25_K1 * (
-        1 - _BM25_B + _BM25_B * F.col("dlen") / F.col("avgdl")
-    )
-    return (
-        tf.join(F.broadcast(dfreq), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .withColumn("contrib", idf * F.col("f") * (_BM25_K1 + 1) / denom)
-        .groupBy("doc_id")
-        .agg(F.sum("contrib").alias("score"))
-    )
-
-
 # shared with the round-11 reranker oracle, which wraps this SELECT as
 # its candidate CTE — one definition, two consumers
 _RRF_ORACLE = f"""
@@ -612,7 +572,7 @@ def hybrid_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
     lex_pool = (
-        _bm25_scores(docs).orderBy(F.desc("score"), F.asc("doc_id")).limit(_RRF_POOL)
+        bm25_scores(docs).orderBy(F.desc("score"), F.asc("doc_id")).limit(_RRF_POOL)
     )
     lex = lex_pool.withColumn(
         "r_lex",

@@ -320,6 +320,36 @@ _CMS_DEPTH = 3
 _CMS_WIDTH = 16  # narrow on purpose: forces real collisions at sf0.01
 
 
+def cms_rows(df: DataFrame) -> DataFrame:
+    """``df`` (with a ``tok`` column) once per sketch row ``i``, with the
+    row's md5-derived ``bucket`` for the token."""
+    return df.select(
+        "*", F.explode(F.array(*[F.lit(i) for i in range(_CMS_DEPTH)])).alias("i")
+    ).withColumn(
+        "bucket",
+        F.conv(
+            F.substring(
+                F.md5(F.concat(F.col("i").cast("string"), F.lit(":"), F.col("tok"))),
+                1,
+                15,
+            ),
+            16,
+            10,
+        ).cast("long")
+        % _CMS_WIDTH,
+    )
+
+
+def cms_estimate(rows: DataFrame, cells: DataFrame) -> DataFrame:
+    """Per-token count-min estimate: the smallest of the token's
+    ``(i, bucket)`` cells over the sketch rows of ``cms_rows``."""
+    return (
+        rows.join(F.broadcast(cells), ["i", "bucket"])
+        .groupBy("tok")
+        .agg(F.min("cell").alias("est_cnt"))
+    )
+
+
 @register(
     "countmin_heavy_hitters",
     sql=f"""
@@ -369,29 +399,9 @@ def countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    tb = tc.select(
-        "tok",
-        "cnt",
-        F.explode(F.array(*[F.lit(i) for i in range(_CMS_DEPTH)])).alias("i"),
-    ).withColumn(
-        "bucket",
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.col("i").cast("string"), F.lit(":"), F.col("tok"))),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % _CMS_WIDTH,
-    )
+    tb = cms_rows(tc)
     cells = tb.groupBy("i", "bucket").agg(F.sum("cnt").alias("cell"))
-    est = (
-        tb.join(F.broadcast(cells), ["i", "bucket"])
-        .groupBy("tok")
-        .agg(F.min("cell").alias("est_cnt"))
-    )
+    est = cms_estimate(tb, cells)
     return tc.join(est, "tok").select(
         "tok",
         F.col("cnt").alias("exact_cnt"),

@@ -93,6 +93,25 @@ def _run_to_memory(
     return spark.table(table)
 
 
+def _signup_click_join(
+    spark: SparkSession, sf_dir: str, join: Callable[[DataFrame, DataFrame], DataFrame],
+    tag: str, *, no_data_batch: bool = True,
+) -> DataFrame:
+    """Drain ``join`` over the signup and click halves of two event
+    streams into the append-mode sink ``sgs_<tag>_<sf>``."""
+    from pyspark.sql import functions as F
+
+    s_stream, key = _stream_source(spark, sf_dir)
+    c_stream, _ = _stream_source(spark, sf_dir)
+    out = join(
+        s_stream.where(F.col("event_type") == "signup"),
+        c_stream.where(F.col("event_type") == "click"),
+    )
+    return _run_to_memory(
+        spark, out, f"sgs_{tag}_{key}".replace(".", "_"), "append", no_data_batch=no_data_batch
+    )
+
+
 # The window/join/dedup streaming entries below run as ONE AvailableNow
 # micro-batch over the static snapshot (no rate limit), so their
 # complete/append-mode sink contents are deterministic and equal the
@@ -203,16 +222,8 @@ def stream_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     desc="stream-stream interval join with two-sided watermark state bounds, oracle-audited",
 )
 def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    s_stream, key = _stream_source(spark, sf_dir)
-    c_stream, _ = _stream_source(spark, sf_dir)
-    out = interval_join_stream(
-        s_stream.where(F.col("event_type") == "signup"),
-        c_stream.where(F.col("event_type") == "click"),
-    )
     # an inner join emits on a match; the watermark batch only evicts state
-    return _run_to_memory(spark, out, f"sgs_stream_ijoin_{key}".replace(".", "_"), "append", no_data_batch=False)
+    return _signup_click_join(spark, sf_dir, interval_join_stream, "stream_ijoin", no_data_batch=False)
 
 
 @register(
@@ -248,19 +259,11 @@ def stream_interval_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame
     construction: the shared oracle value-hashes that claim, and
     tests/test_streaming_queries.py pins batch-side `exceptAll`
     equivalence in both directions."""
-    from pyspark.sql import functions as F
-
     from sparkml_som_spark.streaming.windows import interval_join_stream_bucketed
 
-    s_stream, key = _stream_source(spark, sf_dir)
-    c_stream, _ = _stream_source(spark, sf_dir)
-    out = interval_join_stream_bucketed(
-        s_stream.where(F.col("event_type") == "signup"),
-        c_stream.where(F.col("event_type") == "click"),
-    )
     # an inner join emits on a match; the watermark batch only evicts state
-    return _run_to_memory(
-        spark, out, f"sgs_stream_ijoin_bkt_{key}".replace(".", "_"), "append", no_data_batch=False
+    return _signup_click_join(
+        spark, sf_dir, interval_join_stream_bucketed, "stream_ijoin_bkt", no_data_batch=False
     )
 
 
@@ -724,18 +727,8 @@ def stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     trailing batch breaks the value hash.  At 100 TB the same condition
     is what bounds the join state: signups older than watermark +
     window are evicted, matched or not."""
-    from pyspark.sql import functions as F
-
-    from sparkml_som_spark.streaming.windows import interval_join_stream_left
-
-    s_stream, key = _stream_source(spark, sf_dir)
-    c_stream, _ = _stream_source(spark, sf_dir)
-    out = interval_join_stream_left(
-        s_stream.where(F.col("event_type") == "signup"),
-        c_stream.where(F.col("event_type") == "click"),
-    )
-    return _run_to_memory(
-        spark, out, f"sgs_stream_louter_{key}".replace(".", "_"), "append"
+    return _signup_click_join(
+        spark, sf_dir, lambda s, c: interval_join_stream(s, c, how="leftOuter"), "stream_louter"
     )
 
 

@@ -1,5 +1,5 @@
-"""Window functions, time-windowed aggregation (batch analogs of the
-streaming operators), and the as-of join query surface.
+"""Window functions, time-windowed aggregation (the streaming
+definitions run on the static table), and the as-of join query surface.
 
 Every query here shuffles exactly once, on the window partition key —
 the partitioning a 1000-executor run would want.
@@ -13,6 +13,12 @@ from pyspark.sql import functions as F
 from sparkml_som_spark.operators.asof import asof_join_backward
 from sparkml_som_spark.operators.registry import register
 from sparkml_som_spark.sources import load_table
+from sparkml_som_spark.streaming.windows import (
+    interval_join_stream,
+    session_window_stream,
+    sliding_window_stream,
+    tumbling_window_stream,
+)
 
 
 @register(
@@ -99,7 +105,10 @@ def window_rank_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# time windows over the events table (batch analogs of streaming windows)
+# time windows over the events table: each entry runs the streaming
+# definition from `streaming/windows.py` on the static table (a batch plan
+# drops the watermark), so the batch and stream entries share one body
+# and the DuckDB oracle is the independent check on it
 # --------------------------------------------------------------------------
 
 @register(
@@ -117,17 +126,7 @@ def window_rank_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
 def tumbling_window_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F.window is epoch-aligned, so a 1-day tumbling window start equals
     date_trunc('day') under the session's UTC timezone."""
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "1 day").alias("w"), "event_type")
-        .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 4).alias("total_value"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    )
+    return tumbling_window_stream(load_table(spark, sf_dir, "events"))
 
 
 @register(
@@ -146,12 +145,7 @@ def tumbling_window_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     desc="2-day window sliding by 1 day (each event in two windows)",
 )
 def sliding_window_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "2 days", "1 day").alias("w"))
-        .agg(F.count("*").alias("n_events"), F.round(F.avg("value"), 4).alias("avg_value"))
-        .select(F.col("w.start").alias("window_start"), "n_events", "avg_value")
-    )
+    return sliding_window_stream(load_table(spark, sf_dir, "events"))
 
 
 @register(
@@ -185,17 +179,7 @@ def session_window_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark's session_window end is EXCLUSIVE — an exactly-30-minute gap
     starts a new session — so the oracle's gap predicate is `>=`, and
     both windows order by (ts, event_id) for deterministic ties."""
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 4).alias("total_value"))
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            "n_events",
-            "total_value",
-        )
-    )
+    return session_window_stream(load_table(spark, sf_dir, "events"))
 
 
 @register(
@@ -219,25 +203,9 @@ def interval_join_click_after_signup(spark: SparkSession, sf_dir: str) -> DataFr
     post-join filter — the shape that scales, vs a pure range join's
     per-key cross product."""
     ev = load_table(spark, sf_dir, "events")
-    s = ev.where(F.col("event_type") == "signup").select(
-        "user_id", F.col("event_id").alias("signup_id"), F.col("ts").alias("s_ts")
-    )
-    c = ev.where(F.col("event_type") == "click").select(
-        F.col("user_id").alias("c_user"), F.col("event_id").alias("click_id"), F.col("ts").alias("c_ts")
-    )
-    return (
-        s.join(
-            c,
-            (F.col("c_user") == F.col("user_id"))
-            & (F.col("c_ts") >= F.col("s_ts"))
-            & (F.col("c_ts") < F.col("s_ts") + F.expr("INTERVAL 10 MINUTES")),
-        )
-        .select(
-            "user_id",
-            "signup_id",
-            "click_id",
-            (F.unix_timestamp("c_ts") - F.unix_timestamp("s_ts")).alias("secs_after"),
-        )
+    return interval_join_stream(
+        ev.where(F.col("event_type") == "signup"),
+        ev.where(F.col("event_type") == "click"),
     )
 
 

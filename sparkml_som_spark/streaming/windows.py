@@ -1,9 +1,13 @@
 """Structured Streaming windowed aggregations over an events stream.
 
-These are the streaming twins of the batch operators in
-`operators/windows.py` — same window semantics, same output schema, so
-the batch queries double as correctness oracles for the streaming path
-(the strategy SURVEY.md §5 prescribes: batch-window oracle twins).
+Each function here is the ONE definition of its operator: the stream
+entries in `operators/streaming_queries.py` apply it to a file-source
+stream, and the batch entries in `operators/windows.py` apply it to the
+static events table. On a batch plan the optimizer drops the watermark
+(no `EventTimeWatermark` node survives, pinned by
+`tests/test_plans.py`), so sharing the definition costs the batch
+entries nothing. Each entry's DuckDB oracle, written separately in SQL,
+is the independent check on both uses.
 
 Watermarking bounds state: late events older than the watermark are
 dropped and their windows finalized — on a real cluster this is what
@@ -22,7 +26,7 @@ EVENTS_SCHEMA = (
 
 
 def tumbling_window_stream(stream: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """1-day tumbling count/sum per event_type (streaming twin of
+    """1-day tumbling count/sum per event_type (also the body of
     `tumbling_window_events`)."""
     return (
         stream.withWatermark("ts", watermark)
@@ -38,7 +42,7 @@ def tumbling_window_stream(stream: DataFrame, watermark: str = "1 hour") -> Data
 
 
 def sliding_window_stream(stream: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """2-day window sliding by 1 day (streaming twin of
+    """2-day window sliding by 1 day (also the body of
     `sliding_window_events`)."""
     return (
         stream.withWatermark("ts", watermark)
@@ -49,7 +53,7 @@ def sliding_window_stream(stream: DataFrame, watermark: str = "1 hour") -> DataF
 
 
 def session_window_stream(stream: DataFrame, gap: str = "30 minutes", watermark: str = "1 hour") -> DataFrame:
-    """Session windows with a 30-minute gap per user (streaming twin of
+    """Session windows with a 30-minute gap per user (also the body of
     `session_window_events`). Session state merges as events arrive;
     the watermark closes sessions once no in-gap event can still come."""
     return (
@@ -65,26 +69,16 @@ def session_window_stream(stream: DataFrame, gap: str = "30 minutes", watermark:
     )
 
 
-def run_stream_to_memory(stream_df: DataFrame, table_name: str, mode: str = "complete"):
-    """Start a memory-sink query for tests; caller awaits + stops it."""
-    return (
-        stream_df.writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def interval_join_stream(
     signups: DataFrame,
     clicks: DataFrame,
     window: str = "10 minutes",
     watermark: str = "1 hour",
+    how: str = "inner",
 ) -> DataFrame:
-    """Stream-stream inner join: clicks within `window` after a signup
-    (streaming twin of `interval_join_click_after_signup`; same output
-    schema, so the batch query is the oracle).
+    """Stream-stream interval join: clicks within `window` after a
+    signup (the definition `interval_join_click_after_signup` runs on
+    the static table).
 
     Both sides carry watermarks and the join condition bounds event
     time in BOTH directions (c_ts in [s_ts, s_ts + window)), which is
@@ -92,7 +86,16 @@ def interval_join_stream(
     watermark + window can never match a future click and is evicted.
     Without the two-sided bound the join state grows with the whole
     stream — the difference between a runnable and an OOM topology at
-    firehose scale."""
+    firehose scale.
+
+    ``how="leftOuter"`` adds the semantics the inner join can't show: a
+    signup with no click inside `window` must still emit, with nulls,
+    but ONLY once the watermark proves no future click can match (s_ts
+    + window below the global watermark).  Until that proof the row
+    sits in join state; the null row materializes in the micro-batch
+    whose watermark evicts it (Spark runs a trailing zero-data batch
+    under AvailableNow exactly so this eviction happens).  The state
+    bound AND the null-emission rule come from the same condition."""
     s = signups.withWatermark("ts", watermark).select(
         "user_id", F.col("event_id").alias("signup_id"), F.col("ts").alias("s_ts")
     )
@@ -107,6 +110,7 @@ def interval_join_stream(
             (F.col("c_user") == F.col("user_id"))
             & (F.col("c_ts") >= F.col("s_ts"))
             & (F.col("c_ts") < F.col("s_ts") + F.expr(f"INTERVAL {window}")),
+            how,
         )
         .select(
             "user_id",
@@ -130,46 +134,6 @@ def dedup_stream(stream: DataFrame, keys: list[str] | None = None, watermark: st
     """
     keys = keys or ["event_id"]
     return stream.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(keys)
-
-
-def interval_join_stream_left(
-    signups: DataFrame,
-    clicks: DataFrame,
-    window: str = "10 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Stream-stream LEFT OUTER interval join — the semantics the inner
-    join can't show: a signup with no click inside `window` must still
-    emit, with nulls, but ONLY once the watermark proves no future
-    click can match (s_ts + window below the global watermark).  Until
-    that proof the row sits in join state; the null row materializes in
-    the micro-batch whose watermark evicts it (Spark runs a trailing
-    zero-data batch under AvailableNow exactly so this eviction
-    happens).  Same two-sided time bound as the inner twin — the state
-    bound AND the null-emission rule come from the same condition."""
-    s = signups.withWatermark("ts", watermark).select(
-        "user_id", F.col("event_id").alias("signup_id"), F.col("ts").alias("s_ts")
-    )
-    c = clicks.withWatermark("ts", watermark).select(
-        F.col("user_id").alias("c_user"),
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("c_ts"),
-    )
-    return (
-        s.join(
-            c,
-            (F.col("c_user") == F.col("user_id"))
-            & (F.col("c_ts") >= F.col("s_ts"))
-            & (F.col("c_ts") < F.col("s_ts") + F.expr(f"INTERVAL {window}")),
-            "leftOuter",
-        )
-        .select(
-            "user_id",
-            "signup_id",
-            "click_id",
-            (F.unix_timestamp("c_ts") - F.unix_timestamp("s_ts")).alias("secs_after"),
-        )
-    )
 
 
 def interval_join_stream_bucketed(

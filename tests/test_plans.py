@@ -70,6 +70,24 @@ def test_asof_join_single_shuffle(spark, registry):
     assert "CartesianProduct" not in plan
 
 
+@pytest.mark.parametrize(
+    "name",
+    [
+        "tumbling_window_events",
+        "sliding_window_events",
+        "session_window_events",
+        "interval_join_click_after_signup",
+    ],
+)
+def test_batch_window_entry_drops_watermark(spark, registry, name):
+    """These batch entries run the watermarked streaming definitions on
+    the static table; the optimizer must drop the watermark, so sharing
+    the definition leaves the batch plan as it was."""
+    df = registry[name].fn(spark, SF)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "EventTimeWatermark" not in plan, plan
+
+
 def test_whole_stage_codegen_in_hot_paths(spark, registry):
     from sparkml_som_spark.plans import has_codegen
 

@@ -3,13 +3,13 @@ query over the same files is the oracle (SURVEY.md §5)."""
 
 import pytest
 
+from sparkml_som_spark.operators.streaming_queries import _run_to_memory
 from sparkml_som_spark.sources import load_table
 from sparkml_som_spark.streaming import (
     session_window_stream,
     sliding_window_stream,
     tumbling_window_stream,
 )
-from sparkml_som_spark.streaming.windows import run_stream_to_memory
 
 SF = "/root/testdata/sf0.001"
 
@@ -25,20 +25,13 @@ def event_stream(spark, tmp_path_factory):
     return stream, batch
 
 
-def _run_and_fetch(spark, stream_df, name):
-    q = run_stream_to_memory(stream_df, name)
-    q.awaitTermination(120)
-    q.stop()
-    return spark.sql(f"SELECT * FROM {name}")
-
-
 def _as_sets(df):
     return {tuple(r) for r in df.collect()}
 
 
 def test_tumbling_stream_matches_batch(spark, event_stream):
     stream, batch = event_stream
-    got = _run_and_fetch(spark, tumbling_window_stream(stream), "t_tumbling")
+    got = _run_to_memory(spark, tumbling_window_stream(stream), "t_tumbling", "complete")
     # batch twin: same transformation on the batch frame (watermark is a
     # no-op in batch mode)
     import pyspark.sql.functions as F
@@ -53,7 +46,7 @@ def test_tumbling_stream_matches_batch(spark, event_stream):
 
 def test_session_stream_matches_batch(spark, event_stream):
     stream, batch = event_stream
-    got = _run_and_fetch(spark, session_window_stream(stream), "t_session")
+    got = _run_to_memory(spark, session_window_stream(stream), "t_session", "complete")
     import pyspark.sql.functions as F
 
     want = (
@@ -66,7 +59,7 @@ def test_session_stream_matches_batch(spark, event_stream):
 
 def test_sliding_stream_matches_batch(spark, event_stream):
     stream, batch = event_stream
-    got = _run_and_fetch(spark, sliding_window_stream(stream), "t_sliding")
+    got = _run_to_memory(spark, sliding_window_stream(stream), "t_sliding", "complete")
     import pyspark.sql.functions as F
 
     want = (
@@ -95,9 +88,7 @@ def test_stream_dedup_drops_replayed_batch(spark, tmp_path):
     assert batch.count() == 2 * n_unique  # precondition: duplicates exist
     stream = spark.readStream.schema(batch.schema).parquet(src)
 
-    q = run_stream_to_memory(dedup_stream(stream), "t_dedup", mode="append")
-    q.awaitTermination(120)
-    q.stop()
+    _run_to_memory(spark, dedup_stream(stream), "t_dedup", "append")
     got = spark.sql("SELECT event_id, COUNT(*) AS n FROM t_dedup GROUP BY event_id")
     assert got.count() == n_unique
     assert got.agg(F.max("n")).first()[0] == 1
@@ -109,17 +100,14 @@ def test_interval_join_stream_matches_batch(spark, event_stream):
     files (append mode: every matched pair is emitted exactly once)."""
     import pyspark.sql.functions as F
 
-    from sparkml_som_spark.streaming.windows import interval_join_stream, run_stream_to_memory
+    from sparkml_som_spark.streaming.windows import interval_join_stream
 
     stream, batch = event_stream
     out = interval_join_stream(
         stream.where(F.col("event_type") == "signup"),
         stream.where(F.col("event_type") == "click"),
     )
-    q = run_stream_to_memory(out, "t_ijoin", mode="append")
-    q.awaitTermination(120)
-    q.stop()
-    got = spark.sql("SELECT * FROM t_ijoin")
+    got = _run_to_memory(spark, out, "t_ijoin", "append")
 
     s = batch.where(F.col("event_type") == "signup").select(
         "user_id", F.col("event_id").alias("signup_id"), F.col("ts").alias("s_ts")
@@ -154,7 +142,6 @@ def test_bucketed_interval_join_equivalent_to_textbook(spark, event_stream):
     from sparkml_som_spark.streaming.windows import (
         interval_join_stream,
         interval_join_stream_bucketed,
-        run_stream_to_memory,
     )
 
     stream, _batch = event_stream
@@ -166,12 +153,8 @@ def test_bucketed_interval_join_equivalent_to_textbook(spark, event_stream):
         stream.where(F.col("event_type") == "signup"),
         stream.where(F.col("event_type") == "click"),
     )
-    for out, name in ((plain, "t_ijoin_plain"), (bucketed, "t_ijoin_bkt")):
-        q = run_stream_to_memory(out, name, mode="append")
-        q.awaitTermination(120)
-        q.stop()
-    got_plain = spark.sql("SELECT * FROM t_ijoin_plain")
-    got_bkt = spark.sql("SELECT * FROM t_ijoin_bkt")
+    got_plain = _run_to_memory(spark, plain, "t_ijoin_plain", "append")
+    got_bkt = _run_to_memory(spark, bucketed, "t_ijoin_bkt", "append")
     assert got_plain.count() > 0
     assert got_bkt.exceptAll(got_plain).count() == 0
     assert got_plain.exceptAll(got_bkt).count() == 0
